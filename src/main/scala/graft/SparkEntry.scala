@@ -2,9 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.multimodal.MultimodalOps
 import graft.queries.{DataOps, ExtractOps, RefOps, Relational}
+import graft.streaming.StreamingMonitors
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The graded-query contract — see SURVEY.md §7.
   *
   * Every entry in [[queries]] has a DuckDB-equivalent in [[oracleSql]] with
   * IDENTICAL output column names; the driver hash-compares both results on
@@ -15,390 +17,6 @@ object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     Relational.q3ShippingPriority(spark, "/root/testdata/sf0.001")
-
-  /** Graded entries whose FIRST call per (session, corpus) builds and
-    * persists a storage fixture (a written parquet store memoized by
-    * path) that every later call serves from. Bench prices that
-    * bootstrap separately (a throwaway warm-up sample at the target SF,
-    * reported as `fixture_bootstrap_sec`) so scale ratios measure the
-    * SERVE path — pairing one side's cold store-build against the other
-    * side's warm serve graded `index_compaction` at a fictitious 180×
-    * in r16 (verdict #2). Frame-level memos (substring/daily families)
-    * are NOT listed: their first-call cost is a query-shaped compute,
-    * not a storage build, and the families share it by design.
-    */
-  val memoizedFixtureQueries: Set[String] =
-    Set("time_travel", "csv_quarantine", "cluster_from_index",
-      "index_compaction",
-      // r18: streaming-monitor replay states (drain priced as bootstrap,
-      // timed samples measure the serve-from-state path)
-      "lang_confusion_stream", "hourly_profile_stream",
-      // r19: the anomaly + drift/trend monitors' replay states (the
-      // trend trio shares ONE drained daily-cell state)
-      "anomalous_days_stream", "cusum_days_stream", "theil_sen_stream",
-      "mann_kendall_stream",
-      // r20: the sketch monitors' replay states (HLL register warehouse
-      // + quantile-register states; drains priced as bootstrap)
-      "hll_distinct_stream", "hll_sliding_7d_stream",
-      "quantile_sketch_stream", "weighted_quantile_stream")
-
-  /** One entry per implemented operator from SURVEY.md §2 (+ general
-    * relational surface). Keys are stable operator ids.
-    */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // Reference-semantic operators (SURVEY.md §2) on `events`.
-    "topn" -> (RefOps.topn _),
-    "watermark_max" -> (RefOps.watermarkMax _),
-    "incremental_filter" -> (RefOps.incrementalFilter _),
-    "dedup_keep_latest" -> (RefOps.dedupKeepLatest _),
-    "union_sources" -> (RefOps.unionSources _),
-    "md5_id" -> (RefOps.md5Id _),
-    "parse_date_multi" -> (RefOps.parseDateMulti _),
-    "drop_tz" -> (RefOps.dropTz _),
-    "author_clean" -> (RefOps.authorClean _),
-    "split_extract" -> (RefOps.splitExtract _),
-    "upsert_merge" -> (RefOps.upsertMerge _),
-    // r16: N30's graded face — versioned-store reads at two snapshots
-    "time_travel" -> (RefOps.timeTravelGraded _),
-    "null_filters" -> (RefOps.nullFilters _),
-    "ingest_run" -> (RefOps.ingestRun _),
-    "asof_join" -> (RefOps.asofJoin _),
-    "asof_join_forward" -> (RefOps.asofJoinForward _),
-    "range_join" -> (RefOps.rangeJoin _),
-    "jsonl_parse" -> (RefOps.jsonlParse _),
-    // r15: the CSV malformed-row contract graded end-to-end (N80)
-    "csv_quarantine" -> (RefOps.csvQuarantine _),
-    "data_expectations" -> (RefOps.dataExpectations _),
-    "approx_distinct_kmv" -> (RefOps.approxDistinctKmv _),
-    "sessionize" -> (RefOps.sessionize _),
-    // General relational surface on the TPC-H-ish tables.
-    "q1_pricing" -> (Relational.q1PricingSummary _),
-    "q3_shipping" -> (Relational.q3ShippingPriority _),
-    "q5_local_supplier" -> (Relational.q5LocalSupplier _),
-    "window_top_customers" -> (Relational.windowTopCustomers _),
-    "anti_join_no_orders" -> (Relational.customersWithoutOrders _),
-    "semi_join_big_parts" -> (Relational.partsWithBigShipments _),
-    "distinct_agg" -> (Relational.distinctAgg _),
-    "rollup_orders" -> (Relational.rollupOrders _),
-    "customer_order_stats" -> (Relational.customerOrderStats _),
-    "pivot_events" -> (Relational.pivotEvents _),
-    "funnel" -> (Relational.funnel _),
-    "retention_cohorts" -> (Relational.retentionCohorts _),
-    "value_outliers" -> (Relational.valueOutliers _),
-    "daily_active" -> (Relational.dailyActive _),
-    "key_skew" -> (Relational.keySkew _),
-    "window_hopping" -> (Relational.windowHopping _),
-    "rolling_active_7d" -> (Relational.rollingActive _),
-    "event_transitions" -> (Relational.eventTransitions _),
-    "salted_join" -> (Relational.saltedJoinHot _),
-    "table_profile" -> (Relational.tableProfile _),
-    "gap_fill" -> (Relational.gapFill _),
-    "islands_coverage" -> (Relational.islandsCoverage _),
-    "cube_events" -> (Relational.cubeEvents _),
-    "props_stats" -> (Relational.propsStats _),
-    "percentiles_by_type" -> (Relational.percentilesByType _),
-    "set_ops_parts" -> (Relational.setOpsParts _),
-    "rolling_revenue_range" -> (Relational.rollingRevenueRange _),
-    // LLM-data-pipeline operators on `documents`/`embeddings` (north star).
-    "dedup_exact" -> (DataOps.dedupExact _),
-    "substring_dedup" -> (DataOps.substringDedup _),
-    "containment_join" -> (DataOps.containmentJoin _),
-    "top_dup_substrings" -> (DataOps.topDupSubstrings _),
-    "substring_dup_fraction" -> (DataOps.substringDupFraction _),
-    "remove_dup_spans" -> (DataOps.removeDupSpans _),
-    "bpe_learn" -> (DataOps.bpeLearn _),
-    "event_trigrams" -> (Relational.eventTrigrams _),
-    "q18_large_orders" -> (Relational.q18LargeOrders _),
-    "part_best_supplier" -> (Relational.partBestSupplier _),
-    // r13b: TPC-H EXISTS/disjunction/anti-join shapes + exact
-    // distributed quantile machinery (weighted median, RFM quartiles)
-    // and MOSS winnowing fingerprints.
-    "q4_priority_late" -> (Relational.q4PriorityLate _),
-    "q14_promo_share" -> (Relational.q14PromoShare _),
-    "q19_bracket_revenue" -> (Relational.q19BracketRevenue _),
-    "q22_idle_balances" -> (Relational.q22IdleBalances _),
-    "weighted_median" -> (Relational.weightedMedian _),
-    "rfm_segments" -> (Relational.rfmSegments _),
-    "winnowing" -> (DataOps.winnowing _),
-    // r13c: the remaining TPC-H shapes — pushdown scan (Q6), conditional
-    // counting (Q12), outer-join distribution (Q13), max-with-ties (Q15),
-    // distinct-count with NOT-IN blacklist (Q16), decorrelated
-    // fifth-of-average (Q17).
-    "q6_forecast_revenue" -> (Relational.q6ForecastRevenue _),
-    "q12_service_by_delay" -> (Relational.q12ServiceByDelay _),
-    "q13_customer_distribution" -> (Relational.q13CustomerDistribution _),
-    "q15_top_supplier" -> (Relational.q15TopSupplier _),
-    "q16_part_supplier_counts" -> (Relational.q16PartSupplierCounts _),
-    "q17_small_quantity" -> (Relational.q17SmallQuantity _),
-    // r13d: the last TPC-H shapes — all 22 now covered: market share
-    // (Q8), product profit (Q9), global-scalar HAVING (Q11), nested-IN
-    // decorrelation (Q20), EXISTS/NOT-EXISTS strict-latest (Q21).
-    "q8_market_share" -> (Relational.q8MarketShare _),
-    "q9_product_profit" -> (Relational.q9ProductProfit _),
-    "q11_important_parts" -> (Relational.q11ImportantParts _),
-    "q20_excess_suppliers" -> (Relational.q20ExcessSuppliers _),
-    "q21_waiting_suppliers" -> (Relational.q21WaitingSuppliers _),
-    // r13e: frontier sketch/eval/retrieval faces — register-level HLL
-    // (oracle-graded, unlike the built-in binding), exact integer
-    // Mann-Whitney AUC, integer-quantized reciprocal-rank fusion.
-    "hll_distinct" -> (RefOps.hllDistinct _),
-    "quantile_sketch" -> (RefOps.quantileSketch _),
-    "weighted_quantile_sketch" -> (RefOps.weightedQuantileSketch _),
-    "quantile_sketch_cube" -> (RefOps.quantileSketchCube _),
-    "quality_auc" -> (DataOps.qualityAuc _),
-    "rrf_fusion" -> (DataOps.rrfFusion _),
-    "substring_spans_keep_one" -> (DataOps.substringSpansKeepOne _),
-    "substring_decontaminate" -> (DataOps.substringDecontaminate _),
-    "split_leakage" -> (DataOps.splitLeakage _),
-    "rendezvous_shards" -> (DataOps.rendezvousShards _),
-    // r13f: the additive sketch-register family completing the r13e HLL
-    // story — Count-Min token counters, Bloom join-pruning audit,
-    // one-permutation-hashing MinHash.
-    "cms_topk_est" -> (DataOps.cmsTopkEst _),
-    "oph_minhash" -> (DataOps.ophMinhash _),
-    "bloom_prune_audit" -> (RefOps.bloomPruneAudit _),
-    // r13g: physical-layout family — Morton zone-map audit on the native
-    // codegen interleave, deterministic universe-sample estimator.
-    "zorder_audit" -> (Relational.zorderAudit _),
-    "hash_sample_est" -> (Relational.hashSampleEst _),
-    // r13h: evaluation/privacy/candidate-generation faces — PR operating
-    // points, l-diversity, sorted-neighborhood dedup, sorted batching,
-    // source-concentration HHI.
-    "pr_curve" -> (DataOps.prCurve _),
-    "l_diversity" -> (DataOps.lDiversity _),
-    "snm_dedup" -> (DataOps.snmDedup _),
-    "bucketed_batching" -> (DataOps.bucketedBatching _),
-    "source_hhi" -> (DataOps.sourceHhi _),
-    // r13i: sketch-warehouse faces — the HLL cube's graded merge law,
-    // AMS join-size estimation from CMS registers, FD discovery audit.
-    "hll_sketch_cube" -> (RefOps.hllSketchCube _),
-    "cms_join_est" -> (RefOps.cmsJoinEst _),
-    "fd_audit" -> (Relational.fdAudit _),
-    // r13j: graph BFS over the shared host graph; Theil-Sen robust trend.
-    "bfs_hosts" -> (DataOps.bfsHosts _),
-    "theil_sen" -> (Relational.theilSen _),
-    "cusum_days" -> (Relational.cusumDays _),
-    "mann_kendall" -> (Relational.mannKendall _),
-    "equi_depth_hist" -> (Relational.equiDepthHist _),
-    "benford_audit" -> (Relational.benfordAudit _),
-    "jaccard_days" -> (Relational.jaccardDays _),
-    "ks_test" -> (DataOps.ksTest _),
-    "host_triangles" -> (DataOps.hostTriangles _),
-    "hll_sliding_7d" -> (RefOps.hllSliding _),
-    "type_cosine" -> (Relational.typeCosine _),
-    "l_moments" -> (Relational.lMoments _),
-    "ks_matrix" -> (DataOps.ksMatrix _),
-    "session_funnel" -> (RefOps.sessionFunnel _),
-    "revenue_lorenz" -> (Relational.revenueLorenz _),
-    "minhash_estimate" -> (DataOps.minhashEstimate _),
-    // r13q: mergeable bitmap exact-distinct, t-closeness privacy audit,
-    // seasonal-naive forecast backtest, exact dyadic EWMA smoothing.
-    "bitmap_distinct" -> (Relational.bitmapDistinct _),
-    "t_closeness" -> (DataOps.tCloseness _),
-    "forecast_backtest" -> (Relational.forecastBacktest _),
-    "ewma_daily" -> (Relational.ewmaDaily _),
-    // r13r: the correlation family — host-graph degree assortativity
-    // (exact integer, no sqrt by symmetry), Spearman quality-vs-length
-    // (exact ranks, IEEE-pinned final ratio), lagged view→purchase
-    // cross-correlation.
-    "degree_assortativity" -> (DataOps.degreeAssortativity _),
-    "spearman_rank" -> (DataOps.spearmanRank _),
-    "xcorr_daily" -> (Relational.xcorrDaily _),
-    // r13s: the distributed half of PCA (exact integer moment matrix;
-    // the Jacobi projection is its spec-bounded consumer) and the
-    // graded integer face of the Stupid-Backoff LM gate.
-    "embedding_moments" -> (DataOps.embeddingMoments _),
-    "sb_doc_score" -> (DataOps.sbDocScore _),
-    // r13t: the hypothesis-test family — chi-squared independence on
-    // the zero-filled contingency grid, exact balanced one-way ANOVA,
-    // tie-corrected Kendall tau-b.
-    "chi2_independence" -> (DataOps.chi2Independence _),
-    "anova_types" -> (Relational.anovaTypes _),
-    "kruskal_wallis" -> (Relational.kruskalWallis _),
-    "friedman_test" -> (Relational.friedmanTest _),
-    "kendall_tau" -> (Relational.kendallTau _),
-    "source_gini" -> (DataOps.sourceGini _),
-    "rank_sum" -> (DataOps.rankSumLengths _),
-    "kn_continuation" -> (DataOps.knContinuation _),
-    "exact_allocation" -> (DataOps.exactAllocation _),
-    // r15: temperature-mixture allocation, integer-graded (N246)
-    "temperature_allocation" -> (DataOps.temperatureAllocation _),
-    // r13l: the second stateless router (consistent-hash ring) and the
-    // integer ±1 random projection over the quantized embeddings.
-    "ring_shards" -> (DataOps.ringShards _),
-    "rand_projection" -> (DataOps.randProjection _),
-    "edit_distance_block" -> (DataOps.editDistanceBlock _),
-    "k_anonymity" -> (DataOps.kAnonymity _),
-    "corpus_manifest" -> (DataOps.corpusManifest _),
-    "corpus_drift" -> (DataOps.corpusDrift _),
-    "training_set" -> (DataOps.trainingSet _),
-    "dedup_minhash_lsh" -> (DataOps.dedupMinhashLsh _),
-    "dedup_incremental" -> (DataOps.dedupIncremental _),
-    "ngram_jaccard" -> (DataOps.ngramJaccard _),
-    "dedup_simhash" -> (DataOps.dedupSimhash _),
-    "doc_fingerprint" -> (DataOps.docFingerprint _),
-    "doc_text_stats" -> (DataOps.docTextStats _),
-    "normalize_text" -> (DataOps.normalizeText _),
-    "dedup_normalized" -> (DataOps.dedupNormalized _),
-    "lang_id" -> (DataOps.langId _),
-    "doc_quality" -> (DataOps.docQuality _),
-    "token_counts" -> (DataOps.tokenCounts _),
-    "bpe_pair_counts" -> (DataOps.bpePairCounts _),
-    "doc_repetition" -> (DataOps.docRepetition _),
-    "dedup_paragraphs" -> (DataOps.dedupParagraphs _),
-    "doc_rarity" -> (DataOps.docRarity _),
-    "hash_embed" -> (DataOps.hashEmbed _),
-    "dup_windows" -> (DataOps.dupWindows _),
-    "dedup_spans" -> (DataOps.dedupSpans _),
-    "url_canonical" -> (DataOps.urlCanonical _),
-    "domain_stats" -> (DataOps.domainStats _),
-    "host_rank" -> (DataOps.hostRank _),
-    "host_cap_ranked" -> (DataOps.hostCapRanked _),
-    "dedup_url" -> (DataOps.dedupUrl _),
-    "clean_corpus" -> (DataOps.cleanCorpus _),
-    "host_cap" -> (DataOps.hostCap _),
-    "mixture_select" -> (DataOps.mixtureSelect _),
-    // r15: DoReMi mixture reweighting over the SB loss signal (N245)
-    "doremi_mixture" -> (DataOps.doremiMixture _),
-    "dsir_counts" -> (DataOps.dsirCounts _),
-    "sb_ngram_counts" -> (DataOps.sbNgramCounts _),
-    "stats_merge" -> (DataOps.statsMerge _),
-    "corpus_diff" -> (DataOps.corpusDiff _),
-    "corpus_overlap" -> (DataOps.corpusOverlap _),
-    "classifier_infer" -> (DataOps.classifierInfer _),
-    "simhash_recall" -> (DataOps.simhashRecall _),
-    "cluster_sizes" -> (DataOps.clusterSizes _),
-    "chunk_cdc" -> (DataOps.chunkCdc _),
-    "chunk_reuse" -> (DataOps.chunkReuse _),
-    "corpus_report" -> (DataOps.corpusReport _),
-    "ann_cosine_topk" -> (DataOps.annCosineTopk _),
-    "ann_lsh_bucket" -> (DataOps.annLshBucket _),
-    // r16: N61's graded face — IVF probe + in-list cosine rank
-    "ann_ivf" -> (DataOps.annIvfGraded _),
-    // r17: the PQ/ADC two-stage search graded end to end (r16 verdict
-    // #7) — shortlist by order-pinned ADC sums over the pq_codes
-    // quantizer, exact re-rank on full vectors, round after rank
-    "ann_pq" -> ((s: SparkSession, d: String) => DataOps.annPq(s, d)),
-    // r17: N249 — the derandomized weighted draw consuming soft_dedup
-    "soft_dedup_sample" -> (DataOps.softDedupSample _),
-    // Integer faces of the quantizer family (r11: codes are exact ints,
-    // only float reconstructions stay spec-bounded).
-    "int8_codes" -> (DataOps.quantizeCodes _),
-    "kmeans_assign" -> (DataOps.kmeansAssignments _),
-    // r15: N57's integer face — per-cluster representative ranks
-    "diversity_sample" -> (DataOps.diversitySampleCodes _),
-    "pq_codes" -> (DataOps.pqCodes _),
-    "dedup_embedding" -> (DataOps.dedupEmbedding _),
-    "redact_pii" -> (DataOps.redactPii _),
-    "corpus_select" -> (DataOps.corpusSelect _),
-    // Dataset-assembly operators: sampling, splits, packing, decontamination.
-    "stratified_sample" -> (DataOps.stratifiedSample _),
-    "priority_sample" -> (DataOps.prioritySample _),
-    "dedup_cluster" -> (DataOps.dedupCluster _),
-    // r16: soft dedup — downweight by near-dup cluster size (N248)
-    "soft_dedup" -> (DataOps.softDedupWeights _),
-    // r16: CCNet terciles off the graded SB likelihood (N247)
-    "ccnet_buckets" -> (DataOps.ccnetBuckets _),
-    // r15: N50's graded face — clustering from the persisted index
-    "cluster_from_index" -> (DataOps.clusterFromIndexGraded _),
-    // r16: N56's graded face — post-compaction index state + generation
-    "index_compaction" -> (DataOps.indexCompactionGraded _),
-    "dedup_cluster_star" -> (DataOps.dedupClusterStar _),
-    "cluster_keep_best" -> (DataOps.clusterKeepBest _),
-    "chunk_documents" -> (DataOps.chunkDocuments _),
-    "lsh_recall" -> (DataOps.lshRecall _),
-    "keyword_search" -> (DataOps.keywordSearch _),
-    "inverted_index" -> (DataOps.invertedIndex _),
-    "topk_frequent" -> (DataOps.topkFrequent _),
-    "topk_per_key" -> (DataOps.topkPerKey _),
-    "split_assign" -> (DataOps.splitAssign _),
-    "pack_sequences" -> (DataOps.packSequences _),
-    "decontaminate" -> (DataOps.decontaminate _),
-    // r11: curation additions — rule gate, contamination fraction,
-    // deterministic epoch shuffle, token-budget cut, TF-IDF top terms.
-    "gopher_gates" -> (DataOps.gopherGates _),
-    "contamination_score" -> (DataOps.contaminationScore _),
-    "epoch_shuffle" -> (DataOps.epochShuffle _),
-    "token_budget_select" -> (DataOps.tokenBudgetSelect _),
-    "tfidf_topterms" -> (DataOps.tfidfTopTerms _),
-    // r11: the recall monitor's 100 TB binding graded at the pinned
-    // default sample (cost ÷ denom² on the quadratic truth side).
-    "lsh_recall_sampled" -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
-      DataOps.lshRecallSampled(s, d)),
-    "curriculum_order" -> (DataOps.curriculumOrder _),
-    "ngram_novelty" -> (DataOps.ngramNovelty _),
-    "tokenizer_fertility" -> (DataOps.tokenizerFertility _),
-    "quality_calibration" -> (DataOps.qualityCalibration _),
-    "minhash_containment" -> (DataOps.minhashContainment _),
-    "window_cooccurrence" -> (DataOps.windowCooccurrence _),
-    "simhash_recall_sampled" -> ((s: org.apache.spark.sql.SparkSession, d: String) =>
-      DataOps.simhashRecallSampled(s, d)),
-    // r11b: corpus analytics — phrase search, vocabulary growth, Zipf
-    // head coverage, n-gram diversity, blocklist gate, template prefix,
-    // source-vocabulary Jaccard, and the sweep-line concurrency peak.
-    "phrase_search" -> (DataOps.phraseSearch _),
-    "vocab_growth" -> (DataOps.vocabGrowth _),
-    "zipf_coverage" -> (DataOps.zipfCoverage _),
-    "ngram_diversity" -> (DataOps.ngramDiversity _),
-    "blocklist_filter" -> (DataOps.blocklistFilter _),
-    "boilerplate_prefix" -> (DataOps.boilerplatePrefix _),
-    "source_vocab_jaccard" -> (DataOps.sourceVocabJaccard _),
-    "concurrency_peak" -> (Relational.concurrencyPeak _),
-    "scd2_intervals" -> (Relational.scd2Intervals _),
-    "next_token_topk" -> (DataOps.nextTokenTopk _),
-    "tfidf_topk" -> (DataOps.tfidfTopk _),
-    "token_triangles" -> (DataOps.tokenTriangles _),
-    "quality_deciles" -> (DataOps.qualityDeciles _),
-    "attribution_last_touch" -> (Relational.attributionLastTouch _),
-    "length_percentiles" -> (DataOps.lengthPercentiles _),
-    "embedding_centroids" -> (DataOps.embeddingCentroids _),
-    // r12: TPC-H Q7/Q10 join shapes, robust statistics (trimmed mean,
-    // MAD outliers, rational trend slope), cadence analytics (gap
-    // percentiles, adaptive sessionize), and corpus-health analytics
-    // (Pareto skyline, lang-ID confusion, near-dup degree histogram).
-    "q7_nation_flows" -> (Relational.q7NationFlows _),
-    "q10_returned" -> (Relational.q10Returned _),
-    "trimmed_stats" -> (Relational.trimmedStats _),
-    "trend_slope" -> (Relational.trendSlope _),
-    "interevent_gaps" -> (Relational.intereventGaps _),
-    "adaptive_sessionize" -> (Relational.adaptiveSessionize _),
-    "pareto_front" -> (DataOps.paretoFront _),
-    "lang_confusion" -> (DataOps.langConfusion _),
-    // r18 (r17 verdict #5): the monitors' GRADED streaming faces — full
-    // corpus replay through the maintain half (memoized fixture), serve
-    // from state via the shared derive half; oracle = batch SQL verbatim
-    "lang_confusion_stream" ->
-      (graft.streaming.StreamingMonitors.langConfusionStream _),
-    "hourly_profile_stream" ->
-      (graft.streaming.StreamingMonitors.hourlyProfileStream _),
-    // r19: the remaining monitor faces — anomaly detection plus the
-    // drift/trend trio served from one shared replayed daily-cell state
-    "anomalous_days_stream" ->
-      (graft.streaming.StreamingMonitors.anomalousDaysStream _),
-    "cusum_days_stream" ->
-      (graft.streaming.StreamingMonitors.cusumDaysStream _),
-    "theil_sen_stream" ->
-      (graft.streaming.StreamingMonitors.theilSenStream _),
-    "mann_kendall_stream" ->
-      (graft.streaming.StreamingMonitors.mannKendallStream _),
-    "dup_degree_hist" -> (DataOps.dupDegreeHist _),
-    "mad_outliers" -> (DataOps.madOutliers _),
-    "basket_affinity" -> (Relational.basketAffinity _),
-    "conversion_latency" -> (Relational.conversionLatency _),
-    "hourly_profile" -> (Relational.hourlyProfile _),
-    "lang_source_lift" -> (DataOps.langSourceLift _),
-    "kmv_union_est" -> (RefOps.kmvUnionEst _),
-    "order_gaps" -> (Relational.orderGaps _),
-    "grouping_sets_events" -> (Relational.groupingSetsEvents _),
-    "attribution_first_touch" -> (Relational.attributionFirstTouch _),
-    "session_stats" -> (RefOps.sessionStats _),
-    "anomalous_days" -> (Relational.anomalousDays _),
-    // HTML extraction layer (P1-P7) on synthesized two-site listing pages.
-    "html_extract" -> (ExtractOps.htmlExtract _),
-    // Multimodal BINARY-column plumbing (decode is a documented stub).
-    "multimodal_meta" -> (graft.multimodal.MultimodalOps.multimodalMeta _),
-    "frame_sample" -> (graft.multimodal.MultimodalOps.frameSample _),
-  ) ++ r20StreamFaces.map { case (k, (fn, _)) => k -> fn }
 
   /** The md5-hex → 60-bit BIGINT hash fraction numerator shared by the
     * KMV oracles (approx_distinct_kmv, kmv_union_est) — factored so the
@@ -472,252 +90,15 @@ object SparkEntry {
               attributed
        FROM p"""
 
-  /** DuckDB oracle for each query (same column names, same values). */
-  private def batchOracleSql: Map[String, String] = Map(
-    "topn" ->
-      """SELECT event_id, user_id, event_type, value,
-         strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-         FROM events ORDER BY ts DESC, event_id LIMIT 10""",
-    "watermark_max" ->
-      """SELECT coalesce(strftime(date_trunc('day', max(ts)), '%Y-%m-%dT%H:%M:%S'),
-                         '2025-07-25T00:00:00') AS watermark,
-                max(ts) IS NOT NULL AS is_incremental
-         FROM events""",
-    "incremental_filter" ->
-      """SELECT event_id, user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-         FROM events WHERE ts >= TIMESTAMP '2024-01-25 00:00:00'""",
-    "dedup_keep_latest" ->
-      """SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-         FROM (SELECT user_id, event_id, ts,
-                      row_number() OVER (PARTITION BY user_id
-                                         ORDER BY ts DESC, event_id DESC) AS rn
-               FROM events) WHERE rn = 1""",
-    "union_sources" ->
-      """SELECT event_id, 'src_click' AS source_name FROM events
-         WHERE event_type = 'click'
-         UNION ALL
-         SELECT event_id, 'src_purchase' AS source_name FROM events
-         WHERE event_type = 'purchase'""",
-    "md5_id" ->
-      """SELECT event_id,
-                md5('https://example.com/article/' || CAST(event_id AS VARCHAR))
-                  AS article_id
-         FROM events""",
-    "parse_date_multi" ->
-      """SELECT event_id,
-                strftime(try_strptime(strftime(ts, '%B %-d, %Y'), '%B %d, %Y'),
-                         '%Y-%m-%d %H:%M:%S') AS phocus_parsed,
-                strftime(try_strptime(strftime(ts, '%Y-%m-%dT%H:%M:%S'),
-                                      '%Y-%m-%dT%H:%M:%S'),
-                         '%Y-%m-%d %H:%M:%S') AS iso_parsed,
-                try_strptime('garbage', '%Y-%m-%d') IS NULL AS garbage_is_null
-         FROM events""",
-    "drop_tz" ->
-      """SELECT event_id,
-                strftime(try_strptime(
-                  regexp_replace(strftime(ts, '%Y-%m-%dT%H:%M:%S')
-                    || CASE WHEN event_id % 2 = 0 THEN '+05:00' ELSE 'Z' END,
-                    '([+-]\d{2}:?\d{2}|Z)$', ''),
-                  '%Y-%m-%dT%H:%M:%S'),
-                '%Y-%m-%d %H:%M:%S') AS naive
-         FROM events""",
-    "author_clean" ->
-      """SELECT event_id,
-                regexp_replace('By User' || CAST(user_id AS VARCHAR), '^By ', '')
-                  AS author
-         FROM events""",
-    "split_extract" ->
-      """SELECT event_id,
-                trim(split_part('By User' || CAST(user_id AS VARCHAR) || ' | '
-                                || strftime(ts, '%B %-d, %Y'), '|', 2))
-                  AS byline_date
-         FROM events""",
-    "upsert_merge" ->
-      """WITH stored AS (
-           SELECT user_id, event_id, ts,
-                  row_number() OVER (PARTITION BY user_id
-                                     ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events WHERE ts < TIMESTAMP '2024-01-15 00:00:00'),
-         batch AS (
-           SELECT user_id, event_id, ts,
-                  row_number() OVER (PARTITION BY user_id
-                                     ORDER BY ts DESC, event_id DESC) AS rn
-           FROM events WHERE ts >= TIMESTAMP '2024-01-15 00:00:00')
-         SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-         FROM stored WHERE rn = 1
-           AND user_id NOT IN (SELECT user_id FROM batch WHERE rn = 1)
-         UNION ALL
-         SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-         FROM batch WHERE rn = 1""",
-    // r16: time travel — both retained versions replayed by the merge
-    // law (v2 = v1 rows the phase-2 batch did not touch, plus phase 2)
-    "time_travel" ->
-      """WITH mk AS (
-           SELECT doc_id,
-                  md5('tt:' || CAST(doc_id AS VARCHAR)) AS article_id,
-                  'https://example.com/tt/' || CAST(doc_id AS VARCHAR)
-                    AS news_link,
-                  CASE WHEN doc_id % 7 = 0 THEN NULL
-                       ELSE 'User ' || CAST(doc_id % 50 AS VARCHAR)
-                  END AS author_name,
-                  strftime(TIMESTAMP '2024-01-01 00:00:00'
-                             + (doc_id % 720) * INTERVAL 1 HOUR,
-                           '%Y-%m-%d %H:%M:%S') AS published_s,
-                  lang AS source_name
-           FROM documents),
-         v1 AS (
-           SELECT article_id, news_link,
-                  'v1 title ' || CAST(doc_id AS VARCHAR) AS news_title,
-                  author_name, published_s, source_name
-           FROM mk WHERE doc_id % 10 < 5),
-         v2 AS (
-           SELECT article_id, news_link,
-                  'v1 title ' || CAST(doc_id AS VARCHAR) AS news_title,
-                  author_name, published_s, source_name
-           FROM mk WHERE doc_id % 10 < 3
-           UNION ALL
-           SELECT article_id, news_link,
-                  'v2 title ' || CAST(doc_id AS VARCHAR) AS news_title,
-                  author_name, published_s, source_name
-           FROM mk WHERE doc_id % 10 BETWEEN 3 AND 7)
-         SELECT 1::BIGINT AS version, * FROM v1
-         UNION ALL
-         SELECT 2::BIGINT AS version, * FROM v2""",
-    "null_filters" ->
-      """SELECT nullif(event_type, 'error') AS et, count(*) AS n
-         FROM events WHERE nullif(event_type, 'error') IS NOT NULL
-         GROUP BY 1""",
-    "ingest_run" ->
-      """WITH stored AS (
-           SELECT * FROM events WHERE ts < TIMESTAMP '2024-01-20 00:00:00'),
-         wm AS (SELECT date_trunc('day', max(ts)) AS wm FROM stored),
-         incoming AS (
-           SELECT e.* FROM events e, wm
-           WHERE e.ts >= TIMESTAMP '2024-01-20 00:00:00' AND e.ts >= wm.wm),
-         batch AS (
-           SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-           FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-                   ORDER BY ts DESC, event_id DESC) AS rn FROM incoming)
-           WHERE rn = 1),
-         stored_latest AS (
-           SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
-           FROM (SELECT *, row_number() OVER (PARTITION BY user_id
-                   ORDER BY ts DESC, event_id DESC) AS rn FROM stored)
-           WHERE rn = 1),
-         merged AS (
-           SELECT * FROM stored_latest
-           WHERE user_id NOT IN (SELECT user_id FROM batch)
-           UNION ALL SELECT * FROM batch)
-         SELECT * FROM merged ORDER BY ts_s DESC, event_id LIMIT 5""",
-    "asof_join" ->
-      """WITH p AS (SELECT user_id, ts, max(event_id) AS p_id FROM events
-                    WHERE event_type = 'purchase' GROUP BY 1, 2),
-         c AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'click')
-         SELECT c.event_id, c.user_id,
-                strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-                p.p_id AS prior_purchase
-         FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts""",
-    "asof_join_forward" ->
-      """WITH p AS (SELECT user_id, ts, max(event_id) AS p_id FROM events
-                    WHERE event_type = 'purchase' GROUP BY 1, 2),
-         c AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'click')
-         SELECT c.event_id, c.user_id,
-                strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-                p.p_id AS next_purchase
-         FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts <= p.ts""",
-    "data_expectations" ->
-      """SELECT 'events_event_id_unique' AS check,
-                (SELECT count(*) FROM (SELECT event_id FROM events
-                  GROUP BY event_id HAVING count(*) > 1))::BIGINT AS violations,
-                (SELECT count(*) FROM (SELECT event_id FROM events
-                  GROUP BY event_id HAVING count(*) > 1)) = 0 AS pass
-         UNION ALL
-         SELECT 'events_ts_not_null',
-                (SELECT count(*) FILTER (ts IS NULL) FROM events)::BIGINT,
-                (SELECT count(*) FILTER (ts IS NULL) FROM events) = 0
-         UNION ALL
-         SELECT 'events_type_in_domain',
-                (SELECT count(*) FILTER (event_type NOT IN
-                  ('click','view','purchase','signup','error')) FROM events)::BIGINT,
-                (SELECT count(*) FILTER (event_type NOT IN
-                  ('click','view','purchase','signup','error')) FROM events) = 0
-         UNION ALL
-         SELECT 'docs_n_chars_consistent',
-                (SELECT count(*) FILTER (n_chars != length(text)) FROM documents)::BIGINT,
-                (SELECT count(*) FILTER (n_chars != length(text)) FROM documents) = 0
-         UNION ALL
-         SELECT 'docs_lang_in_domain',
-                (SELECT count(*) FILTER (lang NOT IN ('de','en','es','fr','zh'))
-                 FROM documents)::BIGINT,
-                (SELECT count(*) FILTER (lang NOT IN ('de','en','es','fr','zh'))
-                 FROM documents) = 0""",
-    "jsonl_parse" ->
-      """WITH raw AS (
-           SELECT event_id,
-                  CASE WHEN event_id % 500 = 0 THEN '{not json'
-                       ELSE '{"user":' || user_id || ',"type":"' || event_type
-                            || '","n":' || (event_id % 1000) || '}' END AS line
-           FROM events),
-         parsed AS (
-           SELECT event_id,
-                  CASE WHEN json_valid(line)
-                       THEN try_cast(json_extract_string(line, '$.user') AS BIGINT) END AS user,
-                  CASE WHEN json_valid(line)
-                       THEN json_extract_string(line, '$.type') END AS type,
-                  CASE WHEN json_valid(line)
-                       THEN try_cast(json_extract_string(line, '$.n') AS BIGINT) END AS n
-           FROM raw)
-         SELECT event_id, user, type, n FROM parsed
-         WHERE n < 500 OR n IS NULL""",
-    // r15: the CSV quarantine contract recomputed from the planting
-    // rule — the oracle never reads the file, so agreement proves the
-    // engine's render → write → PERMISSIVE-parse round trip
-    "csv_quarantine" ->
-      """WITH cls AS (
-           SELECT CASE WHEN event_id % 500 = 0
-                       THEN 'quarantined' ELSE 'clean' END AS kind,
-                  user_id,
-                  CASE WHEN event_id % 500 = 0
-                       THEN length(event_id::VARCHAR || ',noise,'
-                                   || event_type) END AS rl
-           FROM events)
-         SELECT kind, count(*)::BIGINT AS n_rows,
-                coalesce(sum(CASE WHEN kind = 'clean' THEN user_id END),
-                  0)::BIGINT AS user_sum,
-                coalesce(sum(rl), 0)::BIGINT AS raw_chars
-         FROM cls GROUP BY 1""",
-    "range_join" ->
-      """WITH c AS (SELECT user_id, event_id AS c_id, ts FROM events
-                    WHERE event_type = 'click'),
-         p AS (SELECT user_id, event_id AS p_id, ts AS p_ts FROM events
-               WHERE event_type = 'purchase')
-         SELECT c.c_id, c.user_id,
-                strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS c_ts_s,
-                p.p_id, strftime(p_ts, '%Y-%m-%d %H:%M:%S') AS p_ts_s,
-                (epoch_us(c.ts) - epoch_us(p_ts))::BIGINT AS dt_us
-         FROM c JOIN p ON c.user_id = p.user_id
-           AND abs(epoch_us(c.ts) - epoch_us(p_ts)) <= 3600000000""",
-    "approx_distinct_kmv" ->
-      (s"""WITH h AS (SELECT DISTINCT event_type, ($kmvHashSql) / 2.0^60 AS h
-           FROM events),
-         rk AS (SELECT event_type, h,
-                  row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn,
-                  count(*) OVER (PARTITION BY event_type) AS cnt
-                FROM h),
-         kth AS (SELECT event_type,
-                   CASE WHEN cnt < 32 THEN cnt::DOUBLE
-                        ELSE round(31 / h, 2) END AS est_distinct
-                 FROM rk WHERE rn = least(32, cnt)),
-         exact AS (SELECT event_type, count(DISTINCT user_id) AS n_exact
-                   FROM events GROUP BY 1)
-         SELECT exact.event_type, n_exact, est_distinct
-         FROM exact JOIN kth ON exact.event_type = kth.event_type"""),
-    // r13: register-level HLL on the SAME hash definition as the KMV
-    // family; rho is integer bin-length arithmetic, the Σ2^-rho is an
-    // exact BIGINT, and the one float op divides the Scala-computed
-    // constant (interpolated below so both engines parse one IEEE value)
-    "hll_distinct" ->
-      s"""WITH h AS (SELECT event_type, ($kmvHashSql) AS hb FROM events),
+  // Batch oracles that a graded streaming face shares (r18, r17 verdict
+  // #5). A face serves the IDENTICAL derive half over replayed monitor
+  // state, so it grades against its batch entry's SQL verbatim: derive
+  // drift between the two faces hash-mismatches both by construction.
+  // The r20 sketch faces nest the batch SQL in a SUBSET oracle that
+  // projects away only the exact-side fidelity columns, which need raw
+  // rows by definition (validated cross-engine at sf0.01 in r19).
+  private val hllDistinctOracle: String =
+    s"""WITH h AS (SELECT event_type, ($kmvHashSql) AS hb FROM events),
          r AS (SELECT event_type, hb % 256 AS bucket,
                  CASE WHEN hb // 256 = 0 THEN 53
                       ELSE 53 - length(bin(hb // 256)) END AS rho
@@ -735,12 +116,48 @@ object SparkEntry {
                 round(${RefOps.HllAlphaScaled} / e.sum_pow, 2) AS est_raw
          FROM est e JOIN (SELECT event_type,
                 count(DISTINCT user_id)::BIGINT AS n_exact
-              FROM events GROUP BY 1) x USING (event_type)""",
-    // r14: register-level log-histogram quantile sketch — base-2
-    // sub-bucketed registers (HdrHistogram/DDSketch family), integer
-    // bin-length log2, rank recovery from register upper edges, exact
-    // rank value graded alongside as the fidelity line
-    "quantile_sketch" -> s"""
+              FROM events GROUP BY 1) x USING (event_type)"""
+
+  private val hllSlidingOracle: String = s"""
+       WITH h AS (SELECT date_diff('day', DATE '1970-01-01',
+                    ts::DATE)::BIGINT AS d, event_type,
+                    ($kmvHashSql) AS hb FROM events),
+       r AS (SELECT d, event_type, hb % 256 AS bucket,
+               CASE WHEN hb // 256 = 0 THEN 53
+                    ELSE 53 - length(bin(hb // 256)) END AS rho FROM h),
+       daily AS (SELECT d, event_type, bucket, max(rho) AS r
+                 FROM r GROUP BY 1, 2, 3),
+       spine AS (SELECT DISTINCT d FROM h),
+       tgt AS (SELECT t.u AS day, daily.event_type, daily.bucket,
+                 max(daily.r)::BIGINT AS r
+               FROM daily, unnest(range(daily.d, daily.d + 7)) AS t(u)
+               WHERE t.u IN (SELECT d FROM spine)
+               GROUP BY 1, 2, 3),
+       agg AS (SELECT day, event_type, count(*)::BIGINT AS m_used,
+                 sum(1::BIGINT << (53 - r))::BIGINT AS sum_used
+               FROM tgt GROUP BY 1, 2),
+       est AS (SELECT day, event_type, (256 - m_used)::BIGINT AS v_zero,
+                 (sum_used + (256 - m_used) * (1::BIGINT << 53))::BIGINT
+                   AS sum_pow FROM agg),
+       ex AS (SELECT t.u AS day, du.event_type,
+                count(DISTINCT du.user_id)::BIGINT AS n_exact
+              FROM (SELECT DISTINCT date_diff('day', DATE '1970-01-01',
+                      ts::DATE)::BIGINT AS d, event_type, user_id
+                    FROM events) du,
+                unnest(range(du.d, du.d + 7)) AS t(u)
+              WHERE t.u IN (SELECT d FROM spine)
+              GROUP BY 1, 2),
+       est2 AS (SELECT day, event_type, v_zero, sum_pow,
+                  round(${RefOps.HllAlphaScaled} / sum_pow, 2) AS est_raw
+                FROM est)
+       SELECT e.day, e.event_type, e.v_zero, e.sum_pow, e.est_raw,
+              CASE WHEN e.est_raw <= 640.0 AND e.v_zero > 0
+                   THEN round(256.0 * ln(256.0 / e.v_zero), 2)
+                   ELSE e.est_raw END AS est,
+              ex.n_exact
+       FROM est2 e JOIN ex USING (day, event_type)"""
+
+  private val quantileSketchOracle: String = s"""
        WITH cents AS (SELECT l_returnflag AS flag,
               CAST(round(l_extendedprice * 100) AS BIGINT) AS v
             FROM lineitem),
@@ -779,49 +196,9 @@ object SparkEntry {
               ((1000000 * (s.est_hi - e.exact_v)) // e.exact_v)::BIGINT
                 AS err_ppm
        FROM ranks r JOIN sel s ON s.flag = r.flag AND s.q = r.q
-       JOIN ex e ON e.flag = r.flag AND e.q = r.q""",
-    // r14: quantile-register cube — per-(month, flag) registers,
-    // month summed away, derive over the rolled-up frame; the roll-up
-    // must reproduce the direct sketch's estimates (the merge law)
-    "quantile_sketch_cube" -> s"""
-       WITH cents AS (SELECT l_returnflag AS flag,
-              strftime(l_shipdate, '%Y-%m') AS m,
-              CAST(round(l_extendedprice * 100) AS BIGINT) AS v
-            FROM lineitem),
-       lv AS (SELECT flag, m, v, length(bin(v)) - 1 AS level FROM cents),
-       cube AS (SELECT flag, m,
-              greatest(level - ${RefOps.QSketchSubBits}, 0)::BIGINT AS shift,
-              (v >> CAST(greatest(level - ${RefOps.QSketchSubBits}, 0) AS INT))
-                ::BIGINT AS sub,
-              count(*)::BIGINT AS c
-            FROM lv GROUP BY 1, 2, 3, 4),
-       regs AS (SELECT flag, shift, sub, sum(c)::BIGINT AS c
-            FROM cube GROUP BY 1, 2, 3),
-       months AS (SELECT flag, count(DISTINCT m)::BIGINT AS n_months
-            FROM cube GROUP BY 1),
-       tot AS (SELECT flag, sum(c)::BIGINT AS n,
-              count(*)::BIGINT AS n_registers
-            FROM regs GROUP BY 1),
-       ranks AS (SELECT flag, n, n_registers, CAST(u.q AS BIGINT) AS q,
-              ((u.q * n + 99) // 100)::BIGINT AS rank
-            FROM tot CROSS JOIN (SELECT unnest([50, 90, 99]) AS q) u),
-       cum AS (SELECT flag,
-              (sub << CAST(shift AS INT))::BIGINT AS lo,
-              (((sub + 1) << CAST(shift AS INT)) - 1)::BIGINT AS hi,
-              (sum(c) OVER (PARTITION BY flag
-                 ORDER BY (sub << CAST(shift AS INT))))::BIGINT AS cum
-            FROM regs),
-       sel AS (SELECT c.flag, r.q, min_by(c.hi, c.lo)::BIGINT AS est_hi
-            FROM cum c JOIN ranks r USING (flag)
-            WHERE c.cum >= r.rank GROUP BY 1, 2)
-       SELECT r.flag, mo.n_months, r.q, r.n, r.n_registers, r.rank,
-              s.est_hi
-       FROM ranks r JOIN sel s ON s.flag = r.flag AND s.q = r.q
-       JOIN months mo ON mo.flag = r.flag""",
-    // r14: token-weighted quantile sketch — same register algebra with
-    // count generalized to a weight sum; "the median token lives in a
-    // doc of length X", per language
-    "weighted_quantile_sketch" -> s"""
+       JOIN ex e ON e.flag = r.flag AND e.q = r.q"""
+
+  private val weightedQuantileSketchOracle: String = s"""
        WITH vw AS (SELECT lang AS flag, n_chars::BIGINT AS v,
               len(string_split(text, ' '))::BIGINT AS wt
             FROM documents),
@@ -862,11 +239,415 @@ object SparkEntry {
                     THEN (1000000 * (s.est_hi - e.exact_v)) // e.exact_v
                END)::BIGINT AS err_ppm
        FROM ranks r JOIN sel s ON s.flag = r.flag AND s.q = r.q
-       JOIN ex e ON e.flag = r.flag AND e.q = r.q""",
+       JOIN ex e ON e.flag = r.flag AND e.q = r.q"""
+
+  private val hourlyProfileOracle: String =
+    """WITH cells AS (SELECT event_type, hour(ts)::BIGINT AS hr,
+                          count(*)::BIGINT AS n_events
+                        FROM events GROUP BY 1, 2),
+         tot AS (SELECT event_type, sum(n_events)::BIGINT AS n_type
+                 FROM cells GROUP BY 1)
+         SELECT c.event_type, c.hr, c.n_events,
+                ((1000 * c.n_events) // t.n_type)::BIGINT AS share_milli
+         FROM cells c JOIN tot t USING (event_type)"""
+
+  private val anomalousDaysOracle: String =
+    """WITH daily AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d')
+                          AS day, count(*)::BIGINT AS n_events
+                        FROM events GROUP BY 1),
+         n AS (SELECT count(*)::BIGINT AS n_days FROM daily),
+         med AS (SELECT n_events AS med_events FROM
+                   (SELECT n_events,
+                      row_number() OVER (ORDER BY n_events, day) AS rn
+                    FROM daily) r, n
+                 WHERE rn = (n_days + 1) // 2),
+         dev AS (SELECT d.day, d.n_events,
+                   abs(d.n_events - m.med_events)::BIGINT AS deviation
+                 FROM daily d CROSS JOIN med m),
+         mad AS (SELECT deviation AS mad_events FROM
+                   (SELECT deviation,
+                      row_number() OVER (ORDER BY deviation, day) AS rn
+                    FROM dev) r, n
+                 WHERE rn = (n_days + 1) // 2)
+         SELECT dev.day, dev.n_events, dev.deviation,
+                dev.deviation > 3 * mad.mad_events AS is_anomaly
+         FROM dev CROSS JOIN mad"""
+
+  private val cusumDaysOracle: String = """
+       WITH daily AS (SELECT event_type,
+              date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
+              count(*)::BIGINT AS n
+            FROM events GROUP BY 1, 2),
+       mu AS (SELECT event_type,
+                (1000000 * sum(n)) // count(*) AS mu_micro
+              FROM daily GROUP BY 1),
+       s AS (SELECT d.event_type, d.d, d.n,
+               sum(1000000 * d.n - m.mu_micro) OVER (
+                 PARTITION BY d.event_type ORDER BY d.d
+                 ROWS UNBOUNDED PRECEDING)::BIGINT AS s_micro
+             FROM daily d JOIN mu m ON m.event_type = d.event_type)
+       SELECT event_type, d, n, s_micro,
+              row_number() OVER (PARTITION BY event_type
+                ORDER BY abs(s_micro) DESC, d) = 1 AS is_peak
+       FROM s"""
+
+  private val theilSenOracle: String = """
+       WITH daily AS (SELECT event_type,
+              date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
+              count(*)::BIGINT AS n
+            FROM events GROUP BY 1, 2),
+       p AS (SELECT a.event_type,
+               (1000000 * (b.n - a.n)) // (b.d - a.d) AS sm
+             FROM daily a JOIN daily b
+               ON b.event_type = a.event_type AND b.d > a.d),
+       m AS (SELECT event_type, sm AS slope_micro FROM
+               (SELECT *, row_number() OVER (PARTITION BY event_type
+                  ORDER BY sm) AS rn,
+                  count(*) OVER (PARTITION BY event_type) AS cnt FROM p)
+             WHERE rn = (cnt + 1) // 2),
+       ic AS (SELECT d.event_type,
+                (1000000 * d.n - m.slope_micro * d.d) AS b0
+              FROM daily d JOIN m ON m.event_type = d.event_type),
+       icm AS (SELECT event_type, b0 AS intercept_micro FROM
+                 (SELECT *, row_number() OVER (PARTITION BY event_type
+                    ORDER BY b0) AS rn,
+                    count(*) OVER (PARTITION BY event_type) AS cnt FROM ic)
+               WHERE rn = (cnt + 1) // 2),
+       nd AS (SELECT event_type, count(*)::BIGINT AS n_days
+              FROM daily GROUP BY 1)
+       SELECT nd.event_type, nd.n_days,
+              ((nd.n_days * (nd.n_days - 1)) // 2)::BIGINT AS n_pairs,
+              m.slope_micro, icm.intercept_micro
+       FROM nd JOIN m USING (event_type) JOIN icm USING (event_type)"""
+
+  private val mannKendallOracle: String = """
+       WITH daily AS (SELECT event_type,
+              date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
+              count(*)::BIGINT AS n
+            FROM events GROUP BY 1, 2),
+       p AS (SELECT a.event_type,
+               CASE WHEN b.n > a.n THEN 1 WHEN b.n < a.n THEN -1
+                    ELSE 0 END AS sgn
+             FROM daily a JOIN daily b
+               ON b.event_type = a.event_type AND b.d > a.d)
+       SELECT event_type, count(*)::BIGINT AS n_pairs,
+              sum(sgn)::BIGINT AS s_stat,
+              (count(*) FILTER (sgn = 1))::BIGINT AS n_concordant,
+              (count(*) FILTER (sgn = -1))::BIGINT AS n_discordant,
+              (count(*) FILTER (sgn = 0))::BIGINT AS n_tied,
+              CASE WHEN sum(sgn) > 0 THEN 'inc'
+                   WHEN sum(sgn) < 0 THEN 'dec' ELSE 'none' END AS trend
+       FROM p GROUP BY 1"""
+
+  /** Every graded query, one [[QuerySpec]] each: the Spark function
+    * and the DuckDB oracle that must give the same column names and
+    * values. Built once; a name registered twice fails the build.
+    */
+  val registry: Seq[QuerySpec] = QuerySpec.registry(Seq(
+    QuerySpec("topn", RefOps.topn,
+      """SELECT event_id, user_id, event_type, value,
+         strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
+         FROM events ORDER BY ts DESC, event_id LIMIT 10"""),
+    QuerySpec("watermark_max", RefOps.watermarkMax,
+      """SELECT coalesce(strftime(date_trunc('day', max(ts)), '%Y-%m-%dT%H:%M:%S'),
+                         '2025-07-25T00:00:00') AS watermark,
+                max(ts) IS NOT NULL AS is_incremental
+         FROM events"""),
+    QuerySpec("incremental_filter", RefOps.incrementalFilter,
+      """SELECT event_id, user_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
+         FROM events WHERE ts >= TIMESTAMP '2024-01-25 00:00:00'"""),
+    QuerySpec("dedup_keep_latest", RefOps.dedupKeepLatest,
+      """SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
+         FROM (SELECT user_id, event_id, ts,
+                      row_number() OVER (PARTITION BY user_id
+                                         ORDER BY ts DESC, event_id DESC) AS rn
+               FROM events) WHERE rn = 1"""),
+    QuerySpec("union_sources", RefOps.unionSources,
+      """SELECT event_id, 'src_click' AS source_name FROM events
+         WHERE event_type = 'click'
+         UNION ALL
+         SELECT event_id, 'src_purchase' AS source_name FROM events
+         WHERE event_type = 'purchase'"""),
+    QuerySpec("md5_id", RefOps.md5Id,
+      """SELECT event_id,
+                md5('https://example.com/article/' || CAST(event_id AS VARCHAR))
+                  AS article_id
+         FROM events"""),
+    QuerySpec("parse_date_multi", RefOps.parseDateMulti,
+      """SELECT event_id,
+                strftime(try_strptime(strftime(ts, '%B %-d, %Y'), '%B %d, %Y'),
+                         '%Y-%m-%d %H:%M:%S') AS phocus_parsed,
+                strftime(try_strptime(strftime(ts, '%Y-%m-%dT%H:%M:%S'),
+                                      '%Y-%m-%dT%H:%M:%S'),
+                         '%Y-%m-%d %H:%M:%S') AS iso_parsed,
+                try_strptime('garbage', '%Y-%m-%d') IS NULL AS garbage_is_null
+         FROM events"""),
+    QuerySpec("drop_tz", RefOps.dropTz,
+      """SELECT event_id,
+                strftime(try_strptime(
+                  regexp_replace(strftime(ts, '%Y-%m-%dT%H:%M:%S')
+                    || CASE WHEN event_id % 2 = 0 THEN '+05:00' ELSE 'Z' END,
+                    '([+-]\d{2}:?\d{2}|Z)$', ''),
+                  '%Y-%m-%dT%H:%M:%S'),
+                '%Y-%m-%d %H:%M:%S') AS naive
+         FROM events"""),
+    QuerySpec("author_clean", RefOps.authorClean,
+      """SELECT event_id,
+                regexp_replace('By User' || CAST(user_id AS VARCHAR), '^By ', '')
+                  AS author
+         FROM events"""),
+    QuerySpec("split_extract", RefOps.splitExtract,
+      """SELECT event_id,
+                trim(split_part('By User' || CAST(user_id AS VARCHAR) || ' | '
+                                || strftime(ts, '%B %-d, %Y'), '|', 2))
+                  AS byline_date
+         FROM events"""),
+    QuerySpec("upsert_merge", RefOps.upsertMerge,
+      """WITH stored AS (
+           SELECT user_id, event_id, ts,
+                  row_number() OVER (PARTITION BY user_id
+                                     ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events WHERE ts < TIMESTAMP '2024-01-15 00:00:00'),
+         batch AS (
+           SELECT user_id, event_id, ts,
+                  row_number() OVER (PARTITION BY user_id
+                                     ORDER BY ts DESC, event_id DESC) AS rn
+           FROM events WHERE ts >= TIMESTAMP '2024-01-15 00:00:00')
+         SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
+         FROM stored WHERE rn = 1
+           AND user_id NOT IN (SELECT user_id FROM batch WHERE rn = 1)
+         UNION ALL
+         SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
+         FROM batch WHERE rn = 1"""),
+    // r16: time travel — both retained versions replayed by the merge
+    // law (v2 = v1 rows the phase-2 batch did not touch, plus phase 2)
+    QuerySpec("time_travel", RefOps.timeTravelGraded,
+      """WITH mk AS (
+           SELECT doc_id,
+                  md5('tt:' || CAST(doc_id AS VARCHAR)) AS article_id,
+                  'https://example.com/tt/' || CAST(doc_id AS VARCHAR)
+                    AS news_link,
+                  CASE WHEN doc_id % 7 = 0 THEN NULL
+                       ELSE 'User ' || CAST(doc_id % 50 AS VARCHAR)
+                  END AS author_name,
+                  strftime(TIMESTAMP '2024-01-01 00:00:00'
+                             + (doc_id % 720) * INTERVAL 1 HOUR,
+                           '%Y-%m-%d %H:%M:%S') AS published_s,
+                  lang AS source_name
+           FROM documents),
+         v1 AS (
+           SELECT article_id, news_link,
+                  'v1 title ' || CAST(doc_id AS VARCHAR) AS news_title,
+                  author_name, published_s, source_name
+           FROM mk WHERE doc_id % 10 < 5),
+         v2 AS (
+           SELECT article_id, news_link,
+                  'v1 title ' || CAST(doc_id AS VARCHAR) AS news_title,
+                  author_name, published_s, source_name
+           FROM mk WHERE doc_id % 10 < 3
+           UNION ALL
+           SELECT article_id, news_link,
+                  'v2 title ' || CAST(doc_id AS VARCHAR) AS news_title,
+                  author_name, published_s, source_name
+           FROM mk WHERE doc_id % 10 BETWEEN 3 AND 7)
+         SELECT 1::BIGINT AS version, * FROM v1
+         UNION ALL
+         SELECT 2::BIGINT AS version, * FROM v2""", fixture = true),
+    QuerySpec("null_filters", RefOps.nullFilters,
+      """SELECT nullif(event_type, 'error') AS et, count(*) AS n
+         FROM events WHERE nullif(event_type, 'error') IS NOT NULL
+         GROUP BY 1"""),
+    QuerySpec("ingest_run", RefOps.ingestRun,
+      """WITH stored AS (
+           SELECT * FROM events WHERE ts < TIMESTAMP '2024-01-20 00:00:00'),
+         wm AS (SELECT date_trunc('day', max(ts)) AS wm FROM stored),
+         incoming AS (
+           SELECT e.* FROM events e, wm
+           WHERE e.ts >= TIMESTAMP '2024-01-20 00:00:00' AND e.ts >= wm.wm),
+         batch AS (
+           SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
+           FROM (SELECT *, row_number() OVER (PARTITION BY user_id
+                   ORDER BY ts DESC, event_id DESC) AS rn FROM incoming)
+           WHERE rn = 1),
+         stored_latest AS (
+           SELECT user_id, event_id, strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s
+           FROM (SELECT *, row_number() OVER (PARTITION BY user_id
+                   ORDER BY ts DESC, event_id DESC) AS rn FROM stored)
+           WHERE rn = 1),
+         merged AS (
+           SELECT * FROM stored_latest
+           WHERE user_id NOT IN (SELECT user_id FROM batch)
+           UNION ALL SELECT * FROM batch)
+         SELECT * FROM merged ORDER BY ts_s DESC, event_id LIMIT 5"""),
+    QuerySpec("asof_join", RefOps.asofJoin,
+      """WITH p AS (SELECT user_id, ts, max(event_id) AS p_id FROM events
+                    WHERE event_type = 'purchase' GROUP BY 1, 2),
+         c AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'click')
+         SELECT c.event_id, c.user_id,
+                strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
+                p.p_id AS prior_purchase
+         FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts"""),
+    QuerySpec("asof_join_forward", RefOps.asofJoinForward,
+      """WITH p AS (SELECT user_id, ts, max(event_id) AS p_id FROM events
+                    WHERE event_type = 'purchase' GROUP BY 1, 2),
+         c AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'click')
+         SELECT c.event_id, c.user_id,
+                strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
+                p.p_id AS next_purchase
+         FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts <= p.ts"""),
+    QuerySpec("data_expectations", RefOps.dataExpectations,
+      """SELECT 'events_event_id_unique' AS check,
+                (SELECT count(*) FROM (SELECT event_id FROM events
+                  GROUP BY event_id HAVING count(*) > 1))::BIGINT AS violations,
+                (SELECT count(*) FROM (SELECT event_id FROM events
+                  GROUP BY event_id HAVING count(*) > 1)) = 0 AS pass
+         UNION ALL
+         SELECT 'events_ts_not_null',
+                (SELECT count(*) FILTER (ts IS NULL) FROM events)::BIGINT,
+                (SELECT count(*) FILTER (ts IS NULL) FROM events) = 0
+         UNION ALL
+         SELECT 'events_type_in_domain',
+                (SELECT count(*) FILTER (event_type NOT IN
+                  ('click','view','purchase','signup','error')) FROM events)::BIGINT,
+                (SELECT count(*) FILTER (event_type NOT IN
+                  ('click','view','purchase','signup','error')) FROM events) = 0
+         UNION ALL
+         SELECT 'docs_n_chars_consistent',
+                (SELECT count(*) FILTER (n_chars != length(text)) FROM documents)::BIGINT,
+                (SELECT count(*) FILTER (n_chars != length(text)) FROM documents) = 0
+         UNION ALL
+         SELECT 'docs_lang_in_domain',
+                (SELECT count(*) FILTER (lang NOT IN ('de','en','es','fr','zh'))
+                 FROM documents)::BIGINT,
+                (SELECT count(*) FILTER (lang NOT IN ('de','en','es','fr','zh'))
+                 FROM documents) = 0"""),
+    QuerySpec("jsonl_parse", RefOps.jsonlParse,
+      """WITH raw AS (
+           SELECT event_id,
+                  CASE WHEN event_id % 500 = 0 THEN '{not json'
+                       ELSE '{"user":' || user_id || ',"type":"' || event_type
+                            || '","n":' || (event_id % 1000) || '}' END AS line
+           FROM events),
+         parsed AS (
+           SELECT event_id,
+                  CASE WHEN json_valid(line)
+                       THEN try_cast(json_extract_string(line, '$.user') AS BIGINT) END AS user,
+                  CASE WHEN json_valid(line)
+                       THEN json_extract_string(line, '$.type') END AS type,
+                  CASE WHEN json_valid(line)
+                       THEN try_cast(json_extract_string(line, '$.n') AS BIGINT) END AS n
+           FROM raw)
+         SELECT event_id, user, type, n FROM parsed
+         WHERE n < 500 OR n IS NULL"""),
+    // r15: the CSV quarantine contract recomputed from the planting
+    // rule — the oracle never reads the file, so agreement proves the
+    // engine's render → write → PERMISSIVE-parse round trip
+    QuerySpec("csv_quarantine", RefOps.csvQuarantine,
+      """WITH cls AS (
+           SELECT CASE WHEN event_id % 500 = 0
+                       THEN 'quarantined' ELSE 'clean' END AS kind,
+                  user_id,
+                  CASE WHEN event_id % 500 = 0
+                       THEN length(event_id::VARCHAR || ',noise,'
+                                   || event_type) END AS rl
+           FROM events)
+         SELECT kind, count(*)::BIGINT AS n_rows,
+                coalesce(sum(CASE WHEN kind = 'clean' THEN user_id END),
+                  0)::BIGINT AS user_sum,
+                coalesce(sum(rl), 0)::BIGINT AS raw_chars
+         FROM cls GROUP BY 1""", fixture = true),
+    QuerySpec("range_join", RefOps.rangeJoin,
+      """WITH c AS (SELECT user_id, event_id AS c_id, ts FROM events
+                    WHERE event_type = 'click'),
+         p AS (SELECT user_id, event_id AS p_id, ts AS p_ts FROM events
+               WHERE event_type = 'purchase')
+         SELECT c.c_id, c.user_id,
+                strftime(c.ts, '%Y-%m-%d %H:%M:%S') AS c_ts_s,
+                p.p_id, strftime(p_ts, '%Y-%m-%d %H:%M:%S') AS p_ts_s,
+                (epoch_us(c.ts) - epoch_us(p_ts))::BIGINT AS dt_us
+         FROM c JOIN p ON c.user_id = p.user_id
+           AND abs(epoch_us(c.ts) - epoch_us(p_ts)) <= 3600000000"""),
+    QuerySpec("approx_distinct_kmv", RefOps.approxDistinctKmv,
+      (s"""WITH h AS (SELECT DISTINCT event_type, ($kmvHashSql) / 2.0^60 AS h
+           FROM events),
+         rk AS (SELECT event_type, h,
+                  row_number() OVER (PARTITION BY event_type ORDER BY h) AS rn,
+                  count(*) OVER (PARTITION BY event_type) AS cnt
+                FROM h),
+         kth AS (SELECT event_type,
+                   CASE WHEN cnt < 32 THEN cnt::DOUBLE
+                        ELSE round(31 / h, 2) END AS est_distinct
+                 FROM rk WHERE rn = least(32, cnt)),
+         exact AS (SELECT event_type, count(DISTINCT user_id) AS n_exact
+                   FROM events GROUP BY 1)
+         SELECT exact.event_type, n_exact, est_distinct
+         FROM exact JOIN kth ON exact.event_type = kth.event_type""")),
+    // r13: register-level HLL on the SAME hash definition as the KMV
+    // family; rho is integer bin-length arithmetic, the Σ2^-rho is an
+    // exact BIGINT, and the one float op divides the Scala-computed
+    // constant (interpolated below so both engines parse one IEEE value)
+    QuerySpec("hll_distinct", RefOps.hllDistinct, hllDistinctOracle),
+    QuerySpec("hll_distinct_stream", StreamingMonitors.hllDistinctStream,
+      s"SELECT event_type, v_zero, sum_pow, est_raw FROM ($hllDistinctOracle) t",
+      fixture = true),
+    // r14: register-level log-histogram quantile sketch — base-2
+    // sub-bucketed registers (HdrHistogram/DDSketch family), integer
+    // bin-length log2, rank recovery from register upper edges, exact
+    // rank value graded alongside as the fidelity line
+    QuerySpec("quantile_sketch", RefOps.quantileSketch, quantileSketchOracle),
+    QuerySpec("quantile_sketch_stream", StreamingMonitors.quantileSketchStream,
+      s"SELECT flag, q, n, n_registers, rank, est_hi FROM ($quantileSketchOracle) t",
+      fixture = true),
+    // r14: quantile-register cube — per-(month, flag) registers,
+    // month summed away, derive over the rolled-up frame; the roll-up
+    // must reproduce the direct sketch's estimates (the merge law)
+    QuerySpec("quantile_sketch_cube", RefOps.quantileSketchCube, s"""
+       WITH cents AS (SELECT l_returnflag AS flag,
+              strftime(l_shipdate, '%Y-%m') AS m,
+              CAST(round(l_extendedprice * 100) AS BIGINT) AS v
+            FROM lineitem),
+       lv AS (SELECT flag, m, v, length(bin(v)) - 1 AS level FROM cents),
+       cube AS (SELECT flag, m,
+              greatest(level - ${RefOps.QSketchSubBits}, 0)::BIGINT AS shift,
+              (v >> CAST(greatest(level - ${RefOps.QSketchSubBits}, 0) AS INT))
+                ::BIGINT AS sub,
+              count(*)::BIGINT AS c
+            FROM lv GROUP BY 1, 2, 3, 4),
+       regs AS (SELECT flag, shift, sub, sum(c)::BIGINT AS c
+            FROM cube GROUP BY 1, 2, 3),
+       months AS (SELECT flag, count(DISTINCT m)::BIGINT AS n_months
+            FROM cube GROUP BY 1),
+       tot AS (SELECT flag, sum(c)::BIGINT AS n,
+              count(*)::BIGINT AS n_registers
+            FROM regs GROUP BY 1),
+       ranks AS (SELECT flag, n, n_registers, CAST(u.q AS BIGINT) AS q,
+              ((u.q * n + 99) // 100)::BIGINT AS rank
+            FROM tot CROSS JOIN (SELECT unnest([50, 90, 99]) AS q) u),
+       cum AS (SELECT flag,
+              (sub << CAST(shift AS INT))::BIGINT AS lo,
+              (((sub + 1) << CAST(shift AS INT)) - 1)::BIGINT AS hi,
+              (sum(c) OVER (PARTITION BY flag
+                 ORDER BY (sub << CAST(shift AS INT))))::BIGINT AS cum
+            FROM regs),
+       sel AS (SELECT c.flag, r.q, min_by(c.hi, c.lo)::BIGINT AS est_hi
+            FROM cum c JOIN ranks r USING (flag)
+            WHERE c.cum >= r.rank GROUP BY 1, 2)
+       SELECT r.flag, mo.n_months, r.q, r.n, r.n_registers, r.rank,
+              s.est_hi
+       FROM ranks r JOIN sel s ON s.flag = r.flag AND s.q = r.q
+       JOIN months mo ON mo.flag = r.flag"""),
+    // r14: token-weighted quantile sketch — same register algebra with
+    // count generalized to a weight sum; "the median token lives in a
+    // doc of length X", per language
+    QuerySpec("weighted_quantile_sketch", RefOps.weightedQuantileSketch,
+      weightedQuantileSketchOracle),
+    QuerySpec("weighted_quantile_stream", StreamingMonitors.weightedQuantileStream,
+      s"SELECT flag, q, w_total, n_registers, rank, est_hi FROM ($weightedQuantileSketchOracle) t",
+      fixture = true),
     // r13f: register-level Bloom on the KMV/HLL hash dialect — member
     // set = the user_id % 8 blocklist cohort, k=3 positions in m=16384
     // bits; probe counts per event type next to the exact membership
-    "bloom_prune_audit" -> {
+    QuerySpec("bloom_prune_audit", RefOps.bloomPruneAudit, {
       val mpos = (1 to RefOps.BloomHashes).map(j =>
         s"${hex15Sql(s"'bloom:$j:' || user_id::VARCHAR")} % ${RefOps.BloomBits}")
         .mkString(", ")
@@ -886,11 +667,11 @@ object SparkEntry {
                   AS n_member,
                 (SELECT count(*)::BIGINT FROM bits) AS n_bits
          FROM ph GROUP BY 1"""
-    },
+    }),
     // r13g: Morton layout audit — the bit interleave unrolled as integer
     // shift/mask arithmetic (the native expression's exact semantics on
     // 12-bit quantized inputs), 64 z-range tiles, zone maps + box prune
-    "zorder_audit" -> {
+    QuerySpec("zorder_audit", Relational.zorderAudit, {
       val zbits = (0 until 12).flatMap(i => Seq(
         s"((x >> $i) & 1) * ${1L << (2 * i)}",
         s"((y >> $i) & 1) * ${1L << (2 * i + 1)}")).mkString(" + ")
@@ -909,10 +690,10 @@ object SparkEntry {
                 (max(x) < $x1 OR min(x) >= $x2
                  OR max(y) < $y1 OR min(y) >= $y2) AS can_prune
          FROM z GROUP BY 1"""
-    },
+    }),
     // r13g: deterministic 1/16 universe sample (KMV/HLL hash dialect on
     // the event key), x16 extrapolation next to the exact answers
-    "hash_sample_est" -> s"""
+    QuerySpec("hash_sample_est", Relational.hashSampleEst, s"""
        WITH e AS (SELECT event_type,
               CAST(round(value * 100) AS BIGINT) AS cents,
               ${hex15Sql("'samp:' || event_id::VARCHAR")} % 16 = 0 AS in_samp
@@ -923,11 +704,11 @@ object SparkEntry {
               (count(*) FILTER (in_samp) * 16)::BIGINT AS n_est,
               (coalesce(sum(cents) FILTER (in_samp), 0) * 16)::BIGINT
                 AS cents_est
-       FROM e GROUP BY 1""",
+       FROM e GROUP BY 1"""),
     // r13i: the HLL cube — per-(day, type) registers max-merged across
     // days; associativity makes this equal the direct sketch, and the
     // oracle recomputes the partitioned path from scratch
-    "hll_sketch_cube" ->
+    QuerySpec("hll_sketch_cube", RefOps.hllSketchCube,
       s"""WITH h AS (SELECT strftime(ts, '%Y-%m-%d') AS day, event_type,
                   ($kmvHashSql) AS hb FROM events),
          r AS (SELECT day, event_type, hb % 256 AS bucket,
@@ -950,11 +731,11 @@ object SparkEntry {
                FROM events GROUP BY 1)
          SELECT d.event_type, d.n_days, e.v_zero, e.sum_pow,
                 round(${RefOps.HllAlphaScaled} / e.sum_pow, 2) AS est_raw
-         FROM est e JOIN d USING (event_type)""",
+         FROM est e JOIN d USING (event_type)"""),
     // r13i: join-size estimation, both classic sketches — Count-Min
     // inner product (min over rows, one-sided) and the AMS Tug-of-War
     // signed median (unbiased) — from one (type, user) histogram
-    "cms_join_est" -> {
+    QuerySpec("cms_join_est", RefOps.cmsJoinEst, {
       val cmRows = (0 until RefOps.CmsJRows).map(j =>
         s"""SELECT event_type, $j AS j,
               ${hex15Sql(s"'cmsj:$j:' || user_id::VARCHAR")} % ${RefOps.CmsJWidth} AS b,
@@ -986,50 +767,26 @@ object SparkEntry {
          SELECT ex.event_type, ex.f2_exact, estcm.est_cm, amsm.est_ams,
                 estcm.est_cm >= ex.f2_exact AS is_over
          FROM ex JOIN estcm USING (event_type) JOIN amsm USING (event_type)"""
-    },
+    }),
     // r13i: FD audit — one partial-distinct aggregation per candidate
-    "fd_audit" -> Seq(("event_id", "user_id"), ("event_id", "event_type"),
+    QuerySpec("fd_audit", Relational.fdAudit,
+      Seq(("event_id", "user_id"), ("event_id", "event_type"),
       ("user_id", "event_type")).map { case (l, r) =>
       s"""SELECT '$l' AS lhs, '$r' AS rhs, count(*)::BIGINT AS n_groups,
              count(*) FILTER (d > 1)::BIGINT AS n_violating,
              count(*) FILTER (d > 1) = 0 AS holds
           FROM (SELECT $l, count(DISTINCT $r) AS d FROM events GROUP BY 1)"""
-    }.mkString(" UNION ALL "),
+    }.mkString(" UNION ALL ")),
     // r13j: Theil-Sen — micro-quantized pairwise slopes over the
     // bounded daily frame, lower-median order statistic, intercept as
     // the median residual at the chosen slope
-    "theil_sen" -> """
-       WITH daily AS (SELECT event_type,
-              date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
-              count(*)::BIGINT AS n
-            FROM events GROUP BY 1, 2),
-       p AS (SELECT a.event_type,
-               (1000000 * (b.n - a.n)) // (b.d - a.d) AS sm
-             FROM daily a JOIN daily b
-               ON b.event_type = a.event_type AND b.d > a.d),
-       m AS (SELECT event_type, sm AS slope_micro FROM
-               (SELECT *, row_number() OVER (PARTITION BY event_type
-                  ORDER BY sm) AS rn,
-                  count(*) OVER (PARTITION BY event_type) AS cnt FROM p)
-             WHERE rn = (cnt + 1) // 2),
-       ic AS (SELECT d.event_type,
-                (1000000 * d.n - m.slope_micro * d.d) AS b0
-              FROM daily d JOIN m ON m.event_type = d.event_type),
-       icm AS (SELECT event_type, b0 AS intercept_micro FROM
-                 (SELECT *, row_number() OVER (PARTITION BY event_type
-                    ORDER BY b0) AS rn,
-                    count(*) OVER (PARTITION BY event_type) AS cnt FROM ic)
-               WHERE rn = (cnt + 1) // 2),
-       nd AS (SELECT event_type, count(*)::BIGINT AS n_days
-              FROM daily GROUP BY 1)
-       SELECT nd.event_type, nd.n_days,
-              ((nd.n_days * (nd.n_days - 1)) // 2)::BIGINT AS n_pairs,
-              m.slope_micro, icm.intercept_micro
-       FROM nd JOIN m USING (event_type) JOIN icm USING (event_type)""",
+    QuerySpec("theil_sen", Relational.theilSen, theilSenOracle),
+    QuerySpec("theil_sen_stream", StreamingMonitors.theilSenStream, theilSenOracle,
+      fixture = true),
     // r13p: within-session funnel — nests the factored session rule;
     // a session converts when first view strictly precedes first
     // purchase (exact micros)
-    "session_funnel" -> s"""
+    QuerySpec("session_funnel", RefOps.sessionFunnel, s"""
        $sessionAssignCtes,
        f AS (SELECT user_id, session_id,
                min(CASE WHEN event_type = 'view'
@@ -1043,10 +800,10 @@ object SparkEntry {
               (count(*) FILTER (v_tu < p_tu))::BIGINT AS n_converted,
               ((1000000 * count(*) FILTER (v_tu < p_tu))
                 // count(*))::BIGINT AS conv_ppm
-       FROM f""",
+       FROM f"""),
     // r13p: revenue Lorenz curve over thousand-dollar lifetime-spend
     // buckets, integer cents + div-quantized cumulative shares
-    "revenue_lorenz" -> """
+    QuerySpec("revenue_lorenz", Relational.revenueLorenz, """
        WITH spend AS (SELECT o_custkey,
               sum(CAST(round(o_totalprice * 100) AS BIGINT))::BIGINT AS cents
             FROM orders GROUP BY 1),
@@ -1064,50 +821,16 @@ object SparkEntry {
               ((1000000 * c.cum_cust) // t.tc)::BIGINT AS cum_cust_ppm,
               ((1000000 * (c.cum_cents // 100))
                 // (t.tv // 100))::BIGINT AS cum_cents_ppm
-       FROM c CROSS JOIN t""",
+       FROM c CROSS JOIN t"""),
     // r13o: trailing-7d HLL serving face — daily registers scattered to
     // the <=7 window-end days they serve, max-merged, shared derive
     // half; exact trailing distinct graded alongside
-    "hll_sliding_7d" -> s"""
-       WITH h AS (SELECT date_diff('day', DATE '1970-01-01',
-                    ts::DATE)::BIGINT AS d, event_type,
-                    ($kmvHashSql) AS hb FROM events),
-       r AS (SELECT d, event_type, hb % 256 AS bucket,
-               CASE WHEN hb // 256 = 0 THEN 53
-                    ELSE 53 - length(bin(hb // 256)) END AS rho FROM h),
-       daily AS (SELECT d, event_type, bucket, max(rho) AS r
-                 FROM r GROUP BY 1, 2, 3),
-       spine AS (SELECT DISTINCT d FROM h),
-       tgt AS (SELECT t.u AS day, daily.event_type, daily.bucket,
-                 max(daily.r)::BIGINT AS r
-               FROM daily, unnest(range(daily.d, daily.d + 7)) AS t(u)
-               WHERE t.u IN (SELECT d FROM spine)
-               GROUP BY 1, 2, 3),
-       agg AS (SELECT day, event_type, count(*)::BIGINT AS m_used,
-                 sum(1::BIGINT << (53 - r))::BIGINT AS sum_used
-               FROM tgt GROUP BY 1, 2),
-       est AS (SELECT day, event_type, (256 - m_used)::BIGINT AS v_zero,
-                 (sum_used + (256 - m_used) * (1::BIGINT << 53))::BIGINT
-                   AS sum_pow FROM agg),
-       ex AS (SELECT t.u AS day, du.event_type,
-                count(DISTINCT du.user_id)::BIGINT AS n_exact
-              FROM (SELECT DISTINCT date_diff('day', DATE '1970-01-01',
-                      ts::DATE)::BIGINT AS d, event_type, user_id
-                    FROM events) du,
-                unnest(range(du.d, du.d + 7)) AS t(u)
-              WHERE t.u IN (SELECT d FROM spine)
-              GROUP BY 1, 2),
-       est2 AS (SELECT day, event_type, v_zero, sum_pow,
-                  round(${RefOps.HllAlphaScaled} / sum_pow, 2) AS est_raw
-                FROM est)
-       SELECT e.day, e.event_type, e.v_zero, e.sum_pow, e.est_raw,
-              CASE WHEN e.est_raw <= 640.0 AND e.v_zero > 0
-                   THEN round(256.0 * ln(256.0 / e.v_zero), 2)
-                   ELSE e.est_raw END AS est,
-              ex.n_exact
-       FROM est2 e JOIN ex USING (day, event_type)""",
+    QuerySpec("hll_sliding_7d", RefOps.hllSliding, hllSlidingOracle),
+    QuerySpec("hll_sliding_7d_stream", StreamingMonitors.hllSliding7dStream,
+      s"SELECT day, event_type, v_zero, sum_pow, est_raw, est FROM ($hllSlidingOracle) t",
+      fixture = true),
     // r13o: type-pair set cosine^2 + Jaccard over distinct-user sets
-    "type_cosine" -> """
+    QuerySpec("type_cosine", Relational.typeCosine, """
        WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
        n AS (SELECT event_type, count(*)::BIGINT AS nu FROM du GROUP BY 1),
        p AS (SELECT a.event_type AS t1, b.event_type AS t2,
@@ -1121,10 +844,10 @@ object SparkEntry {
               ((1000000 * p.n_common)
                 // (n1.nu + n2.nu - p.n_common))::BIGINT AS jaccard_ppm
        FROM p JOIN n n1 ON n1.event_type = p.t1
-       JOIN n n2 ON n2.event_type = p.t2""",
+       JOIN n n2 ON n2.event_type = p.t2"""),
     // r13o: L-moments — probability-weighted sums over the (n, d)-ranked
     // daily frame, exact integer rationals micro/ppm-quantized
-    "l_moments" -> """
+    QuerySpec("l_moments", Relational.lMoments, """
        WITH daily AS (SELECT event_type,
               date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
               count(*)::BIGINT AS n
@@ -1144,10 +867,10 @@ object SparkEntry {
               (CASE WHEN nd >= 3 AND (2*s1 - (nd-1)*s0) != 0 THEN
                  (1000000 * (6*s2 - 6*(nd-2)*s1 + (nd-1)*(nd-2)*s0))
                  // ((nd-2) * (2*s1 - (nd-1)*s0)) END)::BIGINT AS t3_ppm
-       FROM s""",
+       FROM s"""),
     // r13n: Benford audit — expected ppm table interpolated from the
     // ONE Scala definition (Relational.BenfordPpm)
-    "benford_audit" -> s"""
+    QuerySpec("benford_audit", Relational.benfordAudit, s"""
        WITH e(digit, exp_ppm) AS (VALUES ${Relational.BenfordPpm
          .map { case (d, p) => s"($d, $p)" }.mkString(", ")}),
        o AS (SELECT substr(CAST(CAST(floor(o_totalprice) AS BIGINT)
@@ -1162,10 +885,10 @@ object SparkEntry {
               (((1000000 * coalesce(o.n_orders, 0)) // t.n - e.exp_ppm)
                * ((1000000 * coalesce(o.n_orders, 0)) // t.n - e.exp_ppm)
                // e.exp_ppm)::BIGINT AS dev_nano
-       FROM e LEFT JOIN o ON o.digit = e.digit CROSS JOIN t""",
+       FROM e LEFT JOIN o ON o.digit = e.digit CROSS JOIN t"""),
     // r13n: day-over-day active-user Jaccard on the distinct
     // (day, user) frame
-    "jaccard_days" -> """
+    QuerySpec("jaccard_days", Relational.jaccardDays, """
        WITH du AS (SELECT DISTINCT ts::DATE AS day, user_id FROM events),
        n AS (SELECT day, count(*)::BIGINT AS nu FROM du GROUP BY 1),
        i AS (SELECT a.day AS day, count(*)::BIGINT AS n_common
@@ -1179,40 +902,25 @@ object SparkEntry {
                // (n1.nu + n2.nu - coalesce(i.n_common, 0)))::BIGINT
                 AS jaccard_ppm
        FROM n n1 JOIN n n2 ON n2.day = n1.day + INTERVAL 1 DAY
-       LEFT JOIN i ON i.day = n1.day""",
+       LEFT JOIN i ON i.day = n1.day"""),
     // r13m: Mann-Kendall — integer sign pairs over the bounded daily
     // frame, the significance companion to theil_sen's slope
-    "mann_kendall" -> """
-       WITH daily AS (SELECT event_type,
-              date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
-              count(*)::BIGINT AS n
-            FROM events GROUP BY 1, 2),
-       p AS (SELECT a.event_type,
-               CASE WHEN b.n > a.n THEN 1 WHEN b.n < a.n THEN -1
-                    ELSE 0 END AS sgn
-             FROM daily a JOIN daily b
-               ON b.event_type = a.event_type AND b.d > a.d)
-       SELECT event_type, count(*)::BIGINT AS n_pairs,
-              sum(sgn)::BIGINT AS s_stat,
-              (count(*) FILTER (sgn = 1))::BIGINT AS n_concordant,
-              (count(*) FILTER (sgn = -1))::BIGINT AS n_discordant,
-              (count(*) FILTER (sgn = 0))::BIGINT AS n_tied,
-              CASE WHEN sum(sgn) > 0 THEN 'inc'
-                   WHEN sum(sgn) < 0 THEN 'dec' ELSE 'none' END AS trend
-       FROM p GROUP BY 1""",
+    QuerySpec("mann_kendall", Relational.mannKendall, mannKendallOracle),
+    QuerySpec("mann_kendall_stream", StreamingMonitors.mannKendallStream,
+      mannKendallOracle, fixture = true),
     // r13q: mergeable bitmap exact-distinct — 32-bit words, bit_or
     // cells, popcount-sum recovery
-    "bitmap_distinct" -> """
+    QuerySpec("bitmap_distinct", Relational.bitmapDistinct, """
        WITH w AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
               (user_id - ((user_id % 32 + 32) % 32)) // 32 AS word,
               bit_or(1::BIGINT << CAST((user_id % 32 + 32) % 32 AS INT)) AS mask
             FROM events GROUP BY 1, 2)
        SELECT day, count(*)::BIGINT AS n_words,
               sum(bit_count(mask))::BIGINT AS n_users
-       FROM w GROUP BY 1""",
+       FROM w GROUP BY 1"""),
     // r13q: seasonal-naive backtest — lags over the zero-filled DENSE
     // calendar (type × day) spine, MAE micro + MASE ppm by integer div
-    "forecast_backtest" -> """
+    QuerySpec("forecast_backtest", Relational.forecastBacktest, """
        WITH daily AS (SELECT event_type,
               date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
               count(*)::BIGINT AS n
@@ -1237,10 +945,10 @@ object SparkEntry {
               (CASE WHEN sum(abs(n - f1)) > 0
                     THEN (1000000 * sum(abs(n - f7))) // sum(abs(n - f1))
                END)::BIGINT AS mase_ppm
-       FROM l WHERE f7 IS NOT NULL GROUP BY 1""",
+       FROM l WHERE f7 IS NOT NULL GROUP BY 1"""),
     // r13q: exact dyadic EWMA — alpha = 1/2 closed form as a trailing
     // 31-day bounded range join, one integer div at the edge
-    "ewma_daily" -> """
+    QuerySpec("ewma_daily", Relational.ewmaDaily, """
        WITH daily AS (SELECT event_type,
               date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
               count(*)::BIGINT AS n
@@ -1255,11 +963,11 @@ object SparkEntry {
               ((1000 * sum(contrib)) // sum(wgt))::BIGINT AS ewma_milli,
               abs(1000 * max(n)
                 - (1000 * sum(contrib)) // sum(wgt))::BIGINT AS spread_milli
-       FROM j GROUP BY 1, 2""",
+       FROM j GROUP BY 1, 2"""),
     // r14: Kruskal–Wallis H — doubled mid-ranks off the pooled value
     // histogram (2F + c + 1, always integer), variance-identity form
     // (N-1)*SSB_rank/SST_rank = the tie-corrected H, balanced spine
-    "kruskal_wallis" -> """
+    QuerySpec("kruskal_wallis", Relational.kruskalWallis, """
        WITH daily AS (SELECT event_type,
               date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
               count(*)::BIGINT AS n
@@ -1291,11 +999,11 @@ object SparkEntry {
               (CASE WHEN b.bsum > 0
                     THEN (1000 * (kd.nn - 1) * a.asum) // (kd.dd * b.bsum)
                END)::BIGINT AS h_milli
-       FROM g CROSS JOIN kd CROSS JOIN b CROSS JOIN a""",
+       FROM g CROSS JOIN kd CROSS JOIN b CROSS JOIN a"""),
     // r14: Friedman test — doubled mid-ranks WITHIN each day block
     // (per-cell doubled mean = k+1), variance-identity tie-corrected
     // form, balanced spine
-    "friedman_test" -> """
+    QuerySpec("friedman_test", Relational.friedmanTest, """
        WITH daily AS (SELECT event_type,
               date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
               count(*)::BIGINT AS n
@@ -1327,10 +1035,10 @@ object SparkEntry {
               (CASE WHEN sst.sst > 0
                     THEN (1000 * (kd.k - 1) * ssb.ssb) // sst.sst
                END)::BIGINT AS chi2_milli
-       FROM g CROSS JOIN kd CROSS JOIN sst CROSS JOIN ssb""",
+       FROM g CROSS JOIN kd CROSS JOIN sst CROSS JOIN ssb"""),
     // r13t: balanced one-way ANOVA — the zero-filled spine equalizes
     // group sizes, making F one exact integer ratio
-    "anova_types" -> """
+    QuerySpec("anova_types", Relational.anovaTypes, """
        WITH daily AS (SELECT event_type,
               date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
               count(*)::BIGINT AS n
@@ -1353,9 +1061,9 @@ object SparkEntry {
               (CASE WHEN b > 0 AND k > 1 THEN
                  (1000::HUGEINT * a * (n - k))
                    // (k::HUGEINT * (k - 1) * b) END)::BIGINT AS f_milli
-       FROM f""",
+       FROM f"""),
     // r13t: Kendall tau-b — exact pair counts, IEEE-pinned ratio
-    "kendall_tau" -> """
+    QuerySpec("kendall_tau", Relational.kendallTau, """
        WITH daily AS (SELECT event_type,
               date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
               count(*)::BIGINT AS n
@@ -1375,10 +1083,10 @@ object SparkEntry {
                  floor(1000 * (n_c - n_d)::DOUBLE
                    / sqrt(n0::DOUBLE * (n0 - n_tied)::DOUBLE))
                END)::BIGINT AS tau_milli
-       FROM m""",
+       FROM m"""),
     // r13r: lagged view→purchase cross-correlation — exact BIGINT
     // moments on the zero-filled spine, IEEE-pinned final ratio
-    "xcorr_daily" -> """
+    QuerySpec("xcorr_daily", Relational.xcorrDaily, """
        WITH daily AS (SELECT event_type,
               date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
               count(*)::BIGINT AS n
@@ -1406,10 +1114,10 @@ object SparkEntry {
                  floor(1000 * num::DOUBLE
                    / sqrt(denx::DOUBLE * deny::DOUBLE))
                ELSE 0 END)::BIGINT AS r_milli
-       FROM r""",
+       FROM r"""),
     // r13m: equi-depth histogram — value-granular bucket assignment
     // over the domain-bounded whole-dollar histogram
-    "equi_depth_hist" -> """
+    QuerySpec("equi_depth_hist", Relational.equiDepthHist, """
        WITH h AS (SELECT CAST(floor(o_totalprice) AS BIGINT) AS dollar,
                     count(*)::BIGINT AS c
                   FROM orders GROUP BY 1),
@@ -1420,28 +1128,14 @@ object SparkEntry {
        SELECT bucket::BIGINT AS bucket, sum(c)::BIGINT AS n_rows,
               min(dollar) AS lo_dollar, max(dollar) AS hi_dollar,
               count(*)::BIGINT AS n_distinct
-       FROM b GROUP BY 1""",
+       FROM b GROUP BY 1"""),
     // r13k: CUSUM — micro-quantized mean, exact BIGINT running sum,
     // deterministic (|S| DESC, day) peak rank
-    "cusum_days" -> """
-       WITH daily AS (SELECT event_type,
-              date_diff('day', DATE '1970-01-01', ts::DATE)::BIGINT AS d,
-              count(*)::BIGINT AS n
-            FROM events GROUP BY 1, 2),
-       mu AS (SELECT event_type,
-                (1000000 * sum(n)) // count(*) AS mu_micro
-              FROM daily GROUP BY 1),
-       s AS (SELECT d.event_type, d.d, d.n,
-               sum(1000000 * d.n - m.mu_micro) OVER (
-                 PARTITION BY d.event_type ORDER BY d.d
-                 ROWS UNBOUNDED PRECEDING)::BIGINT AS s_micro
-             FROM daily d JOIN mu m ON m.event_type = d.event_type)
-       SELECT event_type, d, n, s_micro,
-              row_number() OVER (PARTITION BY event_type
-                ORDER BY abs(s_micro) DESC, d) = 1 AS is_peak
-       FROM s""",
-    "sessionize" -> sessionizeOracle,
-    "q1_pricing" ->
+    QuerySpec("cusum_days", Relational.cusumDays, cusumDaysOracle),
+    QuerySpec("cusum_days_stream", StreamingMonitors.cusumDaysStream, cusumDaysOracle,
+      fixture = true),
+    QuerySpec("sessionize", RefOps.sessionize, sessionizeOracle),
+    QuerySpec("q1_pricing", Relational.q1PricingSummary,
       """SELECT l_returnflag, l_linestatus,
                 round(sum(l_quantity), 2) AS sum_qty,
                 round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -1449,8 +1143,8 @@ object SparkEntry {
                 round(avg(l_quantity), 2) AS avg_qty,
                 count(*) AS count_order
          FROM lineitem WHERE l_shipdate <= TIMESTAMP '2000-09-02 00:00:00'
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-    "q3_shipping" ->
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
+    QuerySpec("q3_shipping", Relational.q3ShippingPriority,
       """SELECT l_orderkey,
                 strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate,
                 o_orderpriority,
@@ -1460,8 +1154,8 @@ object SparkEntry {
            AND l_orderkey = o_orderkey
            AND o_orderdate < TIMESTAMP '1998-06-01 00:00:00'
            AND l_shipdate > TIMESTAMP '1998-06-01 00:00:00'
-         GROUP BY 1, 2, 3 ORDER BY revenue DESC, l_orderkey LIMIT 10""",
-    "q5_local_supplier" ->
+         GROUP BY 1, 2, 3 ORDER BY revenue DESC, l_orderkey LIMIT 10"""),
+    QuerySpec("q5_local_supplier", Relational.q5LocalSupplier,
       """SELECT n_name,
                 round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
          FROM customer, orders, lineitem, supplier, nation, region
@@ -1470,44 +1164,44 @@ object SparkEntry {
            AND s_nationkey = n_nationkey AND n_regionkey = r_regionkey
            AND r_name = 'ASIA'
            AND o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-         GROUP BY 1 ORDER BY revenue DESC, n_name""",
-    "window_top_customers" ->
+         GROUP BY 1 ORDER BY revenue DESC, n_name"""),
+    QuerySpec("window_top_customers", Relational.windowTopCustomers,
       """SELECT c_nationkey, rk, c_custkey, round(c_acctbal, 2) AS acctbal
          FROM (SELECT c_nationkey, c_custkey, c_acctbal,
                       row_number() OVER (PARTITION BY c_nationkey
                         ORDER BY c_acctbal DESC, c_custkey) AS rk
-               FROM customer) WHERE rk <= 3""",
-    "anti_join_no_orders" ->
+               FROM customer) WHERE rk <= 3"""),
+    QuerySpec("anti_join_no_orders", Relational.customersWithoutOrders,
       """SELECT c_custkey, c_name FROM customer
-         WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)""",
-    "semi_join_big_parts" ->
+         WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)"""),
+    QuerySpec("semi_join_big_parts", Relational.partsWithBigShipments,
       """SELECT p_partkey, p_brand FROM part
-         WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity > 45)""",
-    "distinct_agg" ->
+         WHERE p_partkey IN (SELECT l_partkey FROM lineitem WHERE l_quantity > 45)"""),
+    QuerySpec("distinct_agg", Relational.distinctAgg,
       """SELECT l_returnflag,
                 count(DISTINCT l_suppkey) AS n_suppliers,
                 count(DISTINCT l_partkey) AS n_parts,
                 count(*) AS n_rows
-         FROM lineitem GROUP BY 1""",
-    "rollup_orders" ->
+         FROM lineitem GROUP BY 1"""),
+    QuerySpec("rollup_orders", Relational.rollupOrders,
       """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
                 round(sum(o_totalprice), 2) AS total
-         FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""",
-    "customer_order_stats" ->
+         FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)"""),
+    QuerySpec("customer_order_stats", Relational.customerOrderStats,
       """SELECT c_custkey, c_mktsegment, n_orders, spend
          FROM (SELECT o_custkey, count(*) AS n_orders,
                       round(sum(o_totalprice), 2) AS spend
                FROM orders GROUP BY 1) o
-         JOIN customer ON o_custkey = c_custkey""",
-    "pivot_events" ->
+         JOIN customer ON o_custkey = c_custkey"""),
+    QuerySpec("pivot_events", Relational.pivotEvents,
       """SELECT user_id,
                 count(*) FILTER (event_type = 'click') AS click,
                 count(*) FILTER (event_type = 'view') AS view,
                 count(*) FILTER (event_type = 'purchase') AS purchase,
                 count(*) FILTER (event_type = 'signup') AS signup,
                 count(*) FILTER (event_type = 'error') AS error
-         FROM events GROUP BY user_id""",
-    "funnel" ->
+         FROM events GROUP BY user_id"""),
+    QuerySpec("funnel", Relational.funnel,
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts) AS tu FROM events),
          v AS (SELECT user_id, min(tu) AS vt FROM e WHERE event_type = 'view' GROUP BY 1),
          c AS (SELECT e.user_id, min(tu) AS ct FROM e JOIN v USING (user_id)
@@ -1519,16 +1213,16 @@ object SparkEntry {
          SELECT v.user_id, vt, ct, pt,
                 (1 + (ct IS NOT NULL)::INT + (pt IS NOT NULL)::INT) AS stage
          FROM v LEFT JOIN c ON c.user_id = v.user_id
-         LEFT JOIN p ON p.user_id = v.user_id""",
-    "retention_cohorts" ->
+         LEFT JOIN p ON p.user_id = v.user_id"""),
+    QuerySpec("retention_cohorts", Relational.retentionCohorts,
       """WITH f AS (SELECT user_id, min(date_trunc('day', ts)) AS d0
                     FROM events GROUP BY 1),
          a AS (SELECT DISTINCT e.user_id, strftime(f.d0, '%Y-%m-%d') AS cohort,
                  ((epoch_us(date_trunc('day', e.ts)) - epoch_us(f.d0))
                    // 604800000000)::INT AS wk
                FROM events e JOIN f ON f.user_id = e.user_id)
-         SELECT cohort, wk, count(*) AS n_users FROM a GROUP BY 1, 2""",
-    "gap_fill" ->
+         SELECT cohort, wk, count(*) AS n_users FROM a GROUP BY 1, 2"""),
+    QuerySpec("gap_fill", Relational.gapFill,
       """WITH d AS (SELECT date_trunc('day', ts) AS d, count(*) AS n_events
                     FROM events GROUP BY 1),
          sp AS (SELECT unnest(generate_series(min(d), max(d),
@@ -1539,8 +1233,8 @@ object SparkEntry {
                 last_value(CASE WHEN n_events > 0 THEN n_events END
                            IGNORE NULLS)
                   OVER (ORDER BY d ROWS UNBOUNDED PRECEDING) AS n_locf
-         FROM j""",
-    "islands_coverage" ->
+         FROM j"""),
+    QuerySpec("islands_coverage", Relational.islandsCoverage,
       """WITH o AS (SELECT user_id, event_id, epoch_us(ts) AS tu FROM events),
          f AS (SELECT user_id, event_id, tu,
                  CASE WHEN lag(tu) OVER w IS NULL
@@ -1557,16 +1251,16 @@ object SparkEntry {
          SELECT user_id, count(*)::BIGINT AS n_islands,
                 sum(t1 - t0)::BIGINT AS covered_us,
                 sum(n)::BIGINT AS n_events
-         FROM g GROUP BY 1""",
-    "cube_events" ->
+         FROM g GROUP BY 1"""),
+    QuerySpec("cube_events", Relational.cubeEvents,
       """SELECT event_type, day,
                 grouping(event_type)::BIGINT AS g_type,
                 grouping(day)::BIGINT AS g_day,
                 count(*) AS n, round(sum(value), 2) AS total
          FROM (SELECT event_type, strftime(ts, '%Y-%m-%d') AS day, value
                FROM events)
-         GROUP BY CUBE (event_type, day)""",
-    "set_ops_parts" ->
+         GROUP BY CUBE (event_type, day)"""),
+    QuerySpec("set_ops_parts", Relational.setOpsParts,
       """WITH bulk AS (SELECT DISTINCT l_partkey FROM lineitem
                        WHERE l_quantity > 45),
          disc AS (SELECT DISTINCT l_partkey FROM lineitem
@@ -1575,8 +1269,8 @@ object SparkEntry {
          FROM (SELECT l_partkey FROM bulk INTERSECT SELECT l_partkey FROM disc)
          UNION ALL
          SELECT l_partkey, 'bulk_only' AS tag
-         FROM (SELECT l_partkey FROM bulk EXCEPT SELECT l_partkey FROM disc)""",
-    "rolling_revenue_range" ->
+         FROM (SELECT l_partkey FROM bulk EXCEPT SELECT l_partkey FROM disc)"""),
+    QuerySpec("rolling_revenue_range", Relational.rollingRevenueRange,
       """WITH o AS (SELECT o_custkey, o_orderkey,
                  epoch_us(o_orderdate) // 86400000000 AS day,
                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -1585,8 +1279,8 @@ object SparkEntry {
                 sum(cents) OVER (PARTITION BY o_custkey ORDER BY day
                                  RANGE BETWEEN 30 PRECEDING AND CURRENT ROW)
                   ::BIGINT AS rev30_cents
-         FROM o""",
-    "props_stats" ->
+         FROM o"""),
+    QuerySpec("props_stats", Relational.propsStats,
       """SELECT event_type,
                 count(k) AS n,
                 count(DISTINCT k) AS n_distinct_k,
@@ -1595,8 +1289,8 @@ object SparkEntry {
          FROM (SELECT event_type,
                  CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
                FROM events)
-         GROUP BY 1""",
-    "percentiles_by_type" ->
+         GROUP BY 1"""),
+    QuerySpec("percentiles_by_type", Relational.percentilesByType,
       """WITH r AS (SELECT event_type, value,
                  row_number() OVER (PARTITION BY event_type
                                     ORDER BY value, event_id) AS rn,
@@ -1605,8 +1299,8 @@ object SparkEntry {
          SELECT event_type, max(n)::BIGINT AS n,
                 max(CASE WHEN rn = (n + 1) // 2 THEN value END) AS p50,
                 max(CASE WHEN rn = (19 * n + 19) // 20 THEN value END) AS p95
-         FROM r GROUP BY 1""",
-    "corpus_drift" ->
+         FROM r GROUP BY 1"""),
+    QuerySpec("corpus_drift", DataOps.corpusDrift,
       """WITH t AS (SELECT lang, least(n_chars // 256, 15) AS len_bucket,
                       (CAST(substr(source, 4) AS INT) < 10)::BIGINT AS in_a
                     FROM documents),
@@ -1619,8 +1313,8 @@ object SparkEntry {
                 abs((1000 * n_a) // nullif(tot_a, 0)
                     - (1000 * n_b) // nullif(tot_b, 0))::BIGINT
                   AS drift_milli
-         FROM cells, tot""",
-    "corpus_manifest" ->
+         FROM cells, tot"""),
+    QuerySpec("corpus_manifest", DataOps.corpusManifest,
       """WITH h AS (SELECT lang, md5(text) AS h,
                       substr(md5(text), 1, 2) AS bucket
                     FROM documents),
@@ -1630,12 +1324,12 @@ object SparkEntry {
          SELECT lang, sum(n)::BIGINT AS n_docs,
                 count(*)::BIGINT AS n_buckets,
                 md5(string_agg(bh, '' ORDER BY bucket)) AS content_hash
-         FROM l1 GROUP BY 1""",
-    "k_anonymity" ->
+         FROM l1 GROUP BY 1"""),
+    QuerySpec("k_anonymity", DataOps.kAnonymity,
       """SELECT lang, source, n_chars // 256 AS len_bucket,
                 count(*)::BIGINT AS n, count(*) < 5 AS at_risk
-         FROM documents GROUP BY 1, 2, 3""",
-    "edit_distance_block" ->
+         FROM documents GROUP BY 1, 2, 3"""),
+    QuerySpec("edit_distance_block", DataOps.editDistanceBlock,
       """WITH d AS (SELECT doc_id, lang, substr(text, 1, 80) AS p,
                       len(substr(text, 1, 80))::BIGINT AS l
                     FROM documents),
@@ -1646,16 +1340,16 @@ object SparkEntry {
          SELECT a_id, b_id, levenshtein(a_p, b_p)::BIGINT AS dist
          FROM a JOIN b USING (lang, bk)
          WHERE a_id < b_id AND abs(a_l - b_l) <= 2
-           AND levenshtein(a_p, b_p) <= 2""",
-    "value_outliers" ->
+           AND levenshtein(a_p, b_p) <= 2"""),
+    QuerySpec("value_outliers", Relational.valueOutliers,
       """SELECT event_id, event_type, value, rn FROM (
            SELECT event_id, event_type, value,
                   row_number() OVER (PARTITION BY event_type
                                      ORDER BY value DESC, event_id) AS rn,
                   count(*) OVER (PARTITION BY event_type) AS n
            FROM events)
-         WHERE rn <= (n + 99) // 100""",
-    "daily_active" ->
+         WHERE rn <= (n + 99) // 100"""),
+    QuerySpec("daily_active", Relational.dailyActive,
       """WITH f AS (SELECT user_id, min(date_trunc('day', ts)) AS d0
                     FROM events GROUP BY 1),
          d AS (SELECT strftime(d0, '%Y-%m-%d') AS day, count(*) AS new_users
@@ -1663,8 +1357,8 @@ object SparkEntry {
          SELECT day, new_users,
                 (sum(new_users) OVER (ORDER BY day
                    ROWS UNBOUNDED PRECEDING))::BIGINT AS cum_users
-         FROM d""",
-    "concurrency_peak" ->
+         FROM d"""),
+    QuerySpec("concurrency_peak", Relational.concurrencyPeak,
       """WITH pts AS (
            SELECT event_id, ts AS tt, 1::BIGINT AS delta FROM events
            UNION ALL
@@ -1686,9 +1380,9 @@ object SparkEntry {
                    AS running
                FROM pd JOIN bb USING (day))
          SELECT day, max(running)::BIGINT AS peak_concurrent
-         FROM r GROUP BY day""",
-    "attribution_last_touch" -> attributionOracle,
-    "scd2_intervals" ->
+         FROM r GROUP BY day"""),
+    QuerySpec("attribution_last_touch", Relational.attributionLastTouch, attributionOracle),
+    QuerySpec("scd2_intervals", Relational.scd2Intervals,
       """WITH m AS (
            SELECT user_id, event_id, ts, event_type,
                   lag(event_type) OVER (PARTITION BY user_id
@@ -1711,17 +1405,17 @@ object SparkEntry {
                 strftime(t0, '%Y-%m-%d %H:%M:%S') AS valid_from_s,
                 strftime(t_next, '%Y-%m-%d %H:%M:%S') AS valid_to_s,
                 n_events, t_next IS NULL AS is_current
-         FROM iv""",
-    "key_skew" ->
+         FROM iv"""),
+    QuerySpec("key_skew", Relational.keySkew,
       """SELECT user_id, count(*) AS n_rows,
                 ((1000 * count(*)) // (SELECT count(*) FROM events))::BIGINT
                   AS share_milli
          FROM events GROUP BY 1
-         ORDER BY n_rows DESC, user_id LIMIT 10""",
+         ORDER BY n_rows DESC, user_id LIMIT 10"""),
     // Hop windows of size 2×slide: event at µs `tu` falls in starts
     // (tu div slide - k)·slide for k in {0, 1} — the same alignment
     // (multiples of the slide from the epoch) Spark's window() uses.
-    "window_hopping" ->
+    QuerySpec("window_hopping", Relational.windowHopping,
       """WITH e AS (SELECT epoch_us(ts)::BIGINT AS tu, event_type, user_id
                     FROM events),
          k AS (SELECT unnest([0, 1]) AS k),
@@ -1731,10 +1425,10 @@ object SparkEntry {
          SELECT strftime(make_timestamp(ws), '%Y-%m-%d %H:%M:%S') AS window_start,
                 event_type, count(*)::BIGINT AS n_events,
                 count(DISTINCT user_id)::BIGINT AS n_users
-         FROM w GROUP BY 1, 2""",
+         FROM w GROUP BY 1, 2"""),
     // Each user-day serves report days day..day+6; only observed days
     // are reported (join with the day table).
-    "rolling_active_7d" ->
+    QuerySpec("rolling_active_7d", Relational.rollingActive,
       """WITH du AS (SELECT DISTINCT date_trunc('day', ts)::DATE AS day, user_id
                      FROM events),
          days AS (SELECT DISTINCT day FROM du),
@@ -1745,10 +1439,10 @@ object SparkEntry {
          d1 AS (SELECT day, count(DISTINCT user_id)::BIGINT AS n_users_1d
                 FROM du GROUP BY 1)
          SELECT strftime(r.day, '%Y-%m-%d') AS day, d1.n_users_1d, r.n_users_7d
-         FROM r JOIN d1 USING (day)""",
+         FROM r JOIN d1 USING (day)"""),
     // Sequence order is (event-time µs, event_id) so same-µs ties are
     // deterministic in both engines.
-    "event_transitions" ->
+    QuerySpec("event_transitions", Relational.eventTransitions,
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts)::BIGINT AS tu,
                            event_id
                     FROM events),
@@ -1763,8 +1457,8 @@ object SparkEntry {
                 ((1000 * n_transitions) //
                  (sum(n_transitions) OVER (PARTITION BY prev_type)))::BIGINT
                   AS p_milli
-         FROM g""",
-    "event_trigrams" ->
+         FROM g"""),
+    QuerySpec("event_trigrams", Relational.eventTrigrams,
       """WITH e AS (SELECT user_id, event_type, epoch_us(ts)::BIGINT AS tu,
                            event_id
                     FROM events),
@@ -1780,8 +1474,8 @@ object SparkEntry {
                 ((1000 * n_paths) //
                  (sum(n_paths) OVER (PARTITION BY e1, e2)))::BIGINT
                   AS p_milli
-         FROM g""",
-    "part_best_supplier" ->
+         FROM g"""),
+    QuerySpec("part_best_supplier", Relational.partBestSupplier,
       """WITH li AS (SELECT l_partkey, l_suppkey, l_orderkey,
                        round(l_extendedprice * 100)::BIGINT AS cents
                      FROM lineitem),
@@ -1794,22 +1488,22 @@ object SparkEntry {
          SELECT p.p_partkey, p.p_name, b.best_cents, s.s_name, n.n_name
          FROM b JOIN part p ON p.p_partkey = b.l_partkey
          JOIN supplier s ON s.s_suppkey = b.best_suppkey
-         JOIN nation n ON n.n_nationkey = s.s_nationkey""",
-    "q18_large_orders" ->
+         JOIN nation n ON n.n_nationkey = s.s_nationkey"""),
+    QuerySpec("q18_large_orders", Relational.q18LargeOrders,
       """WITH tq AS (SELECT l_orderkey, sum(l_quantity)::BIGINT AS total_qty
                      FROM lineitem GROUP BY 1
                      HAVING sum(l_quantity) > 300)
          SELECT c_custkey, c_name, o_orderkey, total_qty
          FROM tq JOIN orders ON o_orderkey = l_orderkey
-         JOIN customer ON c_custkey = o_custkey""",
-    "q4_priority_late" ->
+         JOIN customer ON c_custkey = o_custkey"""),
+    QuerySpec("q4_priority_late", Relational.q4PriorityLate,
       """WITH ls AS (SELECT l_orderkey, max(l_shipdate) AS last_ship
                      FROM lineitem GROUP BY 1)
          SELECT o_orderpriority, count(*)::BIGINT AS n_late
          FROM orders JOIN ls ON l_orderkey = o_orderkey
          WHERE last_ship > o_orderdate + INTERVAL 60 DAY
-         GROUP BY 1""",
-    "q14_promo_share" ->
+         GROUP BY 1"""),
+    QuerySpec("q14_promo_share", Relational.q14PromoShare,
       """SELECT strftime(l_shipdate, '%Y-%m') AS month,
                 sum(CASE WHEN p_type = 'PROMO'
                       THEN round(l_extendedprice * (1 - l_discount) * 100)::BIGINT
@@ -1818,8 +1512,8 @@ object SparkEntry {
                   ::BIGINT AS total_cents,
                 count(*)::BIGINT AS n_lines
          FROM lineitem JOIN part ON p_partkey = l_partkey
-         GROUP BY 1""",
-    "q19_bracket_revenue" ->
+         GROUP BY 1"""),
+    QuerySpec("q19_bracket_revenue", Relational.q19BracketRevenue,
       """SELECT count(*)::BIGINT AS n_lines,
                 sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)
                   ::BIGINT AS revenue_cents
@@ -1829,8 +1523,8 @@ object SparkEntry {
             OR (p_brand = 'Brand#20' AND p_size BETWEEN 5 AND 30
                 AND l_quantity BETWEEN 10 AND 35)
             OR (p_brand = 'Brand#25' AND p_size BETWEEN 15 AND 50
-                AND l_quantity BETWEEN 25 AND 50)""",
-    "q22_idle_balances" ->
+                AND l_quantity BETWEEN 25 AND 50)"""),
+    QuerySpec("q22_idle_balances", Relational.q22IdleBalances,
       """WITH c AS (SELECT c_custkey, c_nationkey::BIGINT AS nationkey,
                       round(c_acctbal * 100)::BIGINT AS cents FROM customer),
          thr AS (SELECT avg(cents) AS thr FROM c WHERE cents > 0)
@@ -1840,16 +1534,16 @@ object SparkEntry {
          WHERE cents > thr AND NOT EXISTS (
            SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey
              AND o.o_orderdate >= TIMESTAMP '2001-01-01 00:00:00')
-         GROUP BY 1""",
-    "q6_forecast_revenue" ->
+         GROUP BY 1"""),
+    QuerySpec("q6_forecast_revenue", Relational.q6ForecastRevenue,
       """SELECT count(*)::BIGINT AS n_lines,
                 sum(round(l_extendedprice * l_discount * 100)::BIGINT)
                   ::BIGINT AS revenue_cents
          FROM lineitem
          WHERE l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
            AND l_shipdate < TIMESTAMP '1999-01-01 00:00:00'
-           AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""",
-    "q12_service_by_delay" ->
+           AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24"""),
+    QuerySpec("q12_service_by_delay", Relational.q12ServiceByDelay,
       """SELECT least(greatest(date_diff('day', o_orderdate::DATE,
                   l_shipdate::DATE), 0) // 30, 6)::BIGINT AS delay_bucket,
                 sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
@@ -1857,16 +1551,16 @@ object SparkEntry {
                 sum(CASE WHEN o_orderpriority IN ('1-URGENT', '2-HIGH')
                       THEN 0 ELSE 1 END)::BIGINT AS low_lines
          FROM lineitem JOIN orders ON o_orderkey = l_orderkey
-         GROUP BY 1""",
-    "q13_customer_distribution" ->
+         GROUP BY 1"""),
+    QuerySpec("q13_customer_distribution", Relational.q13CustomerDistribution,
       """WITH per AS (SELECT c_custkey, count(o_orderkey)::BIGINT AS n_orders
                       FROM customer LEFT JOIN (
                         SELECT o_custkey, o_orderkey FROM orders
                         WHERE o_orderpriority <> '4-NOT SPECIFIED') o
                         ON o.o_custkey = c_custkey
                       GROUP BY 1)
-         SELECT n_orders, count(*)::BIGINT AS n_custs FROM per GROUP BY 1""",
-    "q15_top_supplier" ->
+         SELECT n_orders, count(*)::BIGINT AS n_custs FROM per GROUP BY 1"""),
+    QuerySpec("q15_top_supplier", Relational.q15TopSupplier,
       """WITH rev AS (SELECT l_suppkey,
                         sum(round(l_extendedprice * (1 - l_discount) * 100)
                           ::BIGINT)::BIGINT AS revenue_cents
@@ -1876,8 +1570,8 @@ object SparkEntry {
                       GROUP BY 1)
          SELECT s_suppkey, s_name, revenue_cents
          FROM rev JOIN supplier ON s_suppkey = l_suppkey
-         WHERE revenue_cents = (SELECT max(revenue_cents) FROM rev)""",
-    "q16_part_supplier_counts" ->
+         WHERE revenue_cents = (SELECT max(revenue_cents) FROM rev)"""),
+    QuerySpec("q16_part_supplier_counts", Relational.q16PartSupplierCounts,
       """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem
                         WHERE l_suppkey NOT IN (
                           SELECT s_suppkey FROM supplier WHERE s_acctbal < 0))
@@ -1885,8 +1579,8 @@ object SparkEntry {
                 count(DISTINCT l_suppkey)::BIGINT AS supplier_cnt
          FROM pairs JOIN part ON p_partkey = l_partkey
          WHERE p_brand <> 'Brand#13' AND p_type <> 'PROMO'
-         GROUP BY 1, 2, 3""",
-    "q8_market_share" ->
+         GROUP BY 1, 2, 3"""),
+    QuerySpec("q8_market_share", Relational.q8MarketShare,
       """WITH ac AS (SELECT c_custkey FROM customer
                      JOIN nation ON n_nationkey = c_nationkey
                      JOIN region ON r_regionkey = n_regionkey
@@ -1905,8 +1599,8 @@ object SparkEntry {
          JOIN orders ON o_orderkey = l_orderkey
          JOIN ac ON c_custkey = o_custkey
          JOIN sf ON s_suppkey = l_suppkey
-         GROUP BY 1""",
-    "q9_product_profit" ->
+         GROUP BY 1"""),
+    QuerySpec("q9_product_profit", Relational.q9ProductProfit,
       """SELECT n_name, year(o_orderdate)::BIGINT AS o_year,
                 sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT
                     - l_quantity::BIGINT * round(p_retailprice * 100)::BIGINT)
@@ -1916,8 +1610,8 @@ object SparkEntry {
          JOIN supplier ON s_suppkey = l_suppkey
          JOIN nation ON n_nationkey = s_nationkey
          JOIN orders ON o_orderkey = l_orderkey
-         GROUP BY 1, 2""",
-    "q11_important_parts" ->
+         GROUP BY 1, 2"""),
+    QuerySpec("q11_important_parts", Relational.q11ImportantParts,
       """WITH v AS (SELECT l_partkey, sum(round(l_extendedprice * 100)::BIGINT)
                       ::BIGINT AS value_cents
                     FROM lineitem
@@ -1927,8 +1621,8 @@ object SparkEntry {
                     GROUP BY 1)
          SELECT l_partkey, value_cents FROM v
          WHERE value_cents * (SELECT count(*) FROM v)
-               > 2 * (SELECT sum(value_cents) FROM v)""",
-    "q20_excess_suppliers" ->
+               > 2 * (SELECT sum(value_cents) FROM v)"""),
+    QuerySpec("q20_excess_suppliers", Relational.q20ExcessSuppliers,
       """WITH pl AS (SELECT l_partkey, l_suppkey, l_quantity::BIGINT AS q
                      FROM lineitem
                      JOIN part ON p_partkey = l_partkey AND p_type = 'PROMO'
@@ -1941,8 +1635,8 @@ object SparkEntry {
                WHERE supp_q * 4 > part_q)
          SELECT s_suppkey, s_name, n_name
          FROM w JOIN supplier ON s_suppkey = l_suppkey
-         JOIN nation ON n_nationkey = s_nationkey""",
-    "q21_waiting_suppliers" ->
+         JOIN nation ON n_nationkey = s_nationkey"""),
+    QuerySpec("q21_waiting_suppliers", Relational.q21WaitingSuppliers,
       """WITH pos AS (SELECT l_orderkey, l_suppkey, max(l_shipdate) AS ms
                       FROM lineitem
                       JOIN orders ON o_orderkey = l_orderkey
@@ -1959,8 +1653,8 @@ object SparkEntry {
                FROM ls GROUP BY 1 HAVING count(*) = 1)
          SELECT s_suppkey, s_name, count(*)::BIGINT AS numwait
          FROM u JOIN supplier ON s_suppkey = supp
-         GROUP BY 1, 2""",
-    "q17_small_quantity" ->
+         GROUP BY 1, 2"""),
+    QuerySpec("q17_small_quantity", Relational.q17SmallQuantity,
       """WITH li AS (SELECT l_partkey, l_quantity::BIGINT AS q,
                        round(l_extendedprice * 100)::BIGINT AS cents
                      FROM lineitem),
@@ -1970,8 +1664,8 @@ object SparkEntry {
          sm AS (SELECT p_partkey FROM part WHERE p_type = 'SMALL')
          SELECT count(*)::BIGINT AS n_lines, sum(cents)::BIGINT AS total_cents
          FROM li JOIN pp ON li.l_partkey = pk JOIN sm ON p_partkey = pk
-         WHERE 5 * q * n_q < sum_q""",
-    "weighted_median" ->
+         WHERE 5 * q * n_q < sum_q"""),
+    QuerySpec("weighted_median", Relational.weightedMedian,
       """WITH h AS (SELECT l_returnflag,
                       round(l_extendedprice * 100)::BIGINT AS cents,
                       sum(l_quantity)::BIGINT AS w
@@ -1982,10 +1676,10 @@ object SparkEntry {
                FROM h)
          SELECT l_returnflag, min(cents)::BIGINT AS median_cents,
                 max(tw)::BIGINT AS total_weight
-         FROM c WHERE 2 * cum >= tw GROUP BY 1""",
+         FROM c WHERE 2 * cum >= tw GROUP BY 1"""),
     // Oracle ranks globally; the Spark plan's bucketed rank equals it
     // because the buckets are monotone in the ranked value.
-    "rfm_segments" ->
+    QuerySpec("rfm_segments", Relational.rfmSegments,
       """WITH per AS (SELECT o_custkey AS c_custkey,
                date_diff('day', DATE '1995-01-01', max(o_orderdate)::DATE)
                  ::BIGINT AS r_days,
@@ -2005,20 +1699,20 @@ object SparkEntry {
                 FROM rk, n)
          SELECT c_custkey, r_score, f_score, m_score,
                 (r_score * 100 + f_score * 10 + m_score)::BIGINT AS rfm
-         FROM sc""",
+         FROM sc"""),
     // The salt cancels out by construction — the oracle is the PLAIN
     // join, proving the salted rewrite is semantics-preserving.
-    "salted_join" ->
+    QuerySpec("salted_join", Relational.saltedJoinHot,
       """WITH e AS (SELECT CASE WHEN user_id % 10 < 5 THEN 0
                                 ELSE user_id END AS k, event_id
                     FROM events),
          dim AS (SELECT DISTINCT k, k % 7 AS cohort FROM e)
          SELECT dim.cohort::BIGINT AS cohort, count(*)::BIGINT AS n_events,
                 count(DISTINCT e.k)::BIGINT AS n_keys
-         FROM e JOIN dim USING (k) GROUP BY 1""",
+         FROM e JOIN dim USING (k) GROUP BY 1"""),
     // ts distinctness counted on epoch MICROS — the table's read dialect
     // (nanos→µs) — so both engines see the same aliasing.
-    "table_profile" ->
+    QuerySpec("table_profile", Relational.tableProfile,
       """SELECT 'event_id' AS col_name, count(*)::BIGINT AS n_rows,
                 (count(*) - count(event_id))::BIGINT AS n_nulls,
                 count(DISTINCT event_id)::BIGINT AS n_distinct,
@@ -2043,9 +1737,9 @@ object SparkEntry {
          UNION ALL
          SELECT 'props', count(*), count(*) - count(props),
                 count(DISTINCT props), NULL::BIGINT, NULL::BIGINT
-         FROM events""",
+         FROM events"""),
     // r12: TPC-H Q7/Q10 shapes and the events-side robust statistics
-    "q7_nation_flows" ->
+    QuerySpec("q7_nation_flows", Relational.q7NationFlows,
       """WITH n AS (SELECT n_nationkey, n_name FROM nation
                     WHERE n_name IN ('NATION_1', 'NATION_2')),
          s AS (SELECT s_suppkey, n_name AS supp_nation
@@ -2062,8 +1756,8 @@ object SparkEntry {
          WHERE l_shipdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND l_shipdate < TIMESTAMP '1998-01-01 00:00:00'
            AND supp_nation <> cust_nation
-         GROUP BY 1, 2, 3""",
-    "q10_returned" ->
+         GROUP BY 1, 2, 3"""),
+    QuerySpec("q10_returned", Relational.q10Returned,
       """SELECT c_custkey, c_name, n_name,
                 sum(round(l_extendedprice * (1 - l_discount) * 100)::BIGINT)
                   ::BIGINT AS revenue_cents
@@ -2074,8 +1768,8 @@ object SparkEntry {
            AND o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
            AND o_orderdate < TIMESTAMP '1996-04-01 00:00:00'
          GROUP BY 1, 2, 3
-         ORDER BY revenue_cents DESC, c_custkey LIMIT 20""",
-    "trimmed_stats" ->
+         ORDER BY revenue_cents DESC, c_custkey LIMIT 20"""),
+    QuerySpec("trimmed_stats", Relational.trimmedStats,
       """WITH e AS (SELECT event_type, event_id,
                       round(value * 100)::BIGINT AS cents FROM events),
          r AS (SELECT *,
@@ -2087,8 +1781,8 @@ object SparkEntry {
                 sum(cents)::BIGINT AS sum_cents,
                 (sum(cents) // count(*))::BIGINT AS mean_cents
          FROM r WHERE rn > (5 * n) // 100 AND rn <= (95 * n) // 100
-         GROUP BY 1""",
-    "trend_slope" ->
+         GROUP BY 1"""),
+    QuerySpec("trend_slope", Relational.trendSlope,
       """WITH daily AS (
            SELECT event_type,
                   date_diff('day', DATE '1970-01-01',
@@ -2102,8 +1796,8 @@ object SparkEntry {
          SELECT event_type, n_days,
                 (n_days * sxy - sx * sy)::BIGINT AS slope_num,
                 (n_days * sxx - sx * sx)::BIGINT AS slope_den
-         FROM m""",
-    "interevent_gaps" ->
+         FROM m"""),
+    QuerySpec("interevent_gaps", Relational.intereventGaps,
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts)::BIGINT AS tu
                     FROM events),
          g0 AS (SELECT user_id, event_id, tu,
@@ -2123,8 +1817,8 @@ object SparkEntry {
                 max(CASE WHEN rn = (95 * n + 99) // 100 THEN gap_s END)::BIGINT
                   AS p95_gap_s,
                 max(gap_s)::BIGINT AS max_gap_s
-         FROM r GROUP BY 1""",
-    "adaptive_sessionize" ->
+         FROM r GROUP BY 1"""),
+    QuerySpec("adaptive_sessionize", Relational.adaptiveSessionize,
       """WITH e AS (SELECT user_id, event_id, epoch_us(ts)::BIGINT AS tu
                     FROM events),
          g0 AS (SELECT user_id, event_id, tu,
@@ -2152,8 +1846,8 @@ object SparkEntry {
                 coalesce(med.threshold_s, 60)::BIGINT AS threshold_s,
                 (1 + coalesce(br.n_breaks, 0))::BIGINT AS n_sessions
          FROM base LEFT JOIN med USING (user_id)
-         LEFT JOIN br USING (user_id)""",
-    "basket_affinity" ->
+         LEFT JOIN br USING (user_id)"""),
+    QuerySpec("basket_affinity", Relational.basketAffinity,
       """WITH ot AS (SELECT DISTINCT l_orderkey, p_type
                      FROM lineitem JOIN part ON l_partkey = p_partkey),
          marg AS (SELECT p_type, count(*)::BIGINT AS c FROM ot GROUP BY 1),
@@ -2168,8 +1862,8 @@ object SparkEntry {
                   AS lift_milli
          FROM pairs p JOIN marg ma ON ma.p_type = p.type_a
          JOIN marg mb ON mb.p_type = p.type_b
-         CROSS JOIN tot t""",
-    "conversion_latency" ->
+         CROSS JOIN tot t"""),
+    QuerySpec("conversion_latency", Relational.conversionLatency,
       s"""WITH att AS ($attributionOracle),
          l AS (SELECT touch_type, purchase_id,
                  (p_tu - touch_tu) // 1000000 AS lat_s
@@ -2185,17 +1879,11 @@ object SparkEntry {
                 max(CASE WHEN rn = (95 * n + 99) // 100 THEN lat_s END)::BIGINT
                   AS p95_lat_s,
                 max(lat_s)::BIGINT AS max_lat_s
-         FROM r GROUP BY 1""",
-    "hourly_profile" ->
-      """WITH cells AS (SELECT event_type, hour(ts)::BIGINT AS hr,
-                          count(*)::BIGINT AS n_events
-                        FROM events GROUP BY 1, 2),
-         tot AS (SELECT event_type, sum(n_events)::BIGINT AS n_type
-                 FROM cells GROUP BY 1)
-         SELECT c.event_type, c.hr, c.n_events,
-                ((1000 * c.n_events) // t.n_type)::BIGINT AS share_milli
-         FROM cells c JOIN tot t USING (event_type)""",
-    "kmv_union_est" ->
+         FROM r GROUP BY 1"""),
+    QuerySpec("hourly_profile", Relational.hourlyProfile, hourlyProfileOracle),
+    QuerySpec("hourly_profile_stream", StreamingMonitors.hourlyProfileStream,
+      hourlyProfileOracle, fixture = true),
+    QuerySpec("kmv_union_est", RefOps.kmvUnionEst,
       s"""WITH h AS (SELECT DISTINCT event_type, ($kmvHashSql) / 2.0^60 AS h
             FROM events),
          rk AS (SELECT event_type, h,
@@ -2229,8 +1917,8 @@ object SparkEntry {
                 e.est_union
          FROM est e JOIN ct ca ON ca.event_type = e.type_a
          JOIN ct cb ON cb.event_type = e.type_b
-         LEFT JOIN inter i ON i.type_a = e.type_a AND i.type_b = e.type_b""",
-    "order_gaps" ->
+         LEFT JOIN inter i ON i.type_a = e.type_a AND i.type_b = e.type_b"""),
+    QuerySpec("order_gaps", Relational.orderGaps,
       """WITH o AS (SELECT o_custkey, o_orderkey,
                       date_diff('day', DATE '1970-01-01',
                                 date_trunc('day', o_orderdate))::BIGINT AS d
@@ -2250,16 +1938,16 @@ object SparkEntry {
                 max(CASE WHEN rn = (n + 1) // 2 THEN gap_d END)::BIGINT
                   AS median_gap_d,
                 max(gap_d)::BIGINT AS max_gap_d
-         FROM r GROUP BY 1""",
-    "grouping_sets_events" ->
+         FROM r GROUP BY 1"""),
+    QuerySpec("grouping_sets_events", Relational.groupingSetsEvents,
       """SELECT event_type,
                 strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,
                 count(*) AS n_events
          FROM events
          GROUP BY GROUPING SETS (
            (event_type, strftime(date_trunc('day', ts), '%Y-%m-%d')),
-           (event_type), ())""",
-    "attribution_first_touch" ->
+           (event_type), ())"""),
+    QuerySpec("attribution_first_touch", Relational.attributionFirstTouch,
       s"""WITH e AS (SELECT event_id, user_id, event_type, epoch_us(ts) AS tu
             FROM events),
          t AS (SELECT user_id, event_id AS t_id, event_type AS t_type,
@@ -2277,8 +1965,8 @@ object SparkEntry {
          SELECT p.purchase_id, p.user_id, p.p_tu,
                 f.t_id AS touch_id, f.t_type AS touch_type,
                 f.t_tu AS touch_tu, f.t_tu IS NOT NULL AS attributed
-         FROM p LEFT JOIN f USING (purchase_id)""",
-    "session_stats" ->
+         FROM p LEFT JOIN f USING (purchase_id)"""),
+    QuerySpec("session_stats", RefOps.sessionStats,
       s"""WITH s AS ($sessionizeOracle),
          d AS (SELECT epoch(strptime(end_s, '%Y-%m-%d %H:%M:%S'))::BIGINT
                    - epoch(strptime(start_s, '%Y-%m-%d %H:%M:%S'))::BIGINT
@@ -2300,75 +1988,15 @@ object SparkEntry {
                 (SELECT max(dur_s) FROM d)::BIGINT AS max_dur_s,
                 (SELECT n_events FROM re, n
                  WHERE rn = (n_sessions + 1) // 2)::BIGINT AS median_events
-         FROM n""",
-    "anomalous_days" ->
-      """WITH daily AS (SELECT strftime(date_trunc('day', ts), '%Y-%m-%d')
-                          AS day, count(*)::BIGINT AS n_events
-                        FROM events GROUP BY 1),
-         n AS (SELECT count(*)::BIGINT AS n_days FROM daily),
-         med AS (SELECT n_events AS med_events FROM
-                   (SELECT n_events,
-                      row_number() OVER (ORDER BY n_events, day) AS rn
-                    FROM daily) r, n
-                 WHERE rn = (n_days + 1) // 2),
-         dev AS (SELECT d.day, d.n_events,
-                   abs(d.n_events - m.med_events)::BIGINT AS deviation
-                 FROM daily d CROSS JOIN med m),
-         mad AS (SELECT deviation AS mad_events FROM
-                   (SELECT deviation,
-                      row_number() OVER (ORDER BY deviation, day) AS rn
-                    FROM dev) r, n
-                 WHERE rn = (n_days + 1) // 2)
-         SELECT dev.day, dev.n_events, dev.deviation,
-                dev.deviation > 3 * mad.mad_events AS is_anomaly
-         FROM dev CROSS JOIN mad""",
-  ) ++ DataOps.oracles ++ DataOps.clusterStarOracle ++
-    DataOps.trainingSetOracle ++ ExtractOps.oracles ++
-    graft.multimodal.MultimodalOps.oracles
+         FROM n"""),
+    QuerySpec("anomalous_days", Relational.anomalousDays, anomalousDaysOracle),
+    QuerySpec("anomalous_days_stream", StreamingMonitors.anomalousDaysStream,
+      anomalousDaysOracle, fixture = true),
+  ) ++ DataOps.specs ++ ExtractOps.specs ++ MultimodalOps.specs)
 
-  /** The graded streaming faces (r18, r17 verdict #5) serve the
-    * IDENTICAL shared derive half over replayed monitor state, so each
-    * grades against its batch entry's oracle SQL verbatim — derive
-    * drift between the two faces hash-mismatches both by construction.
-    */
-  def oracleSql: Map[String, String] = {
-    val base = batchOracleSql
-    base ++ Map(
-      "lang_confusion_stream" -> base("lang_confusion"),
-      "hourly_profile_stream" -> base("hourly_profile"),
-      "anomalous_days_stream" -> base("anomalous_days"),
-      "cusum_days_stream" -> base("cusum_days"),
-      "theil_sen_stream" -> base("theil_sen"),
-      "mann_kendall_stream" -> base("mann_kendall")) ++
-      r20StreamFaces.map { case (k, (_, sql)) => k -> sql }
-  }
-
-  /** GRADUATED r20 (pre-validated in r19): the sketch monitors' replay
-    * faces ([[graft.streaming.StreamingMonitors]]) paired with SUBSET
-    * oracles that NEST the graded batch SQL verbatim (the N122
-    * discipline — drift in the batch oracle fails both entries) and
-    * project away only the exact-side fidelity columns, which need raw
-    * rows by definition. Every pair was validated cross-engine at
-    * sf0.01 in r19 with the driver's own compare semantics (column-
-    * sorted, dtype-normalized, value-exact) — MATCH on all four. Folded
-    * into [[queries]]/[[oracleSql]] above and listed in
-    * [[memoizedFixtureQueries]]; the chain's SF10_SET carries all four.
-    */
-  private[graft] def r20StreamFaces
-      : Map[String, ((SparkSession, String) => DataFrame, String)] = {
-    val base = batchOracleSql
-    Map(
-      "hll_distinct_stream" ->
-        ((graft.streaming.StreamingMonitors.hllDistinctStream _,
-          s"SELECT event_type, v_zero, sum_pow, est_raw FROM (${base("hll_distinct")}) t")),
-      "hll_sliding_7d_stream" ->
-        ((graft.streaming.StreamingMonitors.hllSliding7dStream _,
-          s"SELECT day, event_type, v_zero, sum_pow, est_raw, est FROM (${base("hll_sliding_7d")}) t")),
-      "quantile_sketch_stream" ->
-        ((graft.streaming.StreamingMonitors.quantileSketchStream _,
-          s"SELECT flag, q, n, n_registers, rank, est_hi FROM (${base("quantile_sketch")}) t")),
-      "weighted_quantile_stream" ->
-        ((graft.streaming.StreamingMonitors.weightedQuantileStream _,
-          s"SELECT flag, q, w_total, n_registers, rank, est_hi FROM (${base("weighted_quantile_sketch")}) t")))
-  }
+  // The views of the registry that Bench, Verify, PlanDump and ExplainTool read.
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+  val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracleSql).toMap
+  val memoizedFixtureQueries: Set[String] = registry.filter(_.fixture).map(_.name).toSet
 }

@@ -3,6 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QuerySpec
 import graft.queries.Tables
 
 /** Multimodal columns for a training-data pipeline: media payloads ride
@@ -458,10 +459,10 @@ object MultimodalOps {
         length(expr("substring(payload, frame_off, 256)")).as("frame_bytes"),
         md5(expr("substring(payload, frame_off, 256)")).as("frame_hash"))
 
-  val oracles: Map[String, String] = Map(
+  val specs: Seq[QuerySpec] = Seq(
     // DuckDB 1.0 lacks substring over BLOB; the payload bytes ARE the
     // ascii text bytes, so the oracle slices the VARCHAR — byte-identical.
-    "frame_sample" -> """
+    QuerySpec("frame_sample", frameSample, """
       WITH media AS (
         SELECT doc_id,
                ['image', 'audio', 'video'][(doc_id % 3)::INT + 1] AS format,
@@ -474,8 +475,8 @@ object MultimodalOps {
              ((frame_off - 1) // 256)::INT AS frame_idx,
              length(substring(payload, frame_off::INT, 256)) AS frame_bytes,
              md5(substring(payload, frame_off::INT, 256)) AS frame_hash
-      FROM fr""",
-    "multimodal_meta" -> """
+      FROM fr"""),
+    QuerySpec("multimodal_meta", multimodalMeta, """
       WITH media AS (
         SELECT doc_id,
                ['image', 'audio', 'video'][(doc_id % 3)::INT + 1] AS format,
@@ -486,6 +487,6 @@ object MultimodalOps {
              (octet_length(payload) + 255) // 256 AS n_chunks,
              len(range(1, octet_length(payload) + 1, 256)) AS n_frames,
              md5(payload::VARCHAR) AS content_hash
-      FROM media""",
+      FROM media"""),
   )
 }

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.QuerySpec
 import graft.ml.VectorOps
+import graft.streaming.StreamingMonitors
 import graft.text.{TextOps, UrlOps}
 
 /** LLM-training-data pipeline operators over the driver's `documents`
@@ -6763,10 +6765,11 @@ object DataOps {
 
   // ------------------------------------------------------------- oracles
 
-  /** DuckDB 1.0 oracle SQL, one per query above, built from the same
-    * constants (salts, marker sets, thresholds) as the Spark plans.
+  /** The graded queries above with their DuckDB 1.0 oracle SQL, built
+    * from the same constants (salts, marker sets, thresholds) as the
+    * Spark plans.
     */
-  val oracles: Map[String, String] = {
+  val specs: Seq[QuerySpec] = {
     def hd(e: String, p: Int) = s"(instr('0123456789abcdef', substr($e, $p, 1)) - 1)"
     // the md5-mod 1/4 sample draw shared by the graded sampled recall
     // monitors — mirrors the Spark side's conv(substr(md5(id), 1, 8))
@@ -7089,41 +7092,44 @@ object DataOps {
     val doremiTraj = (0 to DoremiRounds).map(r =>
       s"SELECT ${r}::BIGINT AS round, lang, excess, w FROM w$r")
       .mkString("\n          UNION ALL ")
-    val base = Map(
-      "dedup_exact" ->
-        """SELECT md5(text) AS text_hash, min(doc_id) AS rep_doc_id,
-           count(*) AS n_docs FROM documents GROUP BY 1""",
-      // r13b: MOSS winnowing — one fingerprint (min (hash, pos), packed
-      // into hash*1e6+pos so a plain windowed MIN carries the tie rule)
-      // per window of 5 consecutive 4-gram hashes; graded per doc as the
-      // selected set's (count, sum, min, max, position-sum).
-      "winnowing" -> s"""
-        WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        p AS (SELECT doc_id, w, unnest(generate_series(1, len(w) - 3)) AS i
-              FROM t WHERE len(w) >= 4),
-        g AS (SELECT doc_id, i - 1 AS pos,
-                ${hex8("array_to_string(w[i:i+3], ' ')")} AS hv
-              FROM p),
-        h AS (SELECT doc_id, pos,
-                count(*) OVER (PARTITION BY doc_id) AS ng,
-                min(hv * 1000000 + pos) OVER (PARTITION BY doc_id
-                  ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING)
-                  AS key
-              FROM g),
-        d AS (SELECT DISTINCT doc_id, ng, key FROM h WHERE pos <= ng - 5)
-        SELECT doc_id, ng::BIGINT AS n_grams, count(*)::BIGINT AS n_fps,
-               sum(key // 1000000)::BIGINT AS fp_sum,
-               min(key // 1000000)::BIGINT AS fp_min,
-               max(key // 1000000)::BIGINT AS fp_max,
-               sum(key % 1000000)::BIGINT AS pos_sum
-        FROM d GROUP BY doc_id, ng""",
-      // r13: exact-substring dedup — the oracle materializes every
-      // L-gram STRING and groups (the L× blowup form); the Spark side
-      // runs the prefix-doubling equality classes. Agreement proves the
-      // doubling classes are exact L-gram equality.
-      "substring_dedup" -> {
-        val L = SubstringL
-        s"""
+    // oracles that later entries nest verbatim (drift fails them all)
+    val docQualitySql = """
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        m AS (SELECT doc_id, len(w) AS n, len(list_distinct(w)) AS nd,
+                list_max(list_transform(list_distinct(w),
+                  t -> len(list_filter(w, x -> x = t)))) AS mx
+              FROM toks)
+        SELECT doc_id,
+               ((400 * least(n, 50)) // 50 + (800 * nd) // n
+                + 200 - (200 * mx) // n)::BIGINT AS score_milli,
+               ((400 * least(n, 50)) // 50 + (800 * nd) // n
+                + 200 - (200 * mx) // n) >= 750 AS kept
+        FROM m"""
+
+    val hashEmbedSql = s"""
+        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
+        th AS (SELECT doc_id, md5('hemb:' || t) AS hh FROM tok),
+        hv AS (SELECT doc_id, ($h32) AS h FROM th)
+        SELECT doc_id, (h % $HashEmbedDims)::BIGINT AS dim,
+               sum(CASE WHEN (h // $HashEmbedDims) % 2 = 0 THEN 1 ELSE -1 END)::BIGINT AS weight
+        FROM hv GROUP BY 1, 2"""
+
+    val int8CodesSql = """
+        WITH ex AS (SELECT vec_id,
+               list_max(list_transform(embedding, x -> abs(x::DOUBLE)))
+                 AS maxabs,
+               unnest(list_transform(range(1, len(embedding) + 1),
+                 i -> {'pos': i - 1, 'v': embedding[i]})) AS u
+             FROM embeddings)
+        SELECT vec_id, u.pos::INT AS pos,
+               CASE WHEN maxabs = 0.0 THEN 0
+                    ELSE round(u.v::DOUBLE * 127.0 / maxabs)::INT
+               END AS code
+        FROM ex"""
+
+    val substringDedupSql = {
+      val L = SubstringL
+      s"""
         WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         p AS (SELECT doc_id, w,
                 unnest(generate_series(1, len(w) - ${L - 1})) AS i
@@ -7144,281 +7150,9 @@ object DataOps {
         SELECT doc_id, min(s)::BIGINT AS span_start,
                max(e)::BIGINT AS span_end
         FROM isl GROUP BY doc_id, grp"""
-      },
-      // r14: exact-substring decontamination — the L-gram class
-      // relation replayed as materialized gram strings; eval cohort =
-      // doc_id % 97 (the decontaminate cohort), hits counted per
-      // training doc
-      "substring_decontaminate" -> {
-        val L = SubstringL
-        s"""
-        WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        p AS (SELECT doc_id, w,
-                unnest(generate_series(1, len(w) - ${L - 1})) AS i
-              FROM t WHERE len(w) >= $L),
-        g AS (SELECT doc_id, array_to_string(w[i:i+${L - 1}], ' ') AS gram
-              FROM p),
-        ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
-        hits AS (SELECT doc_id, count(*)::BIGINT AS n_eval_grams
-                 FROM g WHERE doc_id % 97 <> 0
-                   AND gram IN (SELECT gram FROM ev)
-                 GROUP BY 1)
-        SELECT d.doc_id, d.lang,
-               coalesce(h.n_eval_grams, 0)::BIGINT AS n_eval_grams,
-               coalesce(h.n_eval_grams, 0) > 0 AS contaminated
-        FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
-        WHERE d.doc_id % 97 <> 0"""
-      },
-      // r13: keep-one — canonical occurrence per duplicated gram =
-      // first by (doc_id, position), mirrored by rn = 1 per gram
-      "substring_spans_keep_one" -> {
-        val L = SubstringL
-        s"""
-        WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        p AS (SELECT doc_id, w,
-                unnest(generate_series(1, len(w) - ${L - 1})) AS i
-              FROM t WHERE len(w) >= $L),
-        g AS (SELECT doc_id, i AS s, i + ${L - 1} AS e,
-                array_to_string(w[i:i+${L - 1}], ' ') AS gram FROM p),
-        occ AS (SELECT doc_id, s, e,
-                  row_number() OVER (PARTITION BY gram ORDER BY doc_id, s)
-                    AS rn,
-                  count(*) OVER (PARTITION BY gram) AS n
-                FROM g),
-        cov AS (SELECT doc_id, s, e FROM occ WHERE n >= 2 AND rn > 1),
-        m AS (SELECT doc_id, s, e,
-                max(e) OVER (PARTITION BY doc_id ORDER BY s
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe
-              FROM cov),
-        isl AS (SELECT doc_id, s, e,
-                sum(CASE WHEN maxe IS NULL OR s > maxe + 1
-                    THEN 1 ELSE 0 END)
-                  OVER (PARTITION BY doc_id ORDER BY s) AS grp FROM m)
-        SELECT doc_id, min(s)::BIGINT AS span_start,
-               max(e)::BIGINT AS span_end
-        FROM isl GROUP BY doc_id, grp"""
-      },
-      "int8_codes" -> """
-        WITH ex AS (SELECT vec_id,
-               list_max(list_transform(embedding, x -> abs(x::DOUBLE)))
-                 AS maxabs,
-               unnest(list_transform(range(1, len(embedding) + 1),
-                 i -> {'pos': i - 1, 'v': embedding[i]})) AS u
-             FROM embeddings)
-        SELECT vec_id, u.pos::INT AS pos,
-               CASE WHEN maxabs = 0.0 THEN 0
-                    ELSE round(u.v::DOUBLE * 127.0 / maxabs)::INT
-               END AS code
-        FROM ex""",
-      "kmeans_assign" -> s"""
-        ${kmeansCtes(k = 8, iters = 3, subDim = None)}
-        SELECT vec_id, cluster::INT AS cluster FROM a2""",
-      // r15: cluster-balanced diversity sample — the final Lloyd
-      // round's distances re-ranked per cluster; the doubles are the
-      // same order-pinned folds kmeans_assign already grades, so the
-      // (dist2, vec_id) rank is engine-exact even though dist2 itself
-      // stays out of the graded columns
-      "diversity_sample" -> s"""
-        ${kmeansCtes(k = 8, iters = 3, subDim = None)},
-        win AS (SELECT dd.m, dd.vec_id, dd.cid, dd.d2,
-                  row_number() OVER (PARTITION BY dd.m, dd.vec_id
-                                     ORDER BY dd.d2, dd.cid) AS rn
-                FROM d2 dd),
-        rep AS (SELECT vec_id, cid AS cluster, d2 FROM win WHERE rn = 1),
-        rnk AS (SELECT vec_id, cluster,
-                  (row_number() OVER (PARTITION BY cluster
-                                      ORDER BY d2, vec_id))::BIGINT AS rk
-                FROM rep)
-        SELECT vec_id, cluster::INT AS cluster, rk
-        FROM rnk WHERE rk <= 16""",
-      "pq_codes" -> s"""
-        ${kmeansCtes(k = PqK, iters = PqIters, subDim = Some(PqSubDim),
-          trainCap = Some(PqTrainCap))}
-        SELECT vec_id, m::INT AS m, cluster::INT AS code FROM a1""",
-      // r16: the IVF ANN probe path graded end-to-end — the unrolled
-      // Lloyd chain's LAST round gives each query's centroid distances
-      // (quantizer-consistent: probes rank against the centroids the
-      // inverted lists were filed under), only the IvfProbe nearest
-      // lists are scanned, and the in-list cosine reuses the
-      // ann_cosine_topk fold (rank on the raw double, round after).
-      "ann_ivf" -> s"""
-        ${kmeansCtes(k = IvfK, iters = IvfIters, subDim = None)},
-        pr AS (SELECT q_id, cluster FROM (
-                 SELECT vec_id AS q_id, cid AS cluster,
-                   row_number() OVER (PARTITION BY vec_id
-                                      ORDER BY d2, cid) AS prn
-                 FROM d${IvfIters - 1} WHERE vec_id < 5)
-               WHERE prn <= $IvfProbe),
-        nv AS (SELECT vec_id, embedding,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        qv AS (SELECT vec_id AS q_id, embedding AS qe, nrm AS qn
-               FROM nv WHERE vec_id < 5),
-        cand AS (SELECT p.q_id, a.vec_id
-                 FROM pr p JOIN a${IvfIters - 1} a
-                   ON a.cluster = p.cluster AND a.vec_id <> p.q_id),
-        sc AS (SELECT c.q_id, c.vec_id,
-                 ${dot("q.qe", "n.embedding")} / (q.qn * n.nrm) AS cr
-               FROM cand c JOIN qv q ON q.q_id = c.q_id
-               JOIN nv n ON n.vec_id = c.vec_id),
-        rnk AS (SELECT q_id, vec_id, cr,
-                  row_number() OVER (PARTITION BY q_id
-                                     ORDER BY cr DESC, vec_id) AS rk
-                FROM sc)
-        SELECT q_id, vec_id, round(cr, 4) + 0.0 AS cos, rk
-        FROM rnk WHERE rk <= 8""",
-      // r17 (r16 verdict #7): the PQ/ADC two-stage search graded end to
-      // end. The quantizer chain is the SAME subspaced unrolled-Lloyd
-      // CTE chain pq_codes already grades: d1 IS the exact ADC lookup
-      // table (every vector's per-subspace d² to every c1 centroid) —
-      // filtered to the query batch it is LUT[m][cid]; a1 IS the code
-      // table. ADC distance folds the M lookups in subspace order (the
-      // order-pinned-fold discipline), the shortlist ranks on the raw
-      // double with vec_id ties, and the exact re-rank replays the
-      // dimension-ordered (x-y)² fold on the full vectors. Rounding to
-      // 4 places happens AFTER both ranks (the ann_ivf dialect).
-      "ann_pq" -> s"""
-        ${kmeansCtes(k = PqK, iters = PqIters, subDim = Some(PqSubDim),
-          trainCap = Some(PqTrainCap))},
-        lut AS (SELECT vec_id AS q_id, m, cid, d2
-                FROM d${PqIters - 1} WHERE vec_id < 5),
-        adc AS (SELECT l.q_id, a.vec_id,
-                  list_aggregate(list_transform(
-                    list_sort(list({'m': l.m, 's': l.d2})), x -> x.s),
-                    'sum') AS adc_d2
-                FROM a${PqIters - 1} a
-                JOIN lut l ON l.m = a.m AND l.cid = a.cluster
-                WHERE a.vec_id <> l.q_id
-                GROUP BY l.q_id, a.vec_id),
-        sl AS (SELECT q_id, vec_id, adc_d2 FROM (
-                 SELECT q_id, vec_id, adc_d2,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY adc_d2, vec_id) AS srn
-                 FROM adc)
-               WHERE srn <= $PqShortlist),
-        fv AS (SELECT vec_id,
-                 list_transform(embedding, x -> x::DOUBLE) AS fe
-               FROM embeddings),
-        rer AS (SELECT s.q_id, s.vec_id, s.adc_d2,
-                  list_aggregate(list_transform(
-                    range(1, len(q.fe) + 1),
-                    i -> (q.fe[i] - x.fe[i]) * (q.fe[i] - x.fe[i])),
-                    'sum') AS d2
-                FROM sl s JOIN fv q ON q.vec_id = s.q_id
-                JOIN fv x ON x.vec_id = s.vec_id),
-        prnk AS (SELECT q_id, vec_id, d2, adc_d2,
-                   row_number() OVER (PARTITION BY q_id
-                                      ORDER BY d2, vec_id) AS rk
-                 FROM rer)
-        SELECT q_id, vec_id, round(d2, 4) AS d2,
-               round(adc_d2, 4) AS adc_d2, rk
-        FROM prnk WHERE rk <= 8""",
-      // r16: N56's graded face — the post-compaction band table
-      // replayed from the documents table through the shared
-      // minhash-LSH dialect; generation pinned at 1 (bootstrap writes
-      // gen 0, the one compaction publishes 1), so a compaction that
-      // dropped, duplicated, or re-ranked any row — or never swapped
-      // the pointer — hash-mismatches.
-      "index_compaction" -> s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
-                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-                FROM toks WHERE len(w) >= 3),
-        sig AS (SELECT doc_id, $mh FROM shx),
-        bnd AS (SELECT doc_id, $bands FROM sig),
-        bl AS (SELECT doc_id, unnest([$bandStructs]) AS u FROM bnd),
-        gen AS (SELECT doc_id, u.b AS b, u.h AS h,
-                       row_number() OVER (PARTITION BY u.b, u.h
-                                          ORDER BY doc_id) AS rk
-                FROM bl)
-        SELECT doc_id, b::INT AS b, h, rk, 1::BIGINT AS generation
-        FROM gen""",
-      "dedup_minhash_lsh" -> minhashLshSql,
-      // estimator-fidelity face: per LSH candidate pair, agreeing
-      // signature components next to the exact verified Jaccard
-      "minhash_estimate" -> {
-        val matchSum = (0 until MinhashK)
-          .map(j => s"CASE WHEN sa.mh$j = sb.mh$j THEN 1 ELSE 0 END")
-          .mkString(" + ")
-        s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
-                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-                FROM toks WHERE len(w) >= 3),
-        sig AS (SELECT doc_id, $mh FROM shx),
-        bnd AS (SELECT doc_id, $bands FROM sig),
-        bl AS (SELECT doc_id, unnest([$bandStructs]) AS u FROM bnd),
-        gen AS (SELECT doc_id, u.b AS b, u.h AS h,
-                       row_number() OVER (PARTITION BY u.b, u.h ORDER BY doc_id) AS rk
-                FROM bl),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                 FROM gen a JOIN bl b ON a.b = b.u.b AND a.h = b.u.h
-                  AND a.doc_id < b.doc_id
-                 WHERE a.rk <= $BandBucketCap),
-        m AS (SELECT c.doc_a, c.doc_b, ($matchSum)::BIGINT AS matches
-              FROM cand c JOIN sig sa ON sa.doc_id = c.doc_a
-              JOIN sig sb ON sb.doc_id = c.doc_b),
-        ex AS (SELECT doc_id, unnest(sh) AS s FROM shx),
-        inter AS (SELECT c.doc_a, c.doc_b, count(*) AS i
-                  FROM cand c JOIN ex ea ON ea.doc_id = c.doc_a
-                  JOIN ex eb ON eb.doc_id = c.doc_b AND eb.s = ea.s
-                  GROUP BY 1, 2),
-        sz AS (SELECT doc_id, len(sh) AS n FROM shx)
-        SELECT m.doc_a, m.doc_b, m.matches,
-               ((1000000 * m.matches) // $MinhashK)::BIGINT AS est_ppm,
-               round(coalesce(i.i, 0)::DOUBLE
-                 / (sa.n + sb.n - coalesce(i.i, 0)), 3) AS jaccard
-        FROM m LEFT JOIN inter i ON i.doc_a = m.doc_a AND i.doc_b = m.doc_b
-        JOIN sz sa ON sa.doc_id = m.doc_a
-        JOIN sz sb ON sb.doc_id = m.doc_b"""
-      },
-      "dedup_incremental" -> s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
-                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-                FROM toks WHERE len(w) >= 3),
-        sig AS (SELECT doc_id, $mh FROM shx),
-        bnd AS (SELECT doc_id, $bands FROM sig),
-        bl AS (SELECT doc_id, unnest([$bandStructs]) AS u FROM bnd),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                 FROM bl a JOIN bl b ON a.u.b = b.u.b AND a.u.h = b.u.h
-                  AND a.doc_id < b.doc_id
-                 WHERE a.doc_id % 2 = 0 OR b.doc_id % 2 = 0),
-        ex AS (SELECT doc_id, unnest(sh) AS s FROM shx),
-        inter AS (SELECT c.doc_a, c.doc_b, count(*) AS i
-                  FROM cand c JOIN ex ea ON ea.doc_id = c.doc_a
-                  JOIN ex eb ON eb.doc_id = c.doc_b AND eb.s = ea.s
-                  GROUP BY 1, 2),
-        sz AS (SELECT doc_id, len(sh) AS n FROM shx)
-        SELECT i2.doc_a, i2.doc_b,
-               CASE WHEN i2.doc_a % 2 = 0 AND i2.doc_b % 2 = 0
-                    THEN 'new_new' ELSE 'new_hist' END AS pair_type,
-               round(i2.i::DOUBLE / (sa.n + sb.n - i2.i), 3) AS jaccard
-        FROM inter i2 JOIN sz sa ON sa.doc_id = i2.doc_a
-        JOIN sz sb ON sb.doc_id = i2.doc_b
-        WHERE round(i2.i::DOUBLE / (sa.n + sb.n - i2.i), 3) >= 0.8""",
-      "ngram_jaccard" -> ngramSql("0.5"),
-      // r13: TRUE containment join — same naive postings self-join, the
-      // asymmetric metric; the Spark side's probe/index prefix split is
-      // lossless, so the sets coincide
-      "containment_join" -> s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
-                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-                FROM toks WHERE len(w) >= 3),
-        ex AS (SELECT doc_id, unnest(sh) AS s FROM shx),
-        inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-                    count(*) AS i
-                  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-                  GROUP BY 1, 2),
-        sz AS (SELECT doc_id, len(sh) AS n FROM shx)
-        SELECT i2.doc_a, i2.doc_b,
-               round(i2.i::DOUBLE / least(sa.n, sb.n), 3) AS containment
-        FROM inter i2 JOIN sz sa ON sa.doc_id = i2.doc_a
-        JOIN sz sb ON sb.doc_id = i2.doc_b
-        WHERE round(i2.i::DOUBLE / least(sa.n, sb.n), 3)
-          >= $ContainmentThreshold""",
-      "dedup_simhash" -> s"""
+    }
+
+    val dedupSimhashSql = s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         big AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w)),
                 i -> w[i] || ' ' || w[i+1])) AS g FROM toks WHERE len(w) >= 2),
@@ -7437,134 +7171,9 @@ object DataOps {
                   AND ((a.fp >> (a.band * 8)) & 255) = ((b.fp >> (b.band * 8)) & 255)
                   AND a.doc_id < b.doc_id)
         SELECT doc_a, doc_b, fp_a, fp_b, bit_count(xor(fp_a, fp_b)) AS hamming
-        FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3""",
-      "doc_fingerprint" -> s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        th AS (SELECT doc_id, unnest(list_transform(range(1, len(w) + 1),
-                 i -> {'i': i, 'hh': md5('fp:' || w[i])})) AS u FROM toks),
-        tb AS (SELECT doc_id, u.i AS i,
-                 (${hd("u.hh", 1)}*4096 + ${hd("u.hh", 2)}*256 + ${hd("u.hh", 3)}*16 + ${hd("u.hh", 4)}) AS h
-               FROM th)
-        SELECT doc_id, (sum(i::BIGINT * h::BIGINT) % 1000003)::BIGINT AS fp
-        FROM tb GROUP BY 1""",
-      "normalize_text" -> """
-        WITH noisy AS (SELECT doc_id, text,
-          CASE WHEN doc_id % 3 = 0 THEN chr(8203) || upper(text) || '  ' || chr(9)
-               WHEN doc_id % 3 = 1 THEN regexp_replace(text, 'a', 'a' || chr(769), 'g')
-               ELSE text END AS raw FROM documents),
-        n AS (SELECT doc_id, text,
-          trim(regexp_replace(regexp_replace(lower(nfc_normalize(raw)),
-            '[' || chr(8203) || chr(8204) || chr(8205) || chr(65279) || ']', '', 'g'),
-            '[ ' || chr(9) || chr(10) || chr(13) || chr(12) || ']+', ' ', 'g')) AS norm_text
-          FROM noisy)
-        SELECT doc_id, norm_text, norm_text != text AS changed,
-               length(norm_text) AS n_chars_norm FROM n""",
-      "dedup_normalized" -> s"""
-        WITH noisy AS (SELECT doc_id,
-          CASE WHEN doc_id % 3 = 0 THEN chr(8203) || upper(text) || '  ' || chr(9)
-               WHEN doc_id % 3 = 1 THEN regexp_replace(text, 'a', 'a' || chr(769), 'g')
-               ELSE text END AS raw FROM documents),
-        nrm AS (SELECT doc_id,
-          trim(regexp_replace(regexp_replace(lower(nfc_normalize(raw)),
-            '[' || chr(8203) || chr(8204) || chr(8205) || chr(65279) || ']', '', 'g'),
-            '[ ' || chr(9) || chr(10) || chr(13) || chr(12) || ']+', ' ', 'g')) AS text
-          FROM noisy),
-        toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM nrm),
-        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
-                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
-                FROM toks WHERE len(w) >= 3),
-        sig AS (SELECT doc_id, $mh FROM shx),
-        bnd AS (SELECT doc_id, $bands FROM sig),
-        bl AS (SELECT doc_id, unnest([$bandStructs]) AS u FROM bnd),
-        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-                 FROM bl a JOIN bl b ON a.u.b = b.u.b AND a.u.h = b.u.h
-                  AND a.doc_id < b.doc_id),
-        ex AS (SELECT doc_id, unnest(sh) AS s FROM shx),
-        inter AS (SELECT c.doc_a, c.doc_b, count(*) AS i
-                  FROM cand c JOIN ex ea ON ea.doc_id = c.doc_a
-                  JOIN ex eb ON eb.doc_id = c.doc_b AND eb.s = ea.s
-                  GROUP BY 1, 2),
-        sz AS (SELECT doc_id, len(sh) AS n FROM shx)
-        SELECT i2.doc_a, i2.doc_b,
-               round(i2.i::DOUBLE / (sa.n + sb.n - i2.i), 3) AS jaccard
-        FROM inter i2 JOIN sz sa ON sa.doc_id = i2.doc_a
-        JOIN sz sb ON sb.doc_id = i2.doc_b
-        WHERE round(i2.i::DOUBLE / (sa.n + sb.n - i2.i), 3) >= 0.8""",
-      "doc_text_stats" -> """
-        SELECT doc_id, len(w) AS n_tokens, len(list_distinct(w)) AS n_distinct,
-               round(list_aggregate(list_transform(w, t -> length(t)), 'sum')
-                     / len(w)::DOUBLE, 4) AS avg_len,
-               round(len(list_distinct(w)) / len(w)::DOUBLE, 4) AS ttr
-        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)""",
-      "lang_id" -> s"""
-        WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
-        sc AS (SELECT doc_id, lang, $markerScores FROM toks)
-        SELECT doc_id, ${langs.map(l => s"s_$l").mkString(", ")},
-               $predCase AS pred_lang, lang, ($predCase = lang) AS correct
-        FROM sc""",
-      "doc_quality" -> """
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        m AS (SELECT doc_id, len(w) AS n, len(list_distinct(w)) AS nd,
-                list_max(list_transform(list_distinct(w),
-                  t -> len(list_filter(w, x -> x = t)))) AS mx
-              FROM toks)
-        SELECT doc_id,
-               ((400 * least(n, 50)) // 50 + (800 * nd) // n
-                + 200 - (200 * mx) // n)::BIGINT AS score_milli,
-               ((400 * least(n, 50)) // 50 + (800 * nd) // n
-                + 200 - (200 * mx) // n) >= 750 AS kept
-        FROM m""",
-      "token_counts" -> """
-        SELECT doc_id, length(text) AS n_chars_text,
-               len(string_split(text, ' ')) AS ws_tokens,
-               len(regexp_extract_all(text, '[a-z]+')) AS re_tokens,
-               list_aggregate(list_transform(string_split(text, ' '),
-                 t -> (length(t) + 3) // 4), 'sum')::BIGINT AS subwords
-        FROM documents""",
-      // r13: the distributed BPE learner's oracle — all rounds unrolled
-      // as CTE chains (the kmeansCtes discipline), merge application
-      // replayed per round with a list_reduce fold identical to the
-      // Spark-side aggregate fold. An under-2-count winner empties its
-      // best CTE, and the cross join then empties every later round in
-      // both engines — early stop by structure.
-      "bpe_learn" -> {
-        val k = BpeLearnRounds
-        val rounds = (0 until k).map { r =>
-          s"""pc$r AS (SELECT p.l AS l, p.r AS r, sum(c)::BIGINT AS cnt
-                 FROM (SELECT c, unnest(list_transform(range(1, len(syms)),
-                        i -> {'l': syms[i], 'r': syms[i + 1]})) AS p
-                       FROM v$r WHERE len(syms) >= 2)
-                 GROUP BY 1, 2 HAVING sum(c) >= 2),
-             best$r AS (SELECT $r::BIGINT AS rank, l, r, l || r AS merged,
-                          cnt
-                        FROM pc$r ORDER BY cnt DESC, l, r LIMIT 1),
-             v${r + 1} AS (SELECT c,
-                 list_reduce(list_transform(syms, s -> [s]),
-                   (acc, x) -> CASE WHEN acc[-1] = b.l AND x[1] = b.r
-                     THEN list_append(list_slice(acc, 1, len(acc) - 1),
-                       b.l || b.r)
-                     ELSE list_append(acc, x[1]) END) AS syms
-               FROM v$r CROSS JOIN best$r b)"""
-        }.mkString(",\n")
-        s"""
-        WITH w AS (SELECT unnest(string_split(text, ' ')) AS word
-                   FROM documents),
-        wc AS (SELECT word, count(*)::BIGINT AS c FROM w
-               WHERE length(word) >= 1 GROUP BY 1),
-        v0 AS (SELECT c, list_transform(range(1, length(word) + 1),
-                 i -> substr(word, i, 1)) AS syms FROM wc),
-        $rounds
-        ${(0 until k).map(r =>
-          s"SELECT rank, l, r, merged, cnt FROM best$r").mkString(" UNION ALL ")}"""
-      },
-      "bpe_pair_counts" -> """
-        WITH w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
-        wc AS (SELECT word, count(*) AS c FROM w
-               WHERE length(word) >= 2 GROUP BY 1),
-        p0 AS (SELECT word, c, unnest(range(1, length(word)))::INT AS i FROM wc),
-        p AS (SELECT substr(word, i, 2) AS pair, c FROM p0)
-        SELECT pair, sum(c)::BIGINT AS cnt FROM p GROUP BY 1""",
-      "doc_repetition" -> """
+        FROM cand WHERE bit_count(xor(fp_a, fp_b)) <= 3"""
+
+    val docRepetitionSql = """
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         m AS (SELECT doc_id, len(w) AS n,
                 list_max(list_transform(list_distinct(w),
@@ -7579,8 +7188,13 @@ object DataOps {
               FROM m)
         SELECT doc_id, n, top_word_milli, dup_bigram_milli,
                (top_word_milli <= 200 AND dup_bigram_milli <= 200) AS kept
-        FROM r""",
-      "dedup_paragraphs" -> s"""
+        FROM r"""
+
+    val dedupExactSql =
+      """SELECT md5(text) AS text_hash, min(doc_id) AS rep_doc_id,
+           count(*) AS n_docs FROM documents GROUP BY 1"""
+
+    val dedupParagraphsSql = s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         planted AS (SELECT doc_id,
             (CASE WHEN doc_id % 5 = 0 THEN ['$Boiler1'] ELSE [] END)
@@ -7603,320 +7217,15 @@ object DataOps {
         SELECT t.doc_id, len(t.ps)::BIGINT AS n_before,
                coalesce(a.n_after, 0)::BIGINT AS n_after,
                coalesce(a.text_clean, '') AS text_clean
-        FROM planted t LEFT JOIN agg a ON a.doc_id = t.doc_id""",
-      "hash_embed" -> s"""
-        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-        th AS (SELECT doc_id, md5('hemb:' || t) AS hh FROM tok),
-        hv AS (SELECT doc_id, ($h32) AS h FROM th)
-        SELECT doc_id, (h % $HashEmbedDims)::BIGINT AS dim,
-               sum(CASE WHEN (h // $HashEmbedDims) % 2 = 0 THEN 1 ELSE -1 END)::BIGINT AS weight
-        FROM hv GROUP BY 1, 2""",
-      "doc_rarity" -> """
-        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-        vocab AS (SELECT t, count(*) AS tf FROM tok GROUP BY 1)
-        SELECT doc_id, count(*)::BIGINT AS n_tokens, min(tf)::BIGINT AS min_tf,
-               sum(tf)::BIGINT AS sum_tf,
-               round(sum(tf) / count(*)::DOUBLE, 4) AS mean_tf
-        FROM tok JOIN vocab USING (t) GROUP BY 1""",
-      "dup_windows" -> s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        wn AS (SELECT doc_id, u.pos AS pos, u.wt AS wt FROM
-                 (SELECT doc_id, unnest(list_transform(range(1, len(w) - ${DupWindowTokens - 2}),
-                    i -> {'pos': i, 'wt': list_aggregate(w[i : i+${DupWindowTokens - 1}],
-                           'string_agg', ' ')})) AS u
-                  FROM toks WHERE len(w) >= $DupWindowTokens)),
-        cnt AS (SELECT wt, count(*) AS c FROM wn GROUP BY 1),
-        per AS (SELECT w2.doc_id, count(*)::BIGINT AS n_windows,
-                  (count(*) FILTER (cnt.c >= 2))::BIGINT AS n_dup
-                FROM wn w2 JOIN cnt ON cnt.wt = w2.wt GROUP BY 1)
-        SELECT doc_id, n_windows, n_dup,
-               ((1000 * n_dup) // n_windows)::BIGINT AS dup_frac_milli,
-               n_dup > 0 AS flagged
-        FROM per""",
-      "dedup_spans" -> s"""
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        wn AS (SELECT doc_id, u.pos AS pos, u.wt AS wt FROM
-                 (SELECT doc_id, unnest(list_transform(range(1, len(w) - ${DupWindowTokens - 2}),
-                    i -> {'pos': i, 'wt': list_aggregate(w[i : i+${DupWindowTokens - 1}],
-                           'string_agg', ' ')})) AS u
-                  FROM toks WHERE len(w) >= $DupWindowTokens)),
-        winner AS (SELECT wt, min(doc_id*1000000+pos) AS win, count(*) AS c
-                   FROM wn GROUP BY 1),
-        cover AS (SELECT DISTINCT wn.doc_id, wn.pos + t.u AS i
-                  FROM wn JOIN winner ON winner.wt = wn.wt
-                  CROSS JOIN unnest(range(0, $DupWindowTokens)) AS t(u)
-                  WHERE winner.c >= 2 AND wn.doc_id*1000000 + wn.pos != winner.win),
-        tn AS (SELECT doc_id, u.i AS i, u.tok AS tok FROM
-                 (SELECT doc_id, unnest(list_transform(range(1, len(w)+1),
-                    i -> {'i': i, 'tok': w[i]})) AS u FROM toks)),
-        mk AS (SELECT tn.doc_id, tn.i, tn.tok, (cover.i IS NOT NULL) AS rm
-               FROM tn LEFT JOIN cover ON cover.doc_id = tn.doc_id AND cover.i = tn.i)
-        SELECT doc_id, count(*)::BIGINT AS n_tokens,
-               (count(*) FILTER (rm))::BIGINT AS n_removed,
-               coalesce(string_agg(tok, ' ' ORDER BY i) FILTER (NOT rm), '') AS text_dedup
-        FROM mk GROUP BY 1""",
-      "url_canonical" -> s"""
-        WITH u AS (SELECT doc_id, $urlSynthSql AS url_raw FROM documents),
-        c AS (SELECT doc_id, url_raw, $urlCanonSql AS url_canon FROM u)
-        SELECT doc_id, url_raw, url_canon,
-               regexp_extract(url_canon, '^[a-z]+://([^/:?#]+)', 1) AS host,
-               url_canon != url_raw AS changed
-        FROM c""",
-      "domain_stats" -> s"""
-        WITH u AS (SELECT doc_id, n_chars, $urlSynthSql AS url_raw FROM documents),
-        c AS (SELECT n_chars, $urlCanonSql AS url_canon FROM u),
-        h AS (SELECT n_chars, url_canon,
-                regexp_extract(url_canon, '^[a-z]+://([^/:?#]+)', 1) AS host FROM c)
-        SELECT host, count(*)::BIGINT AS n_docs,
-               count(DISTINCT url_canon)::BIGINT AS n_pages,
-               round(avg(n_chars), 2) AS avg_chars
-        FROM h GROUP BY 1""",
-      // Mergeable stats: the oracle aggregates the FULL corpus directly;
-      // the Spark side computes per-half stats and MERGES — hash equality
-      // proves merge == direct cross-engine (exact KMV union property).
-      "stats_merge" -> s"""
-        WITH s AS (SELECT lang, doc_id, n_chars,
-                     len(string_split(text, ' ')) AS n_tok, md5(text) AS h
-                   FROM documents)
-        SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
-               sum(n_tok)::BIGINT AS total_tokens,
-               min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id,
-               array_to_string(list_slice(list_sort(list(DISTINCT h)), 1, $StatsKmvK), ',')
-                 AS kmv_sig
-        FROM s GROUP BY lang""",
-      // Stupid-Backoff trained state: occurrence counts per n-gram order.
-      // range(1, len-n+2) is empty when the doc is shorter than the
-      // order — the same guard as the Spark CASE.
-      "sb_ngram_counts" -> (1 to SbMaxOrder).map(n => s"""
-        SELECT $n AS n, gram, count(*)::BIGINT AS cnt FROM (
-          SELECT unnest(list_transform(range(1, len(w) - $n + 2),
-                   i -> array_to_string(w[i:i+${n - 1}], ' '))) AS gram
-          FROM (SELECT string_split(text, ' ') AS w FROM documents))
-        GROUP BY 2""").mkString(" UNION ALL "),
-      // Kneser-Ney continuation counts: distinct-bigram frame, per-word
-      // distinct left/right context counts, ppm-quantized KN unigram
-      "kn_continuation" -> """
-        WITH sp AS (SELECT DISTINCT string_split(gram, ' ')[1] AS w1,
-                      string_split(gram, ' ')[2] AS w2 FROM (
-            SELECT unnest(list_transform(range(1, len(w)),
-                     i -> w[i] || ' ' || w[i+1])) AS gram
-            FROM (SELECT string_split(text, ' ') AS w FROM documents))),
-        tot AS (SELECT count(*)::BIGINT AS nd FROM sp),
-        l AS (SELECT w2 AS word, count(*)::BIGINT AS left_cont
-              FROM sp GROUP BY 1),
-        r AS (SELECT w1 AS word, count(*)::BIGINT AS right_cont
-              FROM sp GROUP BY 1)
-        SELECT l.word, l.left_cont,
-               coalesce(r.right_cont, 0)::BIGINT AS right_cont,
-               ((1000000 * l.left_cont) // tot.nd)::BIGINT AS p_cont_ppm
-        FROM l LEFT JOIN r ON r.word = l.word CROSS JOIN tot""",
-      // Gini concentration: sorted-cumulative identity over (lang,
-      // source) cells, ppm-quantized integer div
-      "source_gini" -> """
-        WITH c AS (SELECT lang, source, count(*)::BIGINT AS c
-                   FROM documents GROUP BY 1, 2),
-        r AS (SELECT lang, c,
-                row_number() OVER (PARTITION BY lang ORDER BY c, source) AS i,
-                count(*) OVER (PARTITION BY lang) AS n,
-                sum(c) OVER (PARTITION BY lang) AS t FROM c)
-        SELECT lang, max(n)::BIGINT AS n_sources, max(t)::BIGINT AS n_docs,
-               ((1000000 * (2*sum(i*c) - (max(n)+1)*max(t)))
-                 // (max(n)*max(t)))::BIGINT AS gini_ppm
-        FROM r GROUP BY 1""",
-      // Mann-Whitney rank-sum: doubled ranks (2*min_rank + tie_size - 1)
-      // keep tie-averaged ranks integer; u2x = r2x - n(n+1)
-      "rank_sum" -> """
-        WITH rk AS (SELECT lang,
-               2*rank() OVER (ORDER BY n_chars)
-                 + count(*) OVER (PARTITION BY n_chars) - 1 AS dr
-             FROM documents)
-        SELECT lang, count(*)::BIGINT AS n, sum(dr)::BIGINT AS r2x,
-               (sum(dr) - count(*)*(count(*)+1))::BIGINT AS u2x
-        FROM rk GROUP BY 1""",
-      // Largest-remainder allocation: base floor quotas + remainder-ranked
-      // extra seats summing to exactly AllocK
-      // r15: temperature-mixture allocation — the same floor(sqrt) on
-      // the same BIGINT mass (IEEE sqrt correctly rounded, masses far
-      // below 2^52, so both engines floor the same double), then
-      // largest-remainder apportionment of B = total div 2
-      "temperature_allocation" -> """
-        WITH m AS (SELECT lang,
-               sum(len(string_split(text, ' ')))::BIGINT AS n
-             FROM documents GROUP BY 1),
-        s AS (SELECT lang, n, floor(sqrt(n::DOUBLE))::BIGINT AS sq FROM m),
-        t AS (SELECT sum(sq)::BIGINT AS ts, sum(n)::BIGINT AS tn,
-                (sum(n) // 2)::BIGINT AS b FROM s),
-        base AS (SELECT lang, n, sq, t.ts, t.tn, t.b,
-                   ((t.b * sq) // t.ts)::BIGINT AS base,
-                   ((t.b * sq) % t.ts)::BIGINT AS rem
-                 FROM s CROSS JOIN t),
-        g AS (SELECT sum(base)::BIGINT AS sb FROM base),
-        r AS (SELECT base.*, row_number() OVER (ORDER BY rem DESC, lang)
-                 AS rk FROM base)
-        SELECT r.lang, r.n AS n_tokens, r.sq,
-               (r.base + CASE WHEN r.rk <= r.b - g.sb THEN 1 ELSE 0 END)
-                 ::BIGINT AS alloc_tokens,
-               ((1000000 * r.n) // r.tn)::BIGINT AS natural_ppm,
-               ((1000000 * (r.base + CASE WHEN r.rk <= r.b - g.sb
-                                     THEN 1 ELSE 0 END)) // r.b)::BIGINT
-                 AS alloc_ppm
-        FROM r CROSS JOIN g""",
-      "exact_allocation" -> s"""
-        WITH c AS (SELECT lang, count(*)::BIGINT AS n
-                   FROM documents GROUP BY 1),
-        t AS (SELECT sum(n)::BIGINT AS tot FROM c),
-        b AS (SELECT lang, n, ($AllocK*n) // tot AS base,
-                ($AllocK*n) % tot AS rem FROM c CROSS JOIN t),
-        s AS (SELECT sum(base)::BIGINT AS sb FROM b),
-        r AS (SELECT lang, n, base, rem,
-                row_number() OVER (ORDER BY rem DESC, lang) AS rk FROM b)
-        SELECT r.lang, r.n AS n_docs, r.base::BIGINT AS base,
-               (CASE WHEN r.rk <= ($AllocK - s.sb) THEN 1 ELSE 0 END)::BIGINT
-                 AS extra,
-               (r.base + CASE WHEN r.rk <= ($AllocK - s.sb) THEN 1 ELSE 0 END)
-                 ::BIGINT AS alloc
-        FROM r CROSS JOIN s""",
-      // host-graph PageRank: the same fixed iterations the Spark loop
-      // runs, unrolled as chained CTEs (rK from rK-1); pure BIGINT mass
-      // so both engines agree bit-for-bit. The CTE chain is shared with
-      // host_cap_ranked (defined after `base`).
-      "host_rank" ->
-        s"""$hostRankCtes
-        SELECT host, rank AS rank_scaled FROM r$HostRankIters""",
-      // triangle enumeration on the shared factored host graph:
-      // orient low->high, then the two-hop closure join
-      "host_triangles" -> s"""$hostGraphCtes,
-        und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-                FROM edges),
-        tri AS (SELECT e1.a AS h1, e1.b AS h2, e2.b AS h3
-                FROM und e1 JOIN und e2 ON e2.a = e1.b
-                JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b)
-        SELECT h1, h2, h3 FROM tri""",
-      // all-pairs KS matrix: same quantized-CDF grid, pair join l1 < l2
-      "ks_matrix" -> """
-        WITH h AS (SELECT lang, n_chars, count(*)::BIGINT AS c
-                   FROM documents GROUP BY 1, 2),
-        vals AS (SELECT DISTINCT n_chars FROM documents),
-        langs AS (SELECT lang, sum(c)::BIGINT AS nl FROM h GROUP BY 1),
-        g2 AS (SELECT g.lang, g.nl, g.n_chars, coalesce(h.c, 0) AS c
-               FROM (SELECT l.lang, l.nl, v.n_chars
-                     FROM langs l CROSS JOIN vals v) g
-               LEFT JOIN h ON h.lang = g.lang AND h.n_chars = g.n_chars),
-        cl AS (SELECT lang, nl, n_chars,
-                 ((1000000 * sum(c) OVER (PARTITION BY lang
-                    ORDER BY n_chars)) // nl)::BIGINT AS f_ppm FROM g2)
-        SELECT x.lang AS l1, y.lang AS l2, max(x.nl)::BIGINT AS n1,
-               max(y.nl)::BIGINT AS n2,
-               max(abs(x.f_ppm - y.f_ppm))::BIGINT AS d_ppm
-        FROM cl x JOIN cl y
-          ON y.n_chars = x.n_chars AND y.lang > x.lang
-        GROUP BY 1, 2""",
-      // r13q t-closeness: exact-integer ordered EMD — class CDF vs the
-      // corpus CDF cross-multiplied onto the common denominator n_c*N
-      "t_closeness" -> s"""
-        WITH cells AS (SELECT lang, source,
-                         n_chars // $TCloseBucket AS b, count(*)::BIGINT AS c
-                       FROM documents GROUP BY 1, 2, 3),
-        spine AS (SELECT DISTINCT b FROM cells),
-        m AS (SELECT count(*)::BIGINT AS m FROM spine),
-        gtab AS (SELECT b, sum(c)::BIGINT AS g FROM cells GROUP BY 1),
-        tot AS (SELECT sum(g)::BIGINT AS tot FROM gtab),
-        gcdf AS (SELECT b, (sum(g) OVER (ORDER BY b))::BIGINT AS cumg
-                 FROM gtab),
-        cls AS (SELECT lang, source, sum(c)::BIGINT AS n_c
-                FROM cells GROUP BY 1, 2),
-        grid AS (SELECT cl.lang, cl.source, cl.n_c, s.b,
-                   coalesce(ce.c, 0)::BIGINT AS c
-                 FROM cls cl CROSS JOIN spine s
-                 LEFT JOIN cells ce ON ce.lang = cl.lang
-                   AND ce.source = cl.source AND ce.b = s.b),
-        cdf AS (SELECT lang, source, n_c, b,
-                  (sum(c) OVER (PARTITION BY lang, source ORDER BY b))::BIGINT
-                    AS cumc FROM grid),
-        e AS (SELECT c.lang, c.source, max(c.n_c)::BIGINT AS n_c,
-                (CASE WHEN max(m.m) > 1
-                      THEN (1000000::HUGEINT * sum(abs(t.tot::HUGEINT * c.cumc
-                             - c.n_c::HUGEINT * g.cumg)))
-                           // ((max(m.m) - 1)::HUGEINT * max(c.n_c) * max(t.tot))
-                      ELSE 0 END)::BIGINT AS emd_ppm
-              FROM cdf c JOIN gcdf g ON g.b = c.b
-              CROSS JOIN tot t CROSS JOIN m GROUP BY 1, 2)
-        SELECT lang, source, n_c, emd_ppm,
-               emd_ppm > $TClosePpm AS exceeds_t FROM e""",
-      // KS two-sample: ppm-quantized CDFs on the distinct-value grid,
-      // max deviation per language vs the pooled corpus
-      "ks_test" -> """
-        WITH h AS (SELECT lang, n_chars, count(*)::BIGINT AS c
-                   FROM documents GROUP BY 1, 2),
-        vals AS (SELECT DISTINCT n_chars FROM documents),
-        langs AS (SELECT lang, sum(c)::BIGINT AS nl FROM h GROUP BY 1),
-        tot AS (SELECT sum(c)::BIGINT AS n FROM h),
-        g2 AS (SELECT g.lang, g.nl, g.n_chars, coalesce(h.c, 0) AS c
-               FROM (SELECT l.lang, l.nl, v.n_chars
-                     FROM langs l CROSS JOIN vals v) g
-               LEFT JOIN h ON h.lang = g.lang AND h.n_chars = g.n_chars),
-        cl AS (SELECT lang, nl, n_chars,
-                 (sum(c) OVER (PARTITION BY lang ORDER BY n_chars))::BIGINT
-                   AS cum FROM g2),
-        cp AS (SELECT n_chars, (sum(cg) OVER (ORDER BY n_chars))::BIGINT
-                 AS cump FROM
-                 (SELECT n_chars, sum(c) AS cg FROM h GROUP BY 1))
-        SELECT cl.lang, max(cl.nl)::BIGINT AS n_docs,
-               max(abs((1000000*cl.cum) // cl.nl
-                 - (1000000*cp.cump) // t.n))::BIGINT AS d_ppm
-        FROM cl JOIN cp USING (n_chars) CROSS JOIN tot t GROUP BY 1""",
-      "dedup_embedding" -> s"""
-        WITH n AS (SELECT vec_id, embedding,
-                     sqrt(${dot("embedding", "embedding")}) AS nrm
-                   FROM embeddings),
-        p AS (SELECT a.vec_id AS keep_id, b.vec_id AS drop_id,
-                ${dot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos_raw
-              FROM n a JOIN n b ON a.vec_id < b.vec_id)
-        SELECT keep_id, drop_id, round(cos_raw, 4) AS cos
-        FROM p WHERE cos_raw >= 0.4""",
-      "length_percentiles" -> """
-        SELECT lang, count(*) AS n_docs,
-               round(quantile_cont(n_chars, 0.5), 2) AS p50,
-               round(quantile_cont(n_chars, 0.9), 2) AS p90,
-               round(quantile_cont(n_chars, 0.99), 2) AS p99
-        FROM documents GROUP BY lang""",
-      "embedding_centroids" -> """
-        WITH ex AS (SELECT label,
-               unnest(list_transform(range(1, len(embedding) + 1),
-                 i -> {'dim': i, 'v': embedding[i]})) AS u
-             FROM embeddings),
-        g AS (SELECT label, u.dim AS dim, list_sort(list(u.v)) AS vs
-              FROM ex GROUP BY label, u.dim)
-        SELECT label, dim,
-               round(list_aggregate(list_transform(vs, x -> x::DOUBLE), 'sum')
-                     / len(vs), 4) + 0.0 AS centroid
-        FROM g""",
-      "ann_cosine_topk" -> s"""
-        WITH e AS (SELECT vec_id, embedding, sqrt(${dot("embedding", "embedding")}) AS nrm
-                   FROM embeddings),
-        q AS (SELECT vec_id AS q_id, embedding AS qe, nrm AS qn FROM e WHERE vec_id < 5),
-        s AS (SELECT q_id, vec_id, round(${dot("qe", "embedding")} / (qn * nrm), 4) + 0.0 AS cos
-              FROM q, e WHERE vec_id != q_id),
-        rk AS (SELECT q_id, vec_id, cos,
-                 row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rk
-               FROM s)
-        SELECT q_id, vec_id, cos, rk FROM rk WHERE rk <= 8""",
-      "ann_lsh_bucket" -> s"""
-        WITH b AS (SELECT vec_id, embedding,
-                 ${(0 until 4).map(k =>
-                    s"(CASE WHEN embedding[${k + 1}] > embedding[${k + 33}] THEN ${1 << k} ELSE 0 END)")
-                    .mkString(" + ")} AS bucket,
-                 sqrt(${dot("embedding", "embedding")}) AS nrm
-               FROM embeddings),
-        pairs AS (SELECT x.vec_id AS vec_id, x.bucket AS bucket,
-                    y.vec_id AS neighbor_id,
-                    round(${dot("x.embedding", "y.embedding")} / (x.nrm * y.nrm), 4) + 0.0 AS cos
-                  FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id != y.vec_id),
-        rk AS (SELECT vec_id, bucket, neighbor_id, cos,
-                 row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rk
-               FROM pairs)
-        SELECT vec_id, bucket, neighbor_id, cos, rk FROM rk WHERE rk <= 3""",
-    )
+        FROM planted t LEFT JOIN agg a ON a.doc_id = t.doc_id"""
+
+    val langIdSql = s"""
+        WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
+        sc AS (SELECT doc_id, lang, $markerScores FROM toks)
+        SELECT doc_id, ${langs.map(l => s"s_$l").mkString(", ")},
+               $predCase AS pred_lang, lang, ($predCase = lang) AS correct
+        FROM sc"""
+
     val splitH = (0 until 8).map(i =>
       s"(instr('0123456789abcdef', substr(md5('split:' || doc_id::VARCHAR), ${i + 1}, 1)) - 1)::BIGINT * ${1L << (4 * (7 - i))}")
       .mkString(" + ")
@@ -7928,7 +7237,7 @@ object DataOps {
     // fixpoint the Spark label-propagation loop converges to. A local val
     // so cluster_keep_best can nest it verbatim.
     val clusterSql = s"""
-        WITH RECURSIVE pr AS (SELECT doc_a, doc_b FROM (${base("dedup_minhash_lsh")}) q),
+        WITH RECURSIVE pr AS (SELECT doc_a, doc_b FROM ($minhashLshSql) q),
         edges AS (SELECT doc_a AS src, doc_b AS dst FROM pr
                   UNION ALL SELECT doc_b, doc_a FROM pr),
         nodes AS (SELECT DISTINCT src AS doc_id FROM edges),
@@ -7940,13 +7249,13 @@ object DataOps {
         FROM r GROUP BY doc_id"""
     // shared by classifier_infer and the r11 quality_calibration nest
     val classifierSql = s"""
-        WITH x AS (${base("hash_embed")})
+        WITH x AS ($hashEmbedSql)
         SELECT doc_id,
                sum(weight * ((dim * 2654435761) % 1001 - 500))::BIGINT AS logit,
                sum(weight * ((dim * 2654435761) % 1001 - 500)) > 0 AS flagged
         FROM x GROUP BY 1"""
-    // factored for nesting: split_leakage nests the graded split rule
-    // verbatim (the pair set val lives before `base`)
+    // factored for nesting: split_leakage and training_set nest the
+    // graded split rule verbatim
     val splitAssignSql = s"""
         SELECT doc_id, lang, b AS bucket,
                CASE WHEN b < 90 THEN 'train' WHEN b < 95 THEN 'val'
@@ -7987,10 +7296,750 @@ object DataOps {
                row_number() OVER (ORDER BY tf DESC, doc_id) AS rank
         FROM hits WHERE n_terms = ${SearchTerms.length}
         QUALIFY rank <= 20"""
-    base ++ Map(
+    // nested by training_set (and lang_confusion by its streaming face)
+    val cleanCorpusSql = s"""
+        SELECT p.doc_id, p.n_before, p.n_after, p.text_clean,
+               (r.kept AND q.kept AND p.n_after > 0) AS kept
+        FROM ($dedupParagraphsSql) p
+        JOIN ($docRepetitionSql) r ON r.doc_id = p.doc_id
+        JOIN ($docQualitySql) q ON q.doc_id = p.doc_id"""
+
+    val decontaminateSql = """
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        shx AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w) - 1),
+                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
+                FROM toks WHERE len(w) >= 3),
+        ev AS (SELECT DISTINCT s FROM shx WHERE doc_id % 97 = 0),
+        bad AS (SELECT DISTINCT shx.doc_id FROM shx JOIN ev USING (s)
+                WHERE shx.doc_id % 97 != 0)
+        SELECT d.doc_id, d.lang,
+               (d.doc_id IN (SELECT doc_id FROM bad)) AS contaminated
+        FROM documents d WHERE d.doc_id % 97 != 0"""
+
+    val langConfusionSql = s"""
+        WITH li AS ($langIdSql),
+        cm AS (SELECT lang, pred_lang, count(*)::BIGINT AS n_docs
+               FROM li GROUP BY 1, 2),
+        tot AS (SELECT lang, sum(n_docs)::BIGINT AS n_true FROM cm GROUP BY 1)
+        SELECT cm.lang, cm.pred_lang, cm.n_docs,
+               ((1000 * cm.n_docs) // t.n_true)::BIGINT AS share_milli
+        FROM cm JOIN tot t USING (lang)"""
+
+    Seq(
+      QuerySpec("dedup_exact", dedupExact, dedupExactSql),
+      // r13b: MOSS winnowing — one fingerprint (min (hash, pos), packed
+      // into hash*1e6+pos so a plain windowed MIN carries the tie rule)
+      // per window of 5 consecutive 4-gram hashes; graded per doc as the
+      // selected set's (count, sum, min, max, position-sum).
+      QuerySpec("winnowing", winnowing, s"""
+        WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        p AS (SELECT doc_id, w, unnest(generate_series(1, len(w) - 3)) AS i
+              FROM t WHERE len(w) >= 4),
+        g AS (SELECT doc_id, i - 1 AS pos,
+                ${hex8("array_to_string(w[i:i+3], ' ')")} AS hv
+              FROM p),
+        h AS (SELECT doc_id, pos,
+                count(*) OVER (PARTITION BY doc_id) AS ng,
+                min(hv * 1000000 + pos) OVER (PARTITION BY doc_id
+                  ORDER BY pos ROWS BETWEEN CURRENT ROW AND 4 FOLLOWING)
+                  AS key
+              FROM g),
+        d AS (SELECT DISTINCT doc_id, ng, key FROM h WHERE pos <= ng - 5)
+        SELECT doc_id, ng::BIGINT AS n_grams, count(*)::BIGINT AS n_fps,
+               sum(key // 1000000)::BIGINT AS fp_sum,
+               min(key // 1000000)::BIGINT AS fp_min,
+               max(key // 1000000)::BIGINT AS fp_max,
+               sum(key % 1000000)::BIGINT AS pos_sum
+        FROM d GROUP BY doc_id, ng"""),
+      // r13: exact-substring dedup — the oracle materializes every
+      // L-gram STRING and groups (the L× blowup form); the Spark side
+      // runs the prefix-doubling equality classes. Agreement proves the
+      // doubling classes are exact L-gram equality.
+      QuerySpec("substring_dedup", substringDedup, substringDedupSql),
+      // r14: exact-substring decontamination — the L-gram class
+      // relation replayed as materialized gram strings; eval cohort =
+      // doc_id % 97 (the decontaminate cohort), hits counted per
+      // training doc
+      QuerySpec("substring_decontaminate", substringDecontaminate, {
+        val L = SubstringL
+        s"""
+        WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        p AS (SELECT doc_id, w,
+                unnest(generate_series(1, len(w) - ${L - 1})) AS i
+              FROM t WHERE len(w) >= $L),
+        g AS (SELECT doc_id, array_to_string(w[i:i+${L - 1}], ' ') AS gram
+              FROM p),
+        ev AS (SELECT DISTINCT gram FROM g WHERE doc_id % 97 = 0),
+        hits AS (SELECT doc_id, count(*)::BIGINT AS n_eval_grams
+                 FROM g WHERE doc_id % 97 <> 0
+                   AND gram IN (SELECT gram FROM ev)
+                 GROUP BY 1)
+        SELECT d.doc_id, d.lang,
+               coalesce(h.n_eval_grams, 0)::BIGINT AS n_eval_grams,
+               coalesce(h.n_eval_grams, 0) > 0 AS contaminated
+        FROM documents d LEFT JOIN hits h ON h.doc_id = d.doc_id
+        WHERE d.doc_id % 97 <> 0"""
+      }),
+      // r13: keep-one — canonical occurrence per duplicated gram =
+      // first by (doc_id, position), mirrored by rn = 1 per gram
+      QuerySpec("substring_spans_keep_one", substringSpansKeepOne, {
+        val L = SubstringL
+        s"""
+        WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        p AS (SELECT doc_id, w,
+                unnest(generate_series(1, len(w) - ${L - 1})) AS i
+              FROM t WHERE len(w) >= $L),
+        g AS (SELECT doc_id, i AS s, i + ${L - 1} AS e,
+                array_to_string(w[i:i+${L - 1}], ' ') AS gram FROM p),
+        occ AS (SELECT doc_id, s, e,
+                  row_number() OVER (PARTITION BY gram ORDER BY doc_id, s)
+                    AS rn,
+                  count(*) OVER (PARTITION BY gram) AS n
+                FROM g),
+        cov AS (SELECT doc_id, s, e FROM occ WHERE n >= 2 AND rn > 1),
+        m AS (SELECT doc_id, s, e,
+                max(e) OVER (PARTITION BY doc_id ORDER BY s
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS maxe
+              FROM cov),
+        isl AS (SELECT doc_id, s, e,
+                sum(CASE WHEN maxe IS NULL OR s > maxe + 1
+                    THEN 1 ELSE 0 END)
+                  OVER (PARTITION BY doc_id ORDER BY s) AS grp FROM m)
+        SELECT doc_id, min(s)::BIGINT AS span_start,
+               max(e)::BIGINT AS span_end
+        FROM isl GROUP BY doc_id, grp"""
+      }),
+      QuerySpec("int8_codes", quantizeCodes, int8CodesSql),
+      QuerySpec("kmeans_assign", kmeansAssignments, s"""
+        ${kmeansCtes(k = 8, iters = 3, subDim = None)}
+        SELECT vec_id, cluster::INT AS cluster FROM a2"""),
+      // r15: cluster-balanced diversity sample — the final Lloyd
+      // round's distances re-ranked per cluster; the doubles are the
+      // same order-pinned folds kmeans_assign already grades, so the
+      // (dist2, vec_id) rank is engine-exact even though dist2 itself
+      // stays out of the graded columns
+      QuerySpec("diversity_sample", diversitySampleCodes, s"""
+        ${kmeansCtes(k = 8, iters = 3, subDim = None)},
+        win AS (SELECT dd.m, dd.vec_id, dd.cid, dd.d2,
+                  row_number() OVER (PARTITION BY dd.m, dd.vec_id
+                                     ORDER BY dd.d2, dd.cid) AS rn
+                FROM d2 dd),
+        rep AS (SELECT vec_id, cid AS cluster, d2 FROM win WHERE rn = 1),
+        rnk AS (SELECT vec_id, cluster,
+                  (row_number() OVER (PARTITION BY cluster
+                                      ORDER BY d2, vec_id))::BIGINT AS rk
+                FROM rep)
+        SELECT vec_id, cluster::INT AS cluster, rk
+        FROM rnk WHERE rk <= 16"""),
+      QuerySpec("pq_codes", pqCodes, s"""
+        ${kmeansCtes(k = PqK, iters = PqIters, subDim = Some(PqSubDim),
+          trainCap = Some(PqTrainCap))}
+        SELECT vec_id, m::INT AS m, cluster::INT AS code FROM a1"""),
+      // r16: the IVF ANN probe path graded end-to-end — the unrolled
+      // Lloyd chain's LAST round gives each query's centroid distances
+      // (quantizer-consistent: probes rank against the centroids the
+      // inverted lists were filed under), only the IvfProbe nearest
+      // lists are scanned, and the in-list cosine reuses the
+      // ann_cosine_topk fold (rank on the raw double, round after).
+      QuerySpec("ann_ivf", annIvfGraded, s"""
+        ${kmeansCtes(k = IvfK, iters = IvfIters, subDim = None)},
+        pr AS (SELECT q_id, cluster FROM (
+                 SELECT vec_id AS q_id, cid AS cluster,
+                   row_number() OVER (PARTITION BY vec_id
+                                      ORDER BY d2, cid) AS prn
+                 FROM d${IvfIters - 1} WHERE vec_id < 5)
+               WHERE prn <= $IvfProbe),
+        nv AS (SELECT vec_id, embedding,
+                 sqrt(${dot("embedding", "embedding")}) AS nrm
+               FROM embeddings),
+        qv AS (SELECT vec_id AS q_id, embedding AS qe, nrm AS qn
+               FROM nv WHERE vec_id < 5),
+        cand AS (SELECT p.q_id, a.vec_id
+                 FROM pr p JOIN a${IvfIters - 1} a
+                   ON a.cluster = p.cluster AND a.vec_id <> p.q_id),
+        sc AS (SELECT c.q_id, c.vec_id,
+                 ${dot("q.qe", "n.embedding")} / (q.qn * n.nrm) AS cr
+               FROM cand c JOIN qv q ON q.q_id = c.q_id
+               JOIN nv n ON n.vec_id = c.vec_id),
+        rnk AS (SELECT q_id, vec_id, cr,
+                  row_number() OVER (PARTITION BY q_id
+                                     ORDER BY cr DESC, vec_id) AS rk
+                FROM sc)
+        SELECT q_id, vec_id, round(cr, 4) + 0.0 AS cos, rk
+        FROM rnk WHERE rk <= 8"""),
+      // r17 (r16 verdict #7): the PQ/ADC two-stage search graded end to
+      // end. The quantizer chain is the SAME subspaced unrolled-Lloyd
+      // CTE chain pq_codes already grades: d1 IS the exact ADC lookup
+      // table (every vector's per-subspace d² to every c1 centroid) —
+      // filtered to the query batch it is LUT[m][cid]; a1 IS the code
+      // table. ADC distance folds the M lookups in subspace order (the
+      // order-pinned-fold discipline), the shortlist ranks on the raw
+      // double with vec_id ties, and the exact re-rank replays the
+      // dimension-ordered (x-y)² fold on the full vectors. Rounding to
+      // 4 places happens AFTER both ranks (the ann_ivf dialect).
+      QuerySpec("ann_pq", annPq(_, _), s"""
+        ${kmeansCtes(k = PqK, iters = PqIters, subDim = Some(PqSubDim),
+          trainCap = Some(PqTrainCap))},
+        lut AS (SELECT vec_id AS q_id, m, cid, d2
+                FROM d${PqIters - 1} WHERE vec_id < 5),
+        adc AS (SELECT l.q_id, a.vec_id,
+                  list_aggregate(list_transform(
+                    list_sort(list({'m': l.m, 's': l.d2})), x -> x.s),
+                    'sum') AS adc_d2
+                FROM a${PqIters - 1} a
+                JOIN lut l ON l.m = a.m AND l.cid = a.cluster
+                WHERE a.vec_id <> l.q_id
+                GROUP BY l.q_id, a.vec_id),
+        sl AS (SELECT q_id, vec_id, adc_d2 FROM (
+                 SELECT q_id, vec_id, adc_d2,
+                   row_number() OVER (PARTITION BY q_id
+                                      ORDER BY adc_d2, vec_id) AS srn
+                 FROM adc)
+               WHERE srn <= $PqShortlist),
+        fv AS (SELECT vec_id,
+                 list_transform(embedding, x -> x::DOUBLE) AS fe
+               FROM embeddings),
+        rer AS (SELECT s.q_id, s.vec_id, s.adc_d2,
+                  list_aggregate(list_transform(
+                    range(1, len(q.fe) + 1),
+                    i -> (q.fe[i] - x.fe[i]) * (q.fe[i] - x.fe[i])),
+                    'sum') AS d2
+                FROM sl s JOIN fv q ON q.vec_id = s.q_id
+                JOIN fv x ON x.vec_id = s.vec_id),
+        prnk AS (SELECT q_id, vec_id, d2, adc_d2,
+                   row_number() OVER (PARTITION BY q_id
+                                      ORDER BY d2, vec_id) AS rk
+                 FROM rer)
+        SELECT q_id, vec_id, round(d2, 4) AS d2,
+               round(adc_d2, 4) AS adc_d2, rk
+        FROM prnk WHERE rk <= 8"""),
+      // r16: N56's graded face — the post-compaction band table
+      // replayed from the documents table through the shared
+      // minhash-LSH dialect; generation pinned at 1 (bootstrap writes
+      // gen 0, the one compaction publishes 1), so a compaction that
+      // dropped, duplicated, or re-ranked any row — or never swapped
+      // the pointer — hash-mismatches.
+      QuerySpec("index_compaction", indexCompactionGraded, s"""
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
+                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
+                FROM toks WHERE len(w) >= 3),
+        sig AS (SELECT doc_id, $mh FROM shx),
+        bnd AS (SELECT doc_id, $bands FROM sig),
+        bl AS (SELECT doc_id, unnest([$bandStructs]) AS u FROM bnd),
+        gen AS (SELECT doc_id, u.b AS b, u.h AS h,
+                       row_number() OVER (PARTITION BY u.b, u.h
+                                          ORDER BY doc_id) AS rk
+                FROM bl)
+        SELECT doc_id, b::INT AS b, h, rk, 1::BIGINT AS generation
+        FROM gen""", fixture = true),
+      QuerySpec("dedup_minhash_lsh", dedupMinhashLsh, minhashLshSql),
+      // estimator-fidelity face: per LSH candidate pair, agreeing
+      // signature components next to the exact verified Jaccard
+      QuerySpec("minhash_estimate", minhashEstimate, {
+        val matchSum = (0 until MinhashK)
+          .map(j => s"CASE WHEN sa.mh$j = sb.mh$j THEN 1 ELSE 0 END")
+          .mkString(" + ")
+        s"""
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
+                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
+                FROM toks WHERE len(w) >= 3),
+        sig AS (SELECT doc_id, $mh FROM shx),
+        bnd AS (SELECT doc_id, $bands FROM sig),
+        bl AS (SELECT doc_id, unnest([$bandStructs]) AS u FROM bnd),
+        gen AS (SELECT doc_id, u.b AS b, u.h AS h,
+                       row_number() OVER (PARTITION BY u.b, u.h ORDER BY doc_id) AS rk
+                FROM bl),
+        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                 FROM gen a JOIN bl b ON a.b = b.u.b AND a.h = b.u.h
+                  AND a.doc_id < b.doc_id
+                 WHERE a.rk <= $BandBucketCap),
+        m AS (SELECT c.doc_a, c.doc_b, ($matchSum)::BIGINT AS matches
+              FROM cand c JOIN sig sa ON sa.doc_id = c.doc_a
+              JOIN sig sb ON sb.doc_id = c.doc_b),
+        ex AS (SELECT doc_id, unnest(sh) AS s FROM shx),
+        inter AS (SELECT c.doc_a, c.doc_b, count(*) AS i
+                  FROM cand c JOIN ex ea ON ea.doc_id = c.doc_a
+                  JOIN ex eb ON eb.doc_id = c.doc_b AND eb.s = ea.s
+                  GROUP BY 1, 2),
+        sz AS (SELECT doc_id, len(sh) AS n FROM shx)
+        SELECT m.doc_a, m.doc_b, m.matches,
+               ((1000000 * m.matches) // $MinhashK)::BIGINT AS est_ppm,
+               round(coalesce(i.i, 0)::DOUBLE
+                 / (sa.n + sb.n - coalesce(i.i, 0)), 3) AS jaccard
+        FROM m LEFT JOIN inter i ON i.doc_a = m.doc_a AND i.doc_b = m.doc_b
+        JOIN sz sa ON sa.doc_id = m.doc_a
+        JOIN sz sb ON sb.doc_id = m.doc_b"""
+      }),
+      QuerySpec("dedup_incremental", dedupIncremental, s"""
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
+                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
+                FROM toks WHERE len(w) >= 3),
+        sig AS (SELECT doc_id, $mh FROM shx),
+        bnd AS (SELECT doc_id, $bands FROM sig),
+        bl AS (SELECT doc_id, unnest([$bandStructs]) AS u FROM bnd),
+        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                 FROM bl a JOIN bl b ON a.u.b = b.u.b AND a.u.h = b.u.h
+                  AND a.doc_id < b.doc_id
+                 WHERE a.doc_id % 2 = 0 OR b.doc_id % 2 = 0),
+        ex AS (SELECT doc_id, unnest(sh) AS s FROM shx),
+        inter AS (SELECT c.doc_a, c.doc_b, count(*) AS i
+                  FROM cand c JOIN ex ea ON ea.doc_id = c.doc_a
+                  JOIN ex eb ON eb.doc_id = c.doc_b AND eb.s = ea.s
+                  GROUP BY 1, 2),
+        sz AS (SELECT doc_id, len(sh) AS n FROM shx)
+        SELECT i2.doc_a, i2.doc_b,
+               CASE WHEN i2.doc_a % 2 = 0 AND i2.doc_b % 2 = 0
+                    THEN 'new_new' ELSE 'new_hist' END AS pair_type,
+               round(i2.i::DOUBLE / (sa.n + sb.n - i2.i), 3) AS jaccard
+        FROM inter i2 JOIN sz sa ON sa.doc_id = i2.doc_a
+        JOIN sz sb ON sb.doc_id = i2.doc_b
+        WHERE round(i2.i::DOUBLE / (sa.n + sb.n - i2.i), 3) >= 0.8"""),
+      QuerySpec("ngram_jaccard", ngramJaccard, ngramSql("0.5")),
+      // r13: TRUE containment join — same naive postings self-join, the
+      // asymmetric metric; the Spark side's probe/index prefix split is
+      // lossless, so the sets coincide
+      QuerySpec("containment_join", containmentJoin, s"""
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
+                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
+                FROM toks WHERE len(w) >= 3),
+        ex AS (SELECT doc_id, unnest(sh) AS s FROM shx),
+        inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+                    count(*) AS i
+                  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
+                  GROUP BY 1, 2),
+        sz AS (SELECT doc_id, len(sh) AS n FROM shx)
+        SELECT i2.doc_a, i2.doc_b,
+               round(i2.i::DOUBLE / least(sa.n, sb.n), 3) AS containment
+        FROM inter i2 JOIN sz sa ON sa.doc_id = i2.doc_a
+        JOIN sz sb ON sb.doc_id = i2.doc_b
+        WHERE round(i2.i::DOUBLE / least(sa.n, sb.n), 3)
+          >= $ContainmentThreshold"""),
+      QuerySpec("dedup_simhash", dedupSimhash, dedupSimhashSql),
+      QuerySpec("doc_fingerprint", docFingerprint, s"""
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        th AS (SELECT doc_id, unnest(list_transform(range(1, len(w) + 1),
+                 i -> {'i': i, 'hh': md5('fp:' || w[i])})) AS u FROM toks),
+        tb AS (SELECT doc_id, u.i AS i,
+                 (${hd("u.hh", 1)}*4096 + ${hd("u.hh", 2)}*256 + ${hd("u.hh", 3)}*16 + ${hd("u.hh", 4)}) AS h
+               FROM th)
+        SELECT doc_id, (sum(i::BIGINT * h::BIGINT) % 1000003)::BIGINT AS fp
+        FROM tb GROUP BY 1"""),
+      QuerySpec("normalize_text", normalizeText, """
+        WITH noisy AS (SELECT doc_id, text,
+          CASE WHEN doc_id % 3 = 0 THEN chr(8203) || upper(text) || '  ' || chr(9)
+               WHEN doc_id % 3 = 1 THEN regexp_replace(text, 'a', 'a' || chr(769), 'g')
+               ELSE text END AS raw FROM documents),
+        n AS (SELECT doc_id, text,
+          trim(regexp_replace(regexp_replace(lower(nfc_normalize(raw)),
+            '[' || chr(8203) || chr(8204) || chr(8205) || chr(65279) || ']', '', 'g'),
+            '[ ' || chr(9) || chr(10) || chr(13) || chr(12) || ']+', ' ', 'g')) AS norm_text
+          FROM noisy)
+        SELECT doc_id, norm_text, norm_text != text AS changed,
+               length(norm_text) AS n_chars_norm FROM n"""),
+      QuerySpec("dedup_normalized", dedupNormalized, s"""
+        WITH noisy AS (SELECT doc_id,
+          CASE WHEN doc_id % 3 = 0 THEN chr(8203) || upper(text) || '  ' || chr(9)
+               WHEN doc_id % 3 = 1 THEN regexp_replace(text, 'a', 'a' || chr(769), 'g')
+               ELSE text END AS raw FROM documents),
+        nrm AS (SELECT doc_id,
+          trim(regexp_replace(regexp_replace(lower(nfc_normalize(raw)),
+            '[' || chr(8203) || chr(8204) || chr(8205) || chr(65279) || ']', '', 'g'),
+            '[ ' || chr(9) || chr(10) || chr(13) || chr(12) || ']+', ' ', 'g')) AS text
+          FROM noisy),
+        toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM nrm),
+        shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
+                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
+                FROM toks WHERE len(w) >= 3),
+        sig AS (SELECT doc_id, $mh FROM shx),
+        bnd AS (SELECT doc_id, $bands FROM sig),
+        bl AS (SELECT doc_id, unnest([$bandStructs]) AS u FROM bnd),
+        cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+                 FROM bl a JOIN bl b ON a.u.b = b.u.b AND a.u.h = b.u.h
+                  AND a.doc_id < b.doc_id),
+        ex AS (SELECT doc_id, unnest(sh) AS s FROM shx),
+        inter AS (SELECT c.doc_a, c.doc_b, count(*) AS i
+                  FROM cand c JOIN ex ea ON ea.doc_id = c.doc_a
+                  JOIN ex eb ON eb.doc_id = c.doc_b AND eb.s = ea.s
+                  GROUP BY 1, 2),
+        sz AS (SELECT doc_id, len(sh) AS n FROM shx)
+        SELECT i2.doc_a, i2.doc_b,
+               round(i2.i::DOUBLE / (sa.n + sb.n - i2.i), 3) AS jaccard
+        FROM inter i2 JOIN sz sa ON sa.doc_id = i2.doc_a
+        JOIN sz sb ON sb.doc_id = i2.doc_b
+        WHERE round(i2.i::DOUBLE / (sa.n + sb.n - i2.i), 3) >= 0.8"""),
+      QuerySpec("doc_text_stats", docTextStats, """
+        SELECT doc_id, len(w) AS n_tokens, len(list_distinct(w)) AS n_distinct,
+               round(list_aggregate(list_transform(w, t -> length(t)), 'sum')
+                     / len(w)::DOUBLE, 4) AS avg_len,
+               round(len(list_distinct(w)) / len(w)::DOUBLE, 4) AS ttr
+        FROM (SELECT doc_id, string_split(text, ' ') AS w FROM documents)"""),
+      QuerySpec("lang_id", langId, langIdSql),
+      QuerySpec("doc_quality", docQuality, docQualitySql),
+      QuerySpec("token_counts", tokenCounts, """
+        SELECT doc_id, length(text) AS n_chars_text,
+               len(string_split(text, ' ')) AS ws_tokens,
+               len(regexp_extract_all(text, '[a-z]+')) AS re_tokens,
+               list_aggregate(list_transform(string_split(text, ' '),
+                 t -> (length(t) + 3) // 4), 'sum')::BIGINT AS subwords
+        FROM documents"""),
+      // r13: the distributed BPE learner's oracle — all rounds unrolled
+      // as CTE chains (the kmeansCtes discipline), merge application
+      // replayed per round with a list_reduce fold identical to the
+      // Spark-side aggregate fold. An under-2-count winner empties its
+      // best CTE, and the cross join then empties every later round in
+      // both engines — early stop by structure.
+      QuerySpec("bpe_learn", bpeLearn, {
+        val k = BpeLearnRounds
+        val rounds = (0 until k).map { r =>
+          s"""pc$r AS (SELECT p.l AS l, p.r AS r, sum(c)::BIGINT AS cnt
+                 FROM (SELECT c, unnest(list_transform(range(1, len(syms)),
+                        i -> {'l': syms[i], 'r': syms[i + 1]})) AS p
+                       FROM v$r WHERE len(syms) >= 2)
+                 GROUP BY 1, 2 HAVING sum(c) >= 2),
+             best$r AS (SELECT $r::BIGINT AS rank, l, r, l || r AS merged,
+                          cnt
+                        FROM pc$r ORDER BY cnt DESC, l, r LIMIT 1),
+             v${r + 1} AS (SELECT c,
+                 list_reduce(list_transform(syms, s -> [s]),
+                   (acc, x) -> CASE WHEN acc[-1] = b.l AND x[1] = b.r
+                     THEN list_append(list_slice(acc, 1, len(acc) - 1),
+                       b.l || b.r)
+                     ELSE list_append(acc, x[1]) END) AS syms
+               FROM v$r CROSS JOIN best$r b)"""
+        }.mkString(",\n")
+        s"""
+        WITH w AS (SELECT unnest(string_split(text, ' ')) AS word
+                   FROM documents),
+        wc AS (SELECT word, count(*)::BIGINT AS c FROM w
+               WHERE length(word) >= 1 GROUP BY 1),
+        v0 AS (SELECT c, list_transform(range(1, length(word) + 1),
+                 i -> substr(word, i, 1)) AS syms FROM wc),
+        $rounds
+        ${(0 until k).map(r =>
+          s"SELECT rank, l, r, merged, cnt FROM best$r").mkString(" UNION ALL ")}"""
+      }),
+      QuerySpec("bpe_pair_counts", bpePairCounts, """
+        WITH w AS (SELECT unnest(string_split(text, ' ')) AS word FROM documents),
+        wc AS (SELECT word, count(*) AS c FROM w
+               WHERE length(word) >= 2 GROUP BY 1),
+        p0 AS (SELECT word, c, unnest(range(1, length(word)))::INT AS i FROM wc),
+        p AS (SELECT substr(word, i, 2) AS pair, c FROM p0)
+        SELECT pair, sum(c)::BIGINT AS cnt FROM p GROUP BY 1"""),
+      QuerySpec("doc_repetition", docRepetition, docRepetitionSql),
+      QuerySpec("dedup_paragraphs", dedupParagraphs, dedupParagraphsSql),
+      QuerySpec("hash_embed", hashEmbed, hashEmbedSql),
+      QuerySpec("doc_rarity", docRarity, """
+        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
+        vocab AS (SELECT t, count(*) AS tf FROM tok GROUP BY 1)
+        SELECT doc_id, count(*)::BIGINT AS n_tokens, min(tf)::BIGINT AS min_tf,
+               sum(tf)::BIGINT AS sum_tf,
+               round(sum(tf) / count(*)::DOUBLE, 4) AS mean_tf
+        FROM tok JOIN vocab USING (t) GROUP BY 1"""),
+      QuerySpec("dup_windows", dupWindows, s"""
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        wn AS (SELECT doc_id, u.pos AS pos, u.wt AS wt FROM
+                 (SELECT doc_id, unnest(list_transform(range(1, len(w) - ${DupWindowTokens - 2}),
+                    i -> {'pos': i, 'wt': list_aggregate(w[i : i+${DupWindowTokens - 1}],
+                           'string_agg', ' ')})) AS u
+                  FROM toks WHERE len(w) >= $DupWindowTokens)),
+        cnt AS (SELECT wt, count(*) AS c FROM wn GROUP BY 1),
+        per AS (SELECT w2.doc_id, count(*)::BIGINT AS n_windows,
+                  (count(*) FILTER (cnt.c >= 2))::BIGINT AS n_dup
+                FROM wn w2 JOIN cnt ON cnt.wt = w2.wt GROUP BY 1)
+        SELECT doc_id, n_windows, n_dup,
+               ((1000 * n_dup) // n_windows)::BIGINT AS dup_frac_milli,
+               n_dup > 0 AS flagged
+        FROM per"""),
+      QuerySpec("dedup_spans", dedupSpans, s"""
+        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        wn AS (SELECT doc_id, u.pos AS pos, u.wt AS wt FROM
+                 (SELECT doc_id, unnest(list_transform(range(1, len(w) - ${DupWindowTokens - 2}),
+                    i -> {'pos': i, 'wt': list_aggregate(w[i : i+${DupWindowTokens - 1}],
+                           'string_agg', ' ')})) AS u
+                  FROM toks WHERE len(w) >= $DupWindowTokens)),
+        winner AS (SELECT wt, min(doc_id*1000000+pos) AS win, count(*) AS c
+                   FROM wn GROUP BY 1),
+        cover AS (SELECT DISTINCT wn.doc_id, wn.pos + t.u AS i
+                  FROM wn JOIN winner ON winner.wt = wn.wt
+                  CROSS JOIN unnest(range(0, $DupWindowTokens)) AS t(u)
+                  WHERE winner.c >= 2 AND wn.doc_id*1000000 + wn.pos != winner.win),
+        tn AS (SELECT doc_id, u.i AS i, u.tok AS tok FROM
+                 (SELECT doc_id, unnest(list_transform(range(1, len(w)+1),
+                    i -> {'i': i, 'tok': w[i]})) AS u FROM toks)),
+        mk AS (SELECT tn.doc_id, tn.i, tn.tok, (cover.i IS NOT NULL) AS rm
+               FROM tn LEFT JOIN cover ON cover.doc_id = tn.doc_id AND cover.i = tn.i)
+        SELECT doc_id, count(*)::BIGINT AS n_tokens,
+               (count(*) FILTER (rm))::BIGINT AS n_removed,
+               coalesce(string_agg(tok, ' ' ORDER BY i) FILTER (NOT rm), '') AS text_dedup
+        FROM mk GROUP BY 1"""),
+      QuerySpec("url_canonical", urlCanonical, s"""
+        WITH u AS (SELECT doc_id, $urlSynthSql AS url_raw FROM documents),
+        c AS (SELECT doc_id, url_raw, $urlCanonSql AS url_canon FROM u)
+        SELECT doc_id, url_raw, url_canon,
+               regexp_extract(url_canon, '^[a-z]+://([^/:?#]+)', 1) AS host,
+               url_canon != url_raw AS changed
+        FROM c"""),
+      QuerySpec("domain_stats", domainStats, s"""
+        WITH u AS (SELECT doc_id, n_chars, $urlSynthSql AS url_raw FROM documents),
+        c AS (SELECT n_chars, $urlCanonSql AS url_canon FROM u),
+        h AS (SELECT n_chars, url_canon,
+                regexp_extract(url_canon, '^[a-z]+://([^/:?#]+)', 1) AS host FROM c)
+        SELECT host, count(*)::BIGINT AS n_docs,
+               count(DISTINCT url_canon)::BIGINT AS n_pages,
+               round(avg(n_chars), 2) AS avg_chars
+        FROM h GROUP BY 1"""),
+      // Mergeable stats: the oracle aggregates the FULL corpus directly;
+      // the Spark side computes per-half stats and MERGES — hash equality
+      // proves merge == direct cross-engine (exact KMV union property).
+      QuerySpec("stats_merge", statsMerge, s"""
+        WITH s AS (SELECT lang, doc_id, n_chars,
+                     len(string_split(text, ' ')) AS n_tok, md5(text) AS h
+                   FROM documents)
+        SELECT lang, count(*) AS n_docs, sum(n_chars)::BIGINT AS total_chars,
+               sum(n_tok)::BIGINT AS total_tokens,
+               min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id,
+               array_to_string(list_slice(list_sort(list(DISTINCT h)), 1, $StatsKmvK), ',')
+                 AS kmv_sig
+        FROM s GROUP BY lang"""),
+      // Stupid-Backoff trained state: occurrence counts per n-gram order.
+      // range(1, len-n+2) is empty when the doc is shorter than the
+      // order — the same guard as the Spark CASE.
+      QuerySpec("sb_ngram_counts", sbNgramCounts, (1 to SbMaxOrder).map(n => s"""
+        SELECT $n AS n, gram, count(*)::BIGINT AS cnt FROM (
+          SELECT unnest(list_transform(range(1, len(w) - $n + 2),
+                   i -> array_to_string(w[i:i+${n - 1}], ' '))) AS gram
+          FROM (SELECT string_split(text, ' ') AS w FROM documents))
+        GROUP BY 2""").mkString(" UNION ALL ")),
+      // Kneser-Ney continuation counts: distinct-bigram frame, per-word
+      // distinct left/right context counts, ppm-quantized KN unigram
+      QuerySpec("kn_continuation", knContinuation, """
+        WITH sp AS (SELECT DISTINCT string_split(gram, ' ')[1] AS w1,
+                      string_split(gram, ' ')[2] AS w2 FROM (
+            SELECT unnest(list_transform(range(1, len(w)),
+                     i -> w[i] || ' ' || w[i+1])) AS gram
+            FROM (SELECT string_split(text, ' ') AS w FROM documents))),
+        tot AS (SELECT count(*)::BIGINT AS nd FROM sp),
+        l AS (SELECT w2 AS word, count(*)::BIGINT AS left_cont
+              FROM sp GROUP BY 1),
+        r AS (SELECT w1 AS word, count(*)::BIGINT AS right_cont
+              FROM sp GROUP BY 1)
+        SELECT l.word, l.left_cont,
+               coalesce(r.right_cont, 0)::BIGINT AS right_cont,
+               ((1000000 * l.left_cont) // tot.nd)::BIGINT AS p_cont_ppm
+        FROM l LEFT JOIN r ON r.word = l.word CROSS JOIN tot"""),
+      // Gini concentration: sorted-cumulative identity over (lang,
+      // source) cells, ppm-quantized integer div
+      QuerySpec("source_gini", sourceGini, """
+        WITH c AS (SELECT lang, source, count(*)::BIGINT AS c
+                   FROM documents GROUP BY 1, 2),
+        r AS (SELECT lang, c,
+                row_number() OVER (PARTITION BY lang ORDER BY c, source) AS i,
+                count(*) OVER (PARTITION BY lang) AS n,
+                sum(c) OVER (PARTITION BY lang) AS t FROM c)
+        SELECT lang, max(n)::BIGINT AS n_sources, max(t)::BIGINT AS n_docs,
+               ((1000000 * (2*sum(i*c) - (max(n)+1)*max(t)))
+                 // (max(n)*max(t)))::BIGINT AS gini_ppm
+        FROM r GROUP BY 1"""),
+      // Mann-Whitney rank-sum: doubled ranks (2*min_rank + tie_size - 1)
+      // keep tie-averaged ranks integer; u2x = r2x - n(n+1)
+      QuerySpec("rank_sum", rankSumLengths, """
+        WITH rk AS (SELECT lang,
+               2*rank() OVER (ORDER BY n_chars)
+                 + count(*) OVER (PARTITION BY n_chars) - 1 AS dr
+             FROM documents)
+        SELECT lang, count(*)::BIGINT AS n, sum(dr)::BIGINT AS r2x,
+               (sum(dr) - count(*)*(count(*)+1))::BIGINT AS u2x
+        FROM rk GROUP BY 1"""),
+      // Largest-remainder allocation: base floor quotas + remainder-ranked
+      // extra seats summing to exactly AllocK
+      // r15: temperature-mixture allocation — the same floor(sqrt) on
+      // the same BIGINT mass (IEEE sqrt correctly rounded, masses far
+      // below 2^52, so both engines floor the same double), then
+      // largest-remainder apportionment of B = total div 2
+      QuerySpec("temperature_allocation", temperatureAllocation, """
+        WITH m AS (SELECT lang,
+               sum(len(string_split(text, ' ')))::BIGINT AS n
+             FROM documents GROUP BY 1),
+        s AS (SELECT lang, n, floor(sqrt(n::DOUBLE))::BIGINT AS sq FROM m),
+        t AS (SELECT sum(sq)::BIGINT AS ts, sum(n)::BIGINT AS tn,
+                (sum(n) // 2)::BIGINT AS b FROM s),
+        base AS (SELECT lang, n, sq, t.ts, t.tn, t.b,
+                   ((t.b * sq) // t.ts)::BIGINT AS base,
+                   ((t.b * sq) % t.ts)::BIGINT AS rem
+                 FROM s CROSS JOIN t),
+        g AS (SELECT sum(base)::BIGINT AS sb FROM base),
+        r AS (SELECT base.*, row_number() OVER (ORDER BY rem DESC, lang)
+                 AS rk FROM base)
+        SELECT r.lang, r.n AS n_tokens, r.sq,
+               (r.base + CASE WHEN r.rk <= r.b - g.sb THEN 1 ELSE 0 END)
+                 ::BIGINT AS alloc_tokens,
+               ((1000000 * r.n) // r.tn)::BIGINT AS natural_ppm,
+               ((1000000 * (r.base + CASE WHEN r.rk <= r.b - g.sb
+                                     THEN 1 ELSE 0 END)) // r.b)::BIGINT
+                 AS alloc_ppm
+        FROM r CROSS JOIN g"""),
+      QuerySpec("exact_allocation", exactAllocation, s"""
+        WITH c AS (SELECT lang, count(*)::BIGINT AS n
+                   FROM documents GROUP BY 1),
+        t AS (SELECT sum(n)::BIGINT AS tot FROM c),
+        b AS (SELECT lang, n, ($AllocK*n) // tot AS base,
+                ($AllocK*n) % tot AS rem FROM c CROSS JOIN t),
+        s AS (SELECT sum(base)::BIGINT AS sb FROM b),
+        r AS (SELECT lang, n, base, rem,
+                row_number() OVER (ORDER BY rem DESC, lang) AS rk FROM b)
+        SELECT r.lang, r.n AS n_docs, r.base::BIGINT AS base,
+               (CASE WHEN r.rk <= ($AllocK - s.sb) THEN 1 ELSE 0 END)::BIGINT
+                 AS extra,
+               (r.base + CASE WHEN r.rk <= ($AllocK - s.sb) THEN 1 ELSE 0 END)
+                 ::BIGINT AS alloc
+        FROM r CROSS JOIN s"""),
+      // host-graph PageRank: the same fixed iterations the Spark loop
+      // runs, unrolled as chained CTEs (rK from rK-1); pure BIGINT mass
+      // so both engines agree bit-for-bit. The CTE chain is shared with
+      // host_cap_ranked.
+      QuerySpec("host_rank", hostRank,
+        s"""$hostRankCtes
+        SELECT host, rank AS rank_scaled FROM r$HostRankIters"""),
+      // triangle enumeration on the shared factored host graph:
+      // orient low->high, then the two-hop closure join
+      QuerySpec("host_triangles", hostTriangles, s"""$hostGraphCtes,
+        und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
+                FROM edges),
+        tri AS (SELECT e1.a AS h1, e1.b AS h2, e2.b AS h3
+                FROM und e1 JOIN und e2 ON e2.a = e1.b
+                JOIN und e3 ON e3.a = e1.a AND e3.b = e2.b)
+        SELECT h1, h2, h3 FROM tri"""),
+      // all-pairs KS matrix: same quantized-CDF grid, pair join l1 < l2
+      QuerySpec("ks_matrix", ksMatrix, """
+        WITH h AS (SELECT lang, n_chars, count(*)::BIGINT AS c
+                   FROM documents GROUP BY 1, 2),
+        vals AS (SELECT DISTINCT n_chars FROM documents),
+        langs AS (SELECT lang, sum(c)::BIGINT AS nl FROM h GROUP BY 1),
+        g2 AS (SELECT g.lang, g.nl, g.n_chars, coalesce(h.c, 0) AS c
+               FROM (SELECT l.lang, l.nl, v.n_chars
+                     FROM langs l CROSS JOIN vals v) g
+               LEFT JOIN h ON h.lang = g.lang AND h.n_chars = g.n_chars),
+        cl AS (SELECT lang, nl, n_chars,
+                 ((1000000 * sum(c) OVER (PARTITION BY lang
+                    ORDER BY n_chars)) // nl)::BIGINT AS f_ppm FROM g2)
+        SELECT x.lang AS l1, y.lang AS l2, max(x.nl)::BIGINT AS n1,
+               max(y.nl)::BIGINT AS n2,
+               max(abs(x.f_ppm - y.f_ppm))::BIGINT AS d_ppm
+        FROM cl x JOIN cl y
+          ON y.n_chars = x.n_chars AND y.lang > x.lang
+        GROUP BY 1, 2"""),
+      // r13q t-closeness: exact-integer ordered EMD — class CDF vs the
+      // corpus CDF cross-multiplied onto the common denominator n_c*N
+      QuerySpec("t_closeness", tCloseness, s"""
+        WITH cells AS (SELECT lang, source,
+                         n_chars // $TCloseBucket AS b, count(*)::BIGINT AS c
+                       FROM documents GROUP BY 1, 2, 3),
+        spine AS (SELECT DISTINCT b FROM cells),
+        m AS (SELECT count(*)::BIGINT AS m FROM spine),
+        gtab AS (SELECT b, sum(c)::BIGINT AS g FROM cells GROUP BY 1),
+        tot AS (SELECT sum(g)::BIGINT AS tot FROM gtab),
+        gcdf AS (SELECT b, (sum(g) OVER (ORDER BY b))::BIGINT AS cumg
+                 FROM gtab),
+        cls AS (SELECT lang, source, sum(c)::BIGINT AS n_c
+                FROM cells GROUP BY 1, 2),
+        grid AS (SELECT cl.lang, cl.source, cl.n_c, s.b,
+                   coalesce(ce.c, 0)::BIGINT AS c
+                 FROM cls cl CROSS JOIN spine s
+                 LEFT JOIN cells ce ON ce.lang = cl.lang
+                   AND ce.source = cl.source AND ce.b = s.b),
+        cdf AS (SELECT lang, source, n_c, b,
+                  (sum(c) OVER (PARTITION BY lang, source ORDER BY b))::BIGINT
+                    AS cumc FROM grid),
+        e AS (SELECT c.lang, c.source, max(c.n_c)::BIGINT AS n_c,
+                (CASE WHEN max(m.m) > 1
+                      THEN (1000000::HUGEINT * sum(abs(t.tot::HUGEINT * c.cumc
+                             - c.n_c::HUGEINT * g.cumg)))
+                           // ((max(m.m) - 1)::HUGEINT * max(c.n_c) * max(t.tot))
+                      ELSE 0 END)::BIGINT AS emd_ppm
+              FROM cdf c JOIN gcdf g ON g.b = c.b
+              CROSS JOIN tot t CROSS JOIN m GROUP BY 1, 2)
+        SELECT lang, source, n_c, emd_ppm,
+               emd_ppm > $TClosePpm AS exceeds_t FROM e"""),
+      // KS two-sample: ppm-quantized CDFs on the distinct-value grid,
+      // max deviation per language vs the pooled corpus
+      QuerySpec("ks_test", ksTest, """
+        WITH h AS (SELECT lang, n_chars, count(*)::BIGINT AS c
+                   FROM documents GROUP BY 1, 2),
+        vals AS (SELECT DISTINCT n_chars FROM documents),
+        langs AS (SELECT lang, sum(c)::BIGINT AS nl FROM h GROUP BY 1),
+        tot AS (SELECT sum(c)::BIGINT AS n FROM h),
+        g2 AS (SELECT g.lang, g.nl, g.n_chars, coalesce(h.c, 0) AS c
+               FROM (SELECT l.lang, l.nl, v.n_chars
+                     FROM langs l CROSS JOIN vals v) g
+               LEFT JOIN h ON h.lang = g.lang AND h.n_chars = g.n_chars),
+        cl AS (SELECT lang, nl, n_chars,
+                 (sum(c) OVER (PARTITION BY lang ORDER BY n_chars))::BIGINT
+                   AS cum FROM g2),
+        cp AS (SELECT n_chars, (sum(cg) OVER (ORDER BY n_chars))::BIGINT
+                 AS cump FROM
+                 (SELECT n_chars, sum(c) AS cg FROM h GROUP BY 1))
+        SELECT cl.lang, max(cl.nl)::BIGINT AS n_docs,
+               max(abs((1000000*cl.cum) // cl.nl
+                 - (1000000*cp.cump) // t.n))::BIGINT AS d_ppm
+        FROM cl JOIN cp USING (n_chars) CROSS JOIN tot t GROUP BY 1"""),
+      QuerySpec("dedup_embedding", dedupEmbedding, s"""
+        WITH n AS (SELECT vec_id, embedding,
+                     sqrt(${dot("embedding", "embedding")}) AS nrm
+                   FROM embeddings),
+        p AS (SELECT a.vec_id AS keep_id, b.vec_id AS drop_id,
+                ${dot("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cos_raw
+              FROM n a JOIN n b ON a.vec_id < b.vec_id)
+        SELECT keep_id, drop_id, round(cos_raw, 4) AS cos
+        FROM p WHERE cos_raw >= 0.4"""),
+      QuerySpec("length_percentiles", lengthPercentiles, """
+        SELECT lang, count(*) AS n_docs,
+               round(quantile_cont(n_chars, 0.5), 2) AS p50,
+               round(quantile_cont(n_chars, 0.9), 2) AS p90,
+               round(quantile_cont(n_chars, 0.99), 2) AS p99
+        FROM documents GROUP BY lang"""),
+      QuerySpec("embedding_centroids", embeddingCentroids, """
+        WITH ex AS (SELECT label,
+               unnest(list_transform(range(1, len(embedding) + 1),
+                 i -> {'dim': i, 'v': embedding[i]})) AS u
+             FROM embeddings),
+        g AS (SELECT label, u.dim AS dim, list_sort(list(u.v)) AS vs
+              FROM ex GROUP BY label, u.dim)
+        SELECT label, dim,
+               round(list_aggregate(list_transform(vs, x -> x::DOUBLE), 'sum')
+                     / len(vs), 4) + 0.0 AS centroid
+        FROM g"""),
+      QuerySpec("ann_cosine_topk", annCosineTopk, s"""
+        WITH e AS (SELECT vec_id, embedding, sqrt(${dot("embedding", "embedding")}) AS nrm
+                   FROM embeddings),
+        q AS (SELECT vec_id AS q_id, embedding AS qe, nrm AS qn FROM e WHERE vec_id < 5),
+        s AS (SELECT q_id, vec_id, round(${dot("qe", "embedding")} / (qn * nrm), 4) + 0.0 AS cos
+              FROM q, e WHERE vec_id != q_id),
+        rk AS (SELECT q_id, vec_id, cos,
+                 row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rk
+               FROM s)
+        SELECT q_id, vec_id, cos, rk FROM rk WHERE rk <= 8"""),
+      QuerySpec("ann_lsh_bucket", annLshBucket, s"""
+        WITH b AS (SELECT vec_id, embedding,
+                 ${(0 until 4).map(k =>
+                    s"(CASE WHEN embedding[${k + 1}] > embedding[${k + 33}] THEN ${1 << k} ELSE 0 END)")
+                    .mkString(" + ")} AS bucket,
+                 sqrt(${dot("embedding", "embedding")}) AS nrm
+               FROM embeddings),
+        pairs AS (SELECT x.vec_id AS vec_id, x.bucket AS bucket,
+                    y.vec_id AS neighbor_id,
+                    round(${dot("x.embedding", "y.embedding")} / (x.nrm * y.nrm), 4) + 0.0 AS cos
+                  FROM b x JOIN b y ON x.bucket = y.bucket AND x.vec_id != y.vec_id),
+        rk AS (SELECT vec_id, bucket, neighbor_id, cos,
+                 row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, neighbor_id) AS rk
+               FROM pairs)
+        SELECT vec_id, bucket, neighbor_id, cos, rk FROM rk WHERE rk <= 3"""),
       // r13t: chi-squared independence on the ZERO-FILLED grid — absent
       // cells contribute their full (r*c)^2 mass
-      "chi2_independence" -> """
+      QuerySpec("chi2_independence", chi2Independence, """
         WITH cells AS (SELECT lang, source, count(*)::BIGINT AS o
                        FROM documents GROUP BY 1, 2),
         rm AS (SELECT lang, sum(o)::BIGINT AS r FROM cells GROUP BY 1),
@@ -8007,10 +8056,10 @@ object DataOps {
                   * (g.o::HUGEINT * t.nt - g.r::HUGEINT * g.cc)
                   * (g.o::HUGEINT * t.nt - g.r::HUGEINT * g.cc))
                  // (t.nt::HUGEINT * g.r * g.cc))::BIGINT AS contrib_ppm
-        FROM grid g CROSS JOIN tot t""",
+        FROM grid g CROSS JOIN tot t"""),
       // r13s: exact integer second-moment matrix — micro units recovered
       // losslessly from the float column in both engines
-      "embedding_moments" -> """
+      QuerySpec("embedding_moments", embeddingMoments, """
         WITH e AS (SELECT vec_id,
                unnest(list_transform(range(1, len(embedding) + 1),
                  i -> {'i': (i - 1)::BIGINT,
@@ -8022,18 +8071,18 @@ object DataOps {
                sum(a.q * b.q)::BIGINT AS sxy,
                sum(a.q)::BIGINT AS si, sum(b.q)::BIGINT AS sj
         FROM f a JOIN f b ON b.vec_id = a.vec_id AND b.i >= a.i
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
       // r13s: integer Stupid-Backoff doc score — ppm-quantized backoff
       // ratios, alpha = 0.4 folded into the multipliers
-      "sb_doc_score" -> s"""$sbScoreCtes
+      QuerySpec("sb_doc_score", sbDocScore, s"""$sbScoreCtes
         SELECT doc_id, count(*)::BIGINT AS n_tokens,
                sum(score_ppm)::BIGINT AS sum_ppm,
                (sum(score_ppm) // count(*))::BIGINT AS avg_ppm
-        FROM s GROUP BY 1""",
+        FROM s GROUP BY 1"""),
       // r16: CCNet head/middle/tail terciles off the graded SB
       // likelihood — SCORE thresholds from the per-lang histogram (ties
       // share a bucket, CCNet's own rule), all integer
-      "ccnet_buckets" -> s"""$sbScoreCtes,
+      QuerySpec("ccnet_buckets", ccnetBuckets, s"""$sbScoreCtes,
         ds AS (SELECT doc_id, (sum(score_ppm) // count(*))::BIGINT AS avg_ppm
                FROM s GROUP BY 1),
         dl AS (SELECT ds.doc_id, d.lang, ds.avg_ppm
@@ -8053,12 +8102,12 @@ object DataOps {
                CASE WHEN dl.avg_ppm >= th.t_head THEN 'head'
                     WHEN dl.avg_ppm >= th.t_mid THEN 'middle'
                     ELSE 'tail' END AS bucket
-        FROM dl JOIN th USING (lang)""",
+        FROM dl JOIN th USING (lang)"""),
       // r15: DoReMi mixture reweighting — SB loss signal (shared CTEs),
       // per-domain token-weighted excess loss, then the unrolled
       // exponentiated-gradient rounds with largest-remainder ppm
       // renormalization each round; iterate average alongside
-      "doremi_mixture" -> s"""$sbScoreCtes,
+      QuerySpec("doremi_mixture", doremiMixture, s"""$sbScoreCtes,
         sbd AS (SELECT doc_id, count(*)::BIGINT AS n_tokens,
                   sum(score_ppm)::BIGINT AS sum_ppm FROM s GROUP BY 1),
         -- MATERIALIZED: the round CTEs reference their predecessor
@@ -8086,10 +8135,10 @@ object DataOps {
                  FROM traj WHERE round >= 1 GROUP BY 1)
         SELECT t.round, t.lang, t.excess AS excess_ppm,
                t.w AS weight_ppm, a.w_avg AS w_avg_ppm
-        FROM traj t JOIN avgw a USING (lang)""",
+        FROM traj t JOIN avgw a USING (lang)"""),
       // r13r: degree assortativity on the shared factored host graph —
       // symmetrized edges make Pearson's r one exact integer ratio
-      "degree_assortativity" -> s"""$hostGraphCtes,
+      QuerySpec("degree_assortativity", degreeAssortativity, s"""$hostGraphCtes,
         und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
                 FROM edges),
         deg AS (SELECT h, count(*)::BIGINT AS dg FROM
@@ -8107,11 +8156,11 @@ object DataOps {
         SELECT n_edges::BIGINT AS n_edges, num, den,
                (CASE WHEN den > 0 THEN (1000 * num) // den END)::BIGINT
                  AS r_milli
-        FROM f""",
+        FROM f"""),
       // r13r: Spearman quality-vs-length — doubled average ranks on the
       // value-histogram frames, exact HUGEINT moments, IEEE-pinned ratio
-      "spearman_rank" -> s"""
-        WITH q AS (${base("doc_quality")}),
+      QuerySpec("spearman_rank", spearmanRank, s"""
+        WITH q AS ($docQualitySql),
         pairs AS (SELECT q.score_milli AS s, d.n_chars AS l
                   FROM q JOIN documents d ON d.doc_id = q.doc_id
                   WHERE q.score_milli IS NOT NULL),
@@ -8134,11 +8183,11 @@ object DataOps {
                   floor(1000 * num::DOUBLE
                     / sqrt(denx::DOUBLE * deny::DOUBLE))
                 ELSE 0 END)::BIGINT AS rho_milli
-        FROM r""",
+        FROM r"""),
       // r13f: Count-Min registers on the token histogram — 4 rows x 512
       // exact BIGINT counters, estimate = min over rows for the exact
       // top-20 tokens (is_over carries the one-sided guarantee)
-      "cms_topk_est" -> s"""
+      QuerySpec("cms_topk_est", cmsTopkEst, s"""
         WITH t AS (SELECT string_split(text, ' ') AS w FROM documents),
         tk AS (SELECT unnest(w) AS tok FROM t),
         tc AS (SELECT tok, count(*)::BIGINT AS c FROM tk GROUP BY 1),
@@ -8153,11 +8202,11 @@ object DataOps {
         SELECT pr.tok, max(pr.c) AS n_exact, min(regs.reg) AS est,
                min(regs.reg) >= max(pr.c) AS is_over
         FROM pr JOIN regs ON pr.j = regs.j AND pr.b = regs.b
-        GROUP BY 1""",
+        GROUP BY 1"""),
       // r13f: one-permutation-hashing estimates for the graded LSH pair
       // set (nested verbatim) — per-bucket minima of ONE hash, match
       // fraction over jointly-non-empty buckets, integer per-mille
-      "oph_minhash" -> s"""
+      QuerySpec("oph_minhash", ophMinhash, s"""
         WITH pairs AS ($minhashLshSql),
         toks2 AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         shx2 AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
@@ -8176,11 +8225,11 @@ object DataOps {
               GROUP BY 1, 2, 3)
         SELECT doc_a, doc_b, jaccard, n_used, n_match,
                (1000 * n_match) // n_used AS est_milli
-        FROM m""",
+        FROM m"""),
       // r13h: PR operating points — NESTS the graded score and gate
       // rules; the corpus collapses to the score histogram first
-      "pr_curve" -> s"""
-        WITH q AS (${base("doc_quality")}),
+      QuerySpec("pr_curve", prCurve, s"""
+        WITH q AS ($docQualitySql),
         g AS ($gopherGatesSql),
         j AS (SELECT q.doc_id, q.score_milli, g.kept AS label
               FROM q JOIN g ON g.doc_id = q.doc_id
@@ -8199,18 +8248,18 @@ object DataOps {
                   THEN (1000000 * tp) // n_pred END)::BIGINT AS precision_ppm,
                (CASE WHEN n_pos_tot > 0
                   THEN (1000000 * tp) // n_pos_tot END)::BIGINT AS recall_ppm
-        FROM p CROSS JOIN tot""",
+        FROM p CROSS JOIN tot"""),
       // r13h: distinct l-diversity over the (lang, len-bucket) QI with
       // source as the sensitive attribute
-      "l_diversity" -> s"""
+      QuerySpec("l_diversity", lDiversity, s"""
         SELECT lang, n_chars // $LDivLenBucket AS len_bucket,
                count(*)::BIGINT AS n_docs,
                count(DISTINCT source)::BIGINT AS l_distinct,
                count(DISTINCT source) >= $LDiversityL AS diverse
-        FROM documents GROUP BY 1, 2""",
+        FROM documents GROUP BY 1, 2"""),
       // r13h: sorted-neighborhood candidates (cell-local rank windows,
       // the blocked-SNM rule) + the shared exact-Jaccard verification
-      "snm_dedup" -> s"""
+      QuerySpec("snm_dedup", snmDedup, s"""
         WITH k AS (SELECT doc_id, substr(text, 1, $SnmKeyLen) AS k,
                      substr(text, 1, 2) AS cell FROM documents),
         r AS (SELECT doc_id, cell,
@@ -8230,10 +8279,10 @@ object DataOps {
               FROM cand c JOIN shx3 sa ON sa.doc_id = c.doc_a
               JOIN shx3 sb ON sb.doc_id = c.doc_b)
         SELECT doc_a, doc_b, round(i / (nn - i), 3) AS jaccard
-        FROM j WHERE round(i / (nn - i), 3) >= 0.8""",
+        FROM j WHERE round(i / (nn - i), 3) >= 0.8"""),
       // r13h: sorted batching — per-(lang, shard) length-DESC rank,
       // fixed batches of $BatchSize, padding = n*max - sum
-      "bucketed_batching" -> s"""
+      QuerySpec("bucketed_batching", bucketedBatching, s"""
         WITH t AS (SELECT doc_id, lang,
                      len(string_split(text, ' '))::BIGINT AS n_tokens,
                      (doc_id % 32)::BIGINT AS shard FROM documents),
@@ -8243,9 +8292,9 @@ object DataOps {
                count(*)::BIGINT AS n_docs, max(n_tokens) AS max_tokens,
                sum(n_tokens)::BIGINT AS sum_tokens,
                (count(*) * max(n_tokens) - sum(n_tokens))::BIGINT AS padding
-        FROM r GROUP BY 1, 2, 3""",
+        FROM r GROUP BY 1, 2, 3"""),
       // r13h: HHI source concentration, ppm-quantized shares
-      "source_hhi" -> s"""
+      QuerySpec("source_hhi", sourceHhi, s"""
         WITH c AS (SELECT lang, source, count(*)::BIGINT AS c
                    FROM documents GROUP BY 1, 2),
         n AS (SELECT lang, sum(c)::BIGINT AS n_docs,
@@ -8260,10 +8309,10 @@ object DataOps {
         SELECT lang, n_docs, n_sources, hhi_ppm,
                (CASE WHEN hhi_ppm > 0
                   THEN 1000000000 // hhi_ppm END)::BIGINT AS eff_sources_milli
-        FROM h""",
+        FROM h"""),
       // r13l: consistent-hash ring — the Scala-computed ring points
       // interpolated as ONE shared VALUES table
-      "ring_shards" -> {
+      QuerySpec("ring_shards", ringShards, {
         val vals = ringPoints(RingShardsN)
           .map { case (p, s) => s"($p, $s)" }.mkString(", ")
         s"""WITH ring(pos, shard) AS (SELECT * FROM (VALUES $vals)),
@@ -8280,21 +8329,21 @@ object DataOps {
                   min(doc_id)::BIGINT AS min_doc,
                   max(doc_id)::BIGINT AS max_doc
            FROM asg GROUP BY 1"""
-      },
+      }),
       // r13l: ±1 random projection — the Scala-computed sign matrix as
       // a shared VALUES table over the NESTED graded int8 codes
-      "rand_projection" -> {
+      QuerySpec("rand_projection", randProjection, {
         val signVals = (for (k <- 0 until ProjK; d <- 0 until ProjDims)
           yield s"($k, $d, ${ProjSigns(k)(d)})").mkString(", ")
-        s"""WITH codes AS (${base("int8_codes")}),
+        s"""WITH codes AS ($int8CodesSql),
            signs(k, pos, s) AS (SELECT * FROM (VALUES $signVals))
            SELECT c.vec_id, s.k::BIGINT AS k,
                   sum(c.code * s.s)::BIGINT AS proj
            FROM codes c JOIN signs s ON s.pos = c.pos
            GROUP BY 1, 2"""
-      },
+      }),
       // r13j: BFS over the SHARED factored host graph, rounds unrolled
-      "bfs_hosts" -> {
+      QuerySpec("bfs_hosts", bfsHosts, {
         val rounds = (1 to BfsRounds).map { k =>
           s"""d$k AS (SELECT host, min(dist)::BIGINT AS dist FROM (
                SELECT host, dist FROM d${k - 1}
@@ -8308,10 +8357,10 @@ object DataOps {
            $rounds
            SELECT n.host, d.dist
            FROM nodes n LEFT JOIN d$BfsRounds d ON d.host = n.host"""
-      },
+      }),
       // r13: the WHICH-boilerplate face — materialized L-gram strings
       // grouped directly (the blowup form the Spark class ids avoid)
-      "top_dup_substrings" -> s"""
+      QuerySpec("top_dup_substrings", topDupSubstrings, s"""
         WITH t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         p AS (SELECT doc_id, w,
                 unnest(generate_series(1, len(w) - ${SubstringL - 1})) AS i
@@ -8320,11 +8369,11 @@ object DataOps {
                 AS gram FROM p)
         SELECT gram, count(*)::BIGINT AS n_occurrences,
                count(DISTINCT doc_id)::BIGINT AS n_docs
-        FROM g GROUP BY gram HAVING count(*) >= 2""",
+        FROM g GROUP BY gram HAVING count(*) >= 2"""),
       // r13: the curation cut — NESTS the graded substring_dedup SQL;
       // positions kept iff no span covers them, text rebuilt in order
-      "remove_dup_spans" -> s"""
-        WITH sd AS (${base("substring_dedup")}),
+      QuerySpec("remove_dup_spans", removeDupSpans, s"""
+        WITH sd AS ($substringDedupSql),
         t AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         p AS (SELECT doc_id, w, unnest(generate_series(1, len(w))) AS i
               FROM t),
@@ -8337,11 +8386,11 @@ object DataOps {
                 FROM k GROUP BY 1)
         SELECT t.doc_id, coalesce(agg.clean_text, '') AS clean_text,
                (len(t.w) - coalesce(agg.n_kept, 0))::BIGINT AS n_removed
-        FROM t LEFT JOIN agg USING (doc_id)""",
+        FROM t LEFT JOIN agg USING (doc_id)"""),
       // r13: per-doc duplicated-token share — NESTS the graded
       // substring_dedup SQL verbatim (span-rule drift fails both)
-      "substring_dup_fraction" -> s"""
-        WITH sd AS (${base("substring_dedup")}),
+      QuerySpec("substring_dup_fraction", substringDupFraction, s"""
+        WITH sd AS ($substringDedupSql),
         t AS (SELECT doc_id,
                 len(string_split(text, ' '))::BIGINT AS n_tokens
               FROM documents),
@@ -8352,26 +8401,26 @@ object DataOps {
                coalesce(agg.dup_tokens, 0)::BIGINT AS dup_tokens,
                ((1000 * coalesce(agg.dup_tokens, 0)) // t.n_tokens)::BIGINT
                  AS dup_milli
-        FROM t LEFT JOIN agg USING (doc_id)""",
+        FROM t LEFT JOIN agg USING (doc_id)"""),
       // the chunk generators are pure per-row arithmetic in both engines
-      "chunk_documents" -> s"""
+      QuerySpec("chunk_documents", chunkDocuments, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         ch AS (SELECT doc_id, unnest(range(0, ((len(w) - 1) // $ChunkS) + 1)) AS chunk_idx, w
                FROM toks)
         SELECT doc_id, chunk_idx::INT AS chunk_idx,
                len(w[(chunk_idx*$ChunkS + 1):(chunk_idx*$ChunkS + $ChunkW)]) AS n_tokens,
                md5(array_to_string(w[(chunk_idx*$ChunkS + 1):(chunk_idx*$ChunkS + $ChunkW)], ' ')) AS chunk_hash
-        FROM ch""",
+        FROM ch"""),
       // content-defined chunking: window-hash boundaries + running count.
       // cdcSql is parameterized over the (doc_id, text) source so
       // chunk_reuse chunks two crawl versions with the SAME pipeline.
-      "chunk_cdc" -> s"""${cdcSql("SELECT doc_id, text FROM documents")}
+      QuerySpec("chunk_cdc", chunkCdc, s"""${cdcSql("SELECT doc_id, text FROM documents")}
         SELECT doc_id, chunk_idx::BIGINT AS chunk_idx, count(*)::BIGINT AS n_tokens,
                md5(string_agg(tok, ' ' ORDER BY p)) AS chunk_hash
-        FROM cx GROUP BY 1, 2""",
+        FROM cx GROUP BY 1, 2"""),
       // CDC payoff, quantified: distinct chunk hashes the edited (new)
       // version of each changed doc shares with its old version
-      "chunk_reuse" -> s"""
+      QuerySpec("chunk_reuse", chunkReuse, s"""
         WITH oldh AS (
           ${cdcSql(s"""SELECT doc_id, text FROM documents
                        WHERE doc_id % 5 NOT IN (0, 4) AND doc_id % 7 = 3""")}
@@ -8394,28 +8443,28 @@ object DataOps {
                 GROUP BY 1)
         SELECT doc_id, n_new, n_shared,
                ((1000 * n_shared) // n_new)::BIGINT AS reuse_milli
-        FROM agg""",
+        FROM agg"""),
       // recall monitor: ground truth and LSH path nested verbatim
-      "lsh_recall" -> s"""
+      QuerySpec("lsh_recall", lshRecall, s"""
         SELECT exq.doc_a, exq.doc_b, exq.jaccard,
                (lshq.doc_a IS NOT NULL) AS found_by_lsh
         FROM (${ngramSql("0.8")}) exq
-        LEFT JOIN (${base("dedup_minhash_lsh")}) lshq
-          ON lshq.doc_a = exq.doc_a AND lshq.doc_b = exq.doc_b""",
+        LEFT JOIN ($minhashLshSql) lshq
+          ON lshq.doc_a = exq.doc_a AND lshq.doc_b = exq.doc_b"""),
       // SimHash twin of lsh_recall: same exact truth, simhash flag
-      "simhash_recall" -> s"""
+      QuerySpec("simhash_recall", simhashRecall, s"""
         SELECT exq.doc_a, exq.doc_b, exq.jaccard,
                (simq.doc_a IS NOT NULL) AS found_by_simhash
         FROM (${ngramSql("0.8")}) exq
-        LEFT JOIN (${base("dedup_simhash")}) simq
-          ON simq.doc_a = exq.doc_a AND simq.doc_b = exq.doc_b""",
+        LEFT JOIN ($dedupSimhashSql) simq
+          ON simq.doc_a = exq.doc_a AND simq.doc_b = exq.doc_b"""),
       // quality × trust quota: the hostRank CTE chain + doc_quality
       // nested verbatim; the trust tier is an integer comparison on the
       // BIGINT ranks (>= uniform share), so it can never float-flip.
-      "host_cap_ranked" -> s"""$hostRankCtes,
+      QuerySpec("host_cap_ranked", hostCapRanked, s"""$hostRankCtes,
         rk AS (SELECT host, rank AS rank_scaled FROM r$HostRankIters),
         thr AS (SELECT ($HostRankScale // count(*))::BIGINT AS thr FROM rk),
-        q AS (${base("doc_quality")}),
+        q AS ($docQualitySql),
         j AS (SELECT hx.host, hx.doc_id, q.score_milli, rk.rank_scaled,
                 CASE WHEN rk.rank_scaled >= thr.thr
                      THEN $HostCapTrustedK ELSE $HostCapBaseK END AS kq
@@ -8423,25 +8472,25 @@ object DataOps {
         w AS (SELECT *, row_number() OVER (PARTITION BY host
                 ORDER BY score_milli DESC, doc_id) AS rn FROM j)
         SELECT host, doc_id, score_milli, rank_scaled, rn
-        FROM w WHERE rn <= kq""",
+        FROM w WHERE rn <= kq"""),
       // quality-aware representative: both components' SQL nested verbatim
-      "cluster_keep_best" -> s"""
-        WITH cl AS ($clusterSql), q AS (${base("doc_quality")})
+      QuerySpec("cluster_keep_best", clusterKeepBest, s"""
+        WITH cl AS ($clusterSql), q AS ($docQualitySql)
         SELECT cl.doc_id, cl.cluster_rep, q.score_milli,
                (row_number() OVER (PARTITION BY cl.cluster_rep
                                    ORDER BY q.score_milli DESC, cl.doc_id) = 1) AS keeper_best
-        FROM cl JOIN q ON q.doc_id = cl.doc_id""",
-      "stratified_sample" -> s"""
+        FROM cl JOIN q ON q.doc_id = cl.doc_id"""),
+      QuerySpec("stratified_sample", stratifiedSample, s"""
         SELECT lang, doc_id, rn FROM (
           SELECT lang, doc_id,
                  row_number() OVER (PARTITION BY lang
                                     ORDER BY md5(doc_id::VARCHAR), doc_id) AS rn
-          FROM documents) WHERE rn <= $SampleK""",
-      "split_assign" -> splitAssignSql,
+          FROM documents) WHERE rn <= $SampleK"""),
+      QuerySpec("split_assign", splitAssign, splitAssignSql),
       // Priority sampling: same integer quantizations as the Spark side
       // (pkey = h1*1e6 div w, q_milli = w*2^32*1000 div h1), τ as a
       // null-safe aggregate over the (K+1)-th rank.
-      "priority_sample" -> s"""
+      QuerySpec("priority_sample", prioritySample, s"""
         WITH t AS (SELECT doc_id, lang,
                      greatest(1, len(string_split(text, ' ')))::BIGINT AS w
                    FROM documents),
@@ -8455,8 +8504,8 @@ object DataOps {
                 FROM r)
         SELECT doc_id, lang, w AS n_tokens, rn, q_milli,
                greatest(w * 1000, coalesce(tau.tau_milli, 0)) AS est_milli
-        FROM r, tau WHERE rn <= $PrioK""",
-      "pack_sequences" -> s"""
+        FROM r, tau WHERE rn <= $PrioK"""),
+      QuerySpec("pack_sequences", packSequences, s"""
         WITH t AS (SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens,
                      (doc_id % 32)::BIGINT AS shard FROM documents),
         c AS (SELECT doc_id, lang, shard, n_tokens,
@@ -8464,18 +8513,18 @@ object DataOps {
                                     ROWS UNBOUNDED PRECEDING) AS cum
               FROM t)
         SELECT doc_id, lang, shard, n_tokens,
-               ((cum - n_tokens) // $PackBudget)::BIGINT AS bin FROM c""",
-      "keyword_search" -> keywordSearchSql,
-      "inverted_index" -> """
+               ((cum - n_tokens) // $PackBudget)::BIGINT AS bin FROM c"""),
+      QuerySpec("keyword_search", keywordSearch, keywordSearchSql),
+      QuerySpec("inverted_index", invertedIndex, """
         WITH ex AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS term
                     FROM documents)
         SELECT term, count(*) AS df,
                array_to_string(list_sort(list(doc_id))[1:10], ',') AS postings
-        FROM ex GROUP BY term HAVING count(*) >= 100""",
+        FROM ex GROUP BY term HAVING count(*) >= 100"""),
       // The heap aggregate's (score desc, id asc) order IS the window
       // order, so the oracle is the plain window top-k per language with
       // the doc_quality arithmetic nested verbatim.
-      "topk_per_key" -> s"""
+      QuerySpec("topk_per_key", topkPerKey, s"""
         WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
         m AS (SELECT doc_id, lang, len(w) AS n, len(list_distinct(w)) AS nd,
                 list_max(list_transform(list_distinct(w),
@@ -8489,22 +8538,25 @@ object DataOps {
           SELECT lang, doc_id, score_milli,
                  row_number() OVER (PARTITION BY lang
                                     ORDER BY score_milli DESC, doc_id) AS rank
-          FROM s) WHERE rank <= $TopKPerKeyK""",
+          FROM s) WHERE rank <= $TopKPerKeyK"""),
       // The sketch-shortlist provably covers the true top-K (see
       // topkFrequent scaladoc), so the oracle is the plain exact top-K.
-      "topk_frequent" -> s"""
+      QuerySpec("topk_frequent", topkFrequent, s"""
         WITH ex AS (SELECT unnest(string_split(text, ' ')) AS token FROM documents),
         g AS (SELECT token, count(*) AS n FROM ex GROUP BY 1)
         SELECT token, n, row_number() OVER (ORDER BY n DESC, token) AS rank
-        FROM g QUALIFY rank <= $TopkFreqK""",
-      "dedup_cluster" -> clusterSql,
+        FROM g QUALIFY rank <= $TopkFreqK"""),
+      QuerySpec("dedup_cluster", dedupCluster, clusterSql),
+      // dedup_cluster_star computes the SAME fixpoint with a different
+      // loop body — one oracle text serves both by construction
+      QuerySpec("dedup_cluster_star", dedupClusterStar, clusterSql),
       // r15: the persisted-index cluster path — single-append index
       // candidates equal the windowed LSH candidates
       // (ClusterFromIndexSpec), so the oracle is shared verbatim
-      "cluster_from_index" -> clusterSql,
+      QuerySpec("cluster_from_index", clusterFromIndexGraded, clusterSql, fixture = true),
       // r16: soft dedup — 10^6 div cluster size off the shared cluster
       // fixpoint; singletons exactly 10^6
-      "soft_dedup" -> s"""
+      QuerySpec("soft_dedup", softDedupWeights, s"""
         WITH cl AS ($clusterSql),
         sz AS (SELECT cluster_rep, count(*)::BIGINT AS n
                FROM cl GROUP BY 1)
@@ -8514,11 +8566,11 @@ object DataOps {
                (1000000 // coalesce(sz.n, 1))::BIGINT AS weight_ppm
         FROM documents d
         LEFT JOIN cl ON cl.doc_id = d.doc_id
-        LEFT JOIN sz ON sz.cluster_rep = cl.cluster_rep""",
+        LEFT JOIN sz ON sz.cluster_rep = cl.cluster_rep"""),
       // r17 (N249): the sampler face — the soft_dedup weight frame
       // nested verbatim, filtered by the salted md5 ppm draw (the
       // hash_sample_est dialect via hex8)
-      "soft_dedup_sample" -> s"""
+      QuerySpec("soft_dedup_sample", softDedupSample, s"""
         WITH cl AS ($clusterSql),
         sz AS (SELECT cluster_rep, count(*)::BIGINT AS n
                FROM cl GROUP BY 1),
@@ -8532,27 +8584,17 @@ object DataOps {
               LEFT JOIN cl ON cl.doc_id = d.doc_id
               LEFT JOIN sz ON sz.cluster_rep = cl.cluster_rep)
         SELECT doc_id, lang, cluster_rep, cluster_size, weight_ppm, draw_ppm
-        FROM w WHERE draw_ppm < weight_ppm""",
+        FROM w WHERE draw_ppm < weight_ppm"""),
       // dup-family size distribution: the cluster fixpoint nested verbatim
-      "cluster_sizes" -> s"""
+      QuerySpec("cluster_sizes", clusterSizes, s"""
         WITH cl AS ($clusterSql),
         sz AS (SELECT cluster_rep, count(*)::BIGINT AS cluster_size
                FROM cl GROUP BY 1)
         SELECT cluster_size, count(*)::BIGINT AS n_clusters,
                (cluster_size * count(*))::BIGINT AS n_docs
-        FROM sz GROUP BY 1""",
-      "decontaminate" -> """
-        WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        shx AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w) - 1),
-                i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
-                FROM toks WHERE len(w) >= 3),
-        ev AS (SELECT DISTINCT s FROM shx WHERE doc_id % 97 = 0),
-        bad AS (SELECT DISTINCT shx.doc_id FROM shx JOIN ev USING (s)
-                WHERE shx.doc_id % 97 != 0)
-        SELECT d.doc_id, d.lang,
-               (d.doc_id IN (SELECT doc_id FROM bad)) AS contaminated
-        FROM documents d WHERE d.doc_id % 97 != 0""",
-      "redact_pii" -> """
+        FROM sz GROUP BY 1"""),
+      QuerySpec("decontaminate", decontaminate, decontaminateSql),
+      QuerySpec("redact_pii", redactPii, """
         SELECT event_id,
                'contact user' || user_id || '@example.com or +1-555-'
                  || lpad((event_id % 10000)::VARCHAR, 4, '0')
@@ -8564,17 +8606,17 @@ object DataOps {
                  '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>'),
                  '\+[0-9][0-9-]{7,}', '<PHONE>'),
                  'https?://[^ ]+', '<URL>') AS redacted
-        FROM events""",
+        FROM events"""),
       // capstone: the same quality and near-dup queries, nested verbatim
-      "corpus_select" -> s"""
+      QuerySpec("corpus_select", corpusSelect, s"""
         SELECT d.doc_id, d.lang, d.source, d.n_chars
         FROM documents d
-        JOIN (${base("doc_quality")}) q ON q.doc_id = d.doc_id AND q.kept
+        JOIN ($docQualitySql) q ON q.doc_id = d.doc_id AND q.kept
         WHERE d.doc_id NOT IN
-          (SELECT doc_b FROM (${base("dedup_minhash_lsh")}) dd)""",
+          (SELECT doc_b FROM ($minhashLshSql) dd)"""),
       // URL-level dedup over the page-family synthesizer: canonicalize,
       // then exact-dedup on the canonical key (N46 ∘ N1)
-      "dedup_url" -> s"""
+      QuerySpec("dedup_url", dedupUrl, s"""
         WITH u AS (SELECT doc_id,
           CASE doc_id % 4
             WHEN 0 THEN 'HTTP://WWW.src' || ((doc_id // 4) % 20) || '.Example.COM:80/articles/' || (doc_id // 4) || '#frag'
@@ -8585,26 +8627,26 @@ object DataOps {
         c AS (SELECT doc_id, url_raw, $urlCanonSql AS url_canon FROM u)
         SELECT url_canon, min(doc_id) AS rep_doc_id, count(*)::BIGINT AS n_variants,
                count(DISTINCT url_raw)::BIGINT AS n_raw_forms
-        FROM c GROUP BY 1""",
+        FROM c GROUP BY 1"""),
       // the one-row corpus dashboard: every number from the corresponding
       // graded operator's SQL, nested verbatim as a scalar subquery
-      "corpus_report" -> s"""
+      QuerySpec("corpus_report", corpusReport, s"""
         SELECT (SELECT count(*) FROM documents)::BIGINT AS n_docs,
                (SELECT sum(n_chars) FROM documents)::BIGINT AS total_chars,
                (SELECT sum(len(string_split(text, ' '))) FROM documents)::BIGINT AS total_tokens,
                (SELECT count(DISTINCT lang) FROM documents)::BIGINT AS n_langs,
                (SELECT count(DISTINCT source) FROM documents)::BIGINT AS n_sources,
-               (SELECT count(*) FROM (${base("doc_quality")}) q WHERE q.kept)::BIGINT AS quality_kept,
-               (SELECT count(*) FROM (${base("doc_repetition")}) r WHERE r.kept)::BIGINT AS repetition_kept,
-               (SELECT count(*) FROM (${base("dedup_exact")}) e WHERE e.n_docs > 1)::BIGINT AS exact_dup_families,
-               (SELECT coalesce(sum(e.n_docs - 1), 0) FROM (${base("dedup_exact")}) e WHERE e.n_docs > 1)::BIGINT AS exact_dup_docs,
-               (SELECT count(*) FROM (${base("dedup_minhash_lsh")}) p)::BIGINT AS near_dup_pairs""",
+               (SELECT count(*) FROM ($docQualitySql) q WHERE q.kept)::BIGINT AS quality_kept,
+               (SELECT count(*) FROM ($docRepetitionSql) r WHERE r.kept)::BIGINT AS repetition_kept,
+               (SELECT count(*) FROM ($dedupExactSql) e WHERE e.n_docs > 1)::BIGINT AS exact_dup_families,
+               (SELECT coalesce(sum(e.n_docs - 1), 0) FROM ($dedupExactSql) e WHERE e.n_docs > 1)::BIGINT AS exact_dup_docs,
+               (SELECT count(*) FROM ($minhashLshSql) p)::BIGINT AS near_dup_pairs"""),
       // linear inference over the hashed embedding: hash_embed nested
       // verbatim, weights replayed by the same integer formula
-      "classifier_infer" -> classifierSql,
+      QuerySpec("classifier_infer", classifierInfer, classifierSql),
       // crawl-to-crawl diff: both derived crawls and the hash compare
       // replayed verbatim
-      "corpus_diff" -> """
+      QuerySpec("corpus_diff", corpusDiff, """
         WITH old AS (SELECT doc_id, md5(text) AS h_old FROM documents
                      WHERE doc_id % 5 != 4),
         neu AS (SELECT doc_id,
@@ -8616,9 +8658,9 @@ object DataOps {
                     WHEN h_new IS NULL THEN 'removed'
                     WHEN h_old != h_new THEN 'changed'
                     ELSE 'unchanged' END AS status
-        FROM old FULL OUTER JOIN neu USING (doc_id)""",
+        FROM old FULL OUTER JOIN neu USING (doc_id)"""),
       // exact cross-corpus shingle overlap, one-row report
-      "corpus_overlap" -> """
+      QuerySpec("corpus_overlap", corpusOverlap, """
         WITH toks AS (SELECT substring(source, 4)::INT % 2 = 0 AS even,
                              string_split(text, ' ') AS w
                       FROM documents),
@@ -8636,10 +8678,10 @@ object DataOps {
                ((1000 * n_common) // n_sh_b)::BIGINT AS contain_b_milli,
                ((1000 * n_common) // (n_sh_a + n_sh_b - n_common))::BIGINT
                  AS jaccard_milli
-        FROM m""",
+        FROM m"""),
       // DSIR trained state: hashed unigram+bigram occurrence histograms,
       // target (en) vs raw; md5-prefix bucket arithmetic via hd()
-      "dsir_counts" -> s"""
+      QuerySpec("dsir_counts", dsirCounts, s"""
         WITH toks AS (SELECT doc_id, lang = 'en' AS is_target,
                              string_split(text, ' ') AS w
                       FROM documents),
@@ -8655,25 +8697,25 @@ object DataOps {
               FROM h)
         SELECT bucket, (count(*) FILTER (is_target))::BIGINT AS n_target,
                (count(*) FILTER (NOT is_target))::BIGINT AS n_raw
-        FROM b GROUP BY 1""",
+        FROM b GROUP BY 1"""),
       // domain capping: canonical-URL host joined to the quality score
       // (both component SQLs nested verbatim), global per-host top-K
-      "host_cap" -> s"""
+      QuerySpec("host_cap", hostCap, s"""
         WITH u AS (SELECT doc_id, $urlSynthSql AS url_raw FROM documents),
         c AS (SELECT doc_id, $urlCanonSql AS url_canon FROM u),
         h AS (SELECT doc_id,
                 regexp_extract(url_canon, '^[a-z]+://([^/:?#]+)', 1) AS host
               FROM c),
-        q AS (${base("doc_quality")}),
+        q AS ($docQualitySql),
         r AS (SELECT h.host, h.doc_id, q.score_milli,
                 row_number() OVER (PARTITION BY h.host
                                    ORDER BY q.score_milli DESC, h.doc_id) AS rn
               FROM h JOIN q ON q.doc_id = h.doc_id)
-        SELECT host, doc_id, score_milli, rn FROM r WHERE rn <= $HostCapK""",
+        SELECT host, doc_id, score_milli, rn FROM r WHERE rn <= $HostCapK"""),
       // layer-granular token-budget mixture: quality histogram per lang,
       // cumulative layer mass vs the per-mille target, docs join the
       // layer decision
-      "mixture_select" -> s"""
+      QuerySpec("mixture_select", mixtureSelect, s"""
         WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
         m AS (SELECT doc_id, lang, len(w) AS n, len(list_distinct(w)) AS nd,
                 list_max(list_transform(list_distinct(w),
@@ -8695,21 +8737,16 @@ object DataOps {
                   THEN $MixEnMilli ELSE $MixOtherMilli END) AS kept
               FROM cw)
         SELECT s.doc_id, s.lang, s.score_milli, s.n_tokens, k.kept
-        FROM s JOIN k USING (lang, score_milli)""",
+        FROM s JOIN k USING (lang, score_milli)"""),
       // crawl-hygiene capstone: paragraph dedup gated by the repetition
       // and quality filters, all three component SQLs nested verbatim
-      "clean_corpus" -> s"""
-        SELECT p.doc_id, p.n_before, p.n_after, p.text_clean,
-               (r.kept AND q.kept AND p.n_after > 0) AS kept
-        FROM (${base("dedup_paragraphs")}) p
-        JOIN (${base("doc_repetition")}) r ON r.doc_id = p.doc_id
-        JOIN (${base("doc_quality")}) q ON q.doc_id = p.doc_id""",
+      QuerySpec("clean_corpus", cleanCorpus, cleanCorpusSql),
       // r11: per-rule Gopher gate — the quadratic max-run mirror, the
       // same integer per-mille arithmetic as the Spark plan
-      "gopher_gates" -> gopherGatesSql,
+      QuerySpec("gopher_gates", gopherGates, gopherGatesSql),
       // r11: contamination per-mille — decontaminate's shingle dialect,
       // counts instead of a boolean
-      "contamination_score" -> """
+      QuerySpec("contamination_score", contaminationScore, """
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         shx AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w) - 1),
                 i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
@@ -8721,37 +8758,37 @@ object DataOps {
                  // count(*))::BIGINT AS contamination_milli
         FROM shx LEFT JOIN ev ON ev.s = shx.s
         WHERE shx.doc_id % 97 != 0
-        GROUP BY shx.doc_id""",
+        GROUP BY shx.doc_id"""),
       // r11: the full recall monitor restricted to the md5-mod sample —
       // valid because the sampled monitor's rows are a subset of the
       // full monitor's with identical flags (SampledRecallSpec)
-      "lsh_recall_sampled" -> s"""
+      QuerySpec("lsh_recall_sampled", lshRecallSampled(_, _), s"""
         SELECT r.doc_a, r.doc_b, r.jaccard, r.found_by_lsh
         FROM (SELECT exq.doc_a, exq.doc_b, exq.jaccard,
                      (lshq.doc_a IS NOT NULL) AS found_by_lsh
               FROM (${ngramSql("0.8")}) exq
-              LEFT JOIN (${base("dedup_minhash_lsh")}) lshq
+              LEFT JOIN ($minhashLshSql) lshq
                 ON lshq.doc_a = exq.doc_a AND lshq.doc_b = exq.doc_b) r
-        WHERE ${sampSql("r.doc_a")} AND ${sampSql("r.doc_b")}""",
+        WHERE ${sampSql("r.doc_a")} AND ${sampSql("r.doc_b")}"""),
       // r11: the SimHash twin of lsh_recall_sampled — same restriction
       // argument (flag-exact subset of the full monitor)
-      "simhash_recall_sampled" -> s"""
+      QuerySpec("simhash_recall_sampled", simhashRecallSampled(_, _), s"""
         SELECT r.doc_a, r.doc_b, r.jaccard, r.found_by_simhash
         FROM (SELECT exq.doc_a, exq.doc_b, exq.jaccard,
                      (simq.doc_a IS NOT NULL) AS found_by_simhash
               FROM (${ngramSql("0.8")}) exq
-              LEFT JOIN (${base("dedup_simhash")}) simq
+              LEFT JOIN ($dedupSimhashSql) simq
                 ON simq.doc_a = exq.doc_a AND simq.doc_b = exq.doc_b) r
-        WHERE ${sampSql("r.doc_a")} AND ${sampSql("r.doc_b")}""",
+        WHERE ${sampSql("r.doc_a")} AND ${sampSql("r.doc_b")}"""),
       // r11: the naive single-window form the bucketed plan must equal
-      "epoch_shuffle" -> s"""
+      QuerySpec("epoch_shuffle", epochShuffle, s"""
         SELECT doc_id,
                row_number() OVER (ORDER BY md5('$ShuffleSeed' || doc_id), doc_id)
                  ::BIGINT AS shuffle_rank
-        FROM documents""",
+        FROM documents"""),
       // r11: one global cumulative window — the executable spec of the
       // two-phase bucketed cut
-      "token_budget_select" -> s"""
+      QuerySpec("token_budget_select", tokenBudgetSelect, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         m AS (SELECT doc_id, len(w) AS n, len(list_distinct(w)) AS nd,
                 list_max(list_transform(list_distinct(w),
@@ -8765,11 +8802,11 @@ object DataOps {
         SELECT doc_id, score_milli, n_tokens,
                (sum(n_tokens) OVER (ORDER BY score_milli DESC, doc_id)
                  <= (SELECT b FROM b)) AS kept
-        FROM s""",
+        FROM s"""),
       // r11: containment over the SAME banded candidate pool as
       // dedup_minhash_lsh — its CTE chain with the verification metric
       // swapped for i / min(|A|, |B|)
-      "minhash_containment" -> s"""
+      QuerySpec("minhash_containment", minhashContainment, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         shx AS (SELECT doc_id, list_distinct(list_transform(range(1, len(w) - 1),
                 i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS sh
@@ -8794,9 +8831,9 @@ object DataOps {
                round(i2.i::DOUBLE / least(sa.n, sb.n), 3) AS containment
         FROM inter i2 JOIN sz sa ON sa.doc_id = i2.doc_a
         JOIN sz sb ON sb.doc_id = i2.doc_b
-        WHERE round(i2.i::DOUBLE / least(sa.n, sb.n), 3) >= $ContainmentThreshold""",
+        WHERE round(i2.i::DOUBLE / least(sa.n, sb.n), 3) >= $ContainmentThreshold"""),
       // r11: windowed co-occurrence with per-mille PMI ratio
-      "window_cooccurrence" -> s"""
+      QuerySpec("window_cooccurrence", windowCooccurrence, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         px AS (SELECT unnest(flatten(list_transform([1, 2, 3, 4], d ->
                  list_transform(range(1, len(w) - d + 1), i ->
@@ -8813,10 +8850,10 @@ object DataOps {
         FROM pc
         CROSS JOIN n
         JOIN uc ca ON ca.t = split_part(pc.p, ' ', 1)
-        JOIN uc cb ON cb.t = split_part(pc.p, ' ', 2)""",
+        JOIN uc cb ON cb.t = split_part(pc.p, ' ', 2)"""),
       // r11: quality-stratified shuffle — one naive window, stratum
       // first, md5 key inside
-      "curriculum_order" -> s"""
+      QuerySpec("curriculum_order", curriculumOrder, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         m AS (SELECT doc_id, len(w) AS n, len(list_distinct(w)) AS nd,
                 list_max(list_transform(list_distinct(w),
@@ -8830,9 +8867,9 @@ object DataOps {
                row_number() OVER (ORDER BY score_milli // 100 DESC,
                  md5('$CurriculumSeed' || doc_id), doc_id)::BIGINT
                  AS curriculum_rank
-        FROM s""",
+        FROM s"""),
       // r11: who introduced each shingle — linear-cost cross-doc overlap
-      "ngram_novelty" -> """
+      QuerySpec("ngram_novelty", ngramNovelty, """
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         shx AS (SELECT doc_id, unnest(list_distinct(list_transform(range(1, len(w) - 1),
                 i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2]))) AS s
@@ -8844,9 +8881,9 @@ object DataOps {
                ((1000 * sum(CASE WHEN f.first_doc = shx.doc_id THEN 1 ELSE 0 END)::BIGINT)
                  // count(*))::BIGINT AS novelty_milli
         FROM shx JOIN f USING (s)
-        GROUP BY shx.doc_id""",
+        GROUP BY shx.doc_id"""),
       // r11: per-lang subword fertility
-      "tokenizer_fertility" -> """
+      QuerySpec("tokenizer_fertility", tokenizerFertility, """
         WITH t AS (SELECT lang, len(string_split(text, ' '))::BIGINT AS ws,
                      list_aggregate(list_transform(string_split(text, ' '),
                        x -> (length(x) + 3) // 4), 'sum')::BIGINT AS sw
@@ -8855,19 +8892,19 @@ object DataOps {
                sum(sw)::BIGINT AS subwords,
                ((1000 * sum(sw)::BIGINT) // sum(ws)::BIGINT)::BIGINT
                  AS fertility_milli
-        FROM t GROUP BY lang""",
+        FROM t GROUP BY lang"""),
       // r11: 2x2 gate agreement — both component SQLs nested verbatim
-      "quality_calibration" -> s"""
+      QuerySpec("quality_calibration", qualityCalibration, s"""
         SELECT q.kept, c.flagged, count(*)::BIGINT AS n_docs,
                sum(q.score_milli)::BIGINT AS score_sum,
                sum(c.logit)::BIGINT AS logit_sum
-        FROM (${base("doc_quality")}) q
+        FROM ($docQualitySql) q
         JOIN ($classifierSql) c ON c.doc_id = q.doc_id
-        GROUP BY 1, 2""",
+        GROUP BY 1, 2"""),
       // r13: exact integer Mann-Whitney AUC — NESTS the graded quality
       // score and the Gopher gate verbatim; 2*avg_rank = 2*base + cnt + 1
-      "quality_auc" -> s"""
-        WITH q AS (${base("doc_quality")}),
+      QuerySpec("quality_auc", qualityAuc, s"""
+        WITH q AS ($docQualitySql),
         g AS ($gopherGatesSql),
         j AS (SELECT q.doc_id, q.score_milli, g.kept AS label, d.lang
               FROM q JOIN g ON g.doc_id = q.doc_id
@@ -8888,10 +8925,10 @@ object DataOps {
                (CASE WHEN n_pos > 0 AND n_neg > 0
                   THEN ((num2 - n_pos * (n_pos + 1)) * 500000)
                        // (n_pos * n_neg) END)::BIGINT AS auc_micro
-        FROM a""",
+        FROM a"""),
       // r13: cross-split leakage — NESTS the graded pair set and the
       // graded split rule verbatim
-      "split_leakage" -> s"""
+      QuerySpec("split_leakage", splitLeakage, s"""
         WITH pairs AS ($minhashLshSql),
         sp AS ($splitAssignSql),
         j AS (SELECT least(sa.split, sb.split) AS split_a,
@@ -8900,10 +8937,10 @@ object DataOps {
               JOIN sp sb ON sb.doc_id = p.doc_b)
         SELECT split_a, split_b, count(*)::BIGINT AS n_pairs,
                (split_a <> split_b) AS is_leak
-        FROM j GROUP BY 1, 2""",
+        FROM j GROUP BY 1, 2"""),
       // r13: HRW argmax mirrored as a per-doc (score DESC, shard DESC)
       // rank — DESC shard matches Spark's max-struct tie rule
-      "rendezvous_shards" -> {
+      QuerySpec("rendezvous_shards", rendezvousShards, {
         val sh = (0 until RendezvousShards).map { k =>
           val h = (1 to 15).map(i =>
             s"(instr('0123456789abcdef', substr(md5('shard:' || doc_id::VARCHAR || ':$k'), $i, 1)) - 1)::BIGINT * ${java.lang.Long.parseLong("1" + "0" * (15 - i), 16)}")
@@ -8919,11 +8956,11 @@ object DataOps {
         SELECT shard, count(*)::BIGINT AS n_docs,
                min(doc_id)::BIGINT AS min_doc, max(doc_id)::BIGINT AS max_doc
         FROM rk WHERE rn = 1 GROUP BY 1"""
-      },
+      }),
       // r13: integer-quantized reciprocal-rank fusion of the graded
       // lexical ranking (nested verbatim) and the q0 cosine ranking
       // (the ann_cosine_topk dialect, top 20)
-      "rrf_fusion" -> s"""
+      QuerySpec("rrf_fusion", rrfFusion, s"""
         WITH ks AS ($keywordSearchSql),
         e AS (SELECT vec_id, embedding,
                 sqrt(${dot("embedding", "embedding")}) AS nrm
@@ -8946,9 +8983,9 @@ object DataOps {
         SELECT doc_id, lex_rank, sem_rank, rrf_micro,
                row_number() OVER (ORDER BY rrf_micro DESC, doc_id)::BIGINT
                  AS fused_rank
-        FROM f QUALIFY fused_rank <= 20""",
+        FROM f QUALIFY fused_rank <= 20"""),
       // r11: integer-idf TF-IDF top terms
-      "tfidf_topterms" -> s"""
+      QuerySpec("tfidf_topterms", tfidfTopTerms, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         tx AS (SELECT doc_id, unnest(w) AS term FROM toks),
         tfc AS (SELECT doc_id, term, count(*)::BIGINT AS tf FROM tx GROUP BY 1, 2),
@@ -8961,9 +8998,9 @@ object DataOps {
                  row_number() OVER (PARTITION BY doc_id
                                     ORDER BY score DESC, term)::BIGINT AS rk
                FROM sc)
-        SELECT doc_id, term, tf, score, rk FROM rk WHERE rk <= $TfidfTopK""",
+        SELECT doc_id, term, tf, score, rk FROM rk WHERE rk <= $TfidfTopK"""),
       // r11b: positional phrase search — same postings-adjacency join
-      "phrase_search" -> s"""
+      QuerySpec("phrase_search", phraseSearch, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         px AS (SELECT doc_id, unnest(list_transform(range(1, len(w) + 1),
                  p -> {'p': p, 't': w[p]})) AS u FROM toks),
@@ -8971,9 +9008,9 @@ object DataOps {
         SELECT a.doc_id, count(*)::BIGINT AS n_hits, min(a.p)::BIGINT AS first_pos
         FROM pp a JOIN pp b ON b.doc_id = a.doc_id AND b.p = a.p + 1
         WHERE a.t = '$PhraseA' AND b.t = '$PhraseB'
-        GROUP BY a.doc_id""",
+        GROUP BY a.doc_id"""),
       // r11b: Heaps-law vocabulary growth at fixed doc-prefix checkpoints
-      "vocab_growth" -> s"""
+      QuerySpec("vocab_growth", vocabGrowth, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         uni AS (SELECT g, min(doc_id) AS fd
                 FROM (SELECT doc_id, unnest(w) AS g FROM toks) GROUP BY 1),
@@ -8990,9 +9027,9 @@ object DataOps {
         dt AS (SELECT c.ck, count(*)::BIGINT AS vocab_tri
                FROM cks c JOIN tri t2 ON t2.fd < c.ck GROUP BY 1)
         SELECT ck, docs_seen, vocab_uni, vocab_tri
-        FROM dd JOIN du USING (ck) JOIN dt USING (ck)""",
+        FROM dd JOIN du USING (ck) JOIN dt USING (ck)"""),
       // r11b: Zipf head coverage per language
-      "zipf_coverage" -> """
+      QuerySpec("zipf_coverage", zipfCoverage, """
         WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
         cnt AS (SELECT lang, tok, count(*)::BIGINT AS c
                 FROM (SELECT lang, unnest(w) AS tok FROM toks) GROUP BY 1, 2),
@@ -9012,9 +9049,9 @@ object DataOps {
                min(CASE WHEN 1000 * r.cum >= 800 * t.total THEN r.rk END)::BIGINT
                  AS k80
         FROM rkd r JOIN tot t USING (lang)
-        GROUP BY r.lang""",
+        GROUP BY r.lang"""),
       // r11b: distinct-n diversity per language, n in {1, 3}
-      "ngram_diversity" -> """
+      QuerySpec("ngram_diversity", ngramDiversity, """
         WITH toks AS (SELECT doc_id, lang, string_split(text, ' ') AS w FROM documents),
         uni AS (SELECT lang, 1::BIGINT AS n, unnest(w) AS g FROM toks),
         tri AS (SELECT lang, 3::BIGINT AS n,
@@ -9025,9 +9062,9 @@ object DataOps {
         SELECT lang, n, count(*)::BIGINT AS total,
                count(DISTINCT g)::BIGINT AS distinct_g,
                ((1000 * count(DISTINCT g)) // count(*))::BIGINT AS diversity_milli
-        FROM u GROUP BY lang, n""",
+        FROM u GROUP BY lang, n"""),
       // r11b: C4-style blocklist gate
-      "blocklist_filter" -> s"""
+      QuerySpec("blocklist_filter", blocklistFilter, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents)
         SELECT doc_id, len(w)::BIGINT AS n_tokens,
                len(list_filter(w,
@@ -9038,9 +9075,9 @@ object DataOps {
                len(list_filter(w,
                  t -> t IN (${Blocklist.map(b => s"'$b'").mkString(", ")}))) = 0
                  AS kept
-        FROM toks""",
+        FROM toks"""),
       // r11b: shared-prefix template detection per source
-      "boilerplate_prefix" -> s"""
+      QuerySpec("boilerplate_prefix", boilerplatePrefix, s"""
         WITH d AS (SELECT doc_id, source,
                      array_to_string(string_split(text, ' ')[1:$PrefixTokens], ' ')
                        AS pfx
@@ -9049,9 +9086,9 @@ object DataOps {
               FROM d GROUP BY 1, 2)
         SELECT d.doc_id, d.source, md5(d.pfx) AS prefix_hash, g.group_n,
                g.group_n >= $TemplateMin AS templated
-        FROM d JOIN g USING (source, pfx)""",
+        FROM d JOIN g USING (source, pfx)"""),
       // r11b: next-token top-k over bigram counts
-      "next_token_topk" -> s"""
+      QuerySpec("next_token_topk", nextTokenTopk, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         bi AS (SELECT u.ctx AS ctx, u.nxt AS nxt
                FROM (SELECT unnest(list_transform(range(1, len(w)),
@@ -9062,9 +9099,9 @@ object DataOps {
                 row_number() OVER (PARTITION BY ctx
                                    ORDER BY cnt DESC, nxt)::BIGINT AS rk
               FROM c)
-        SELECT ctx, nxt, cnt, rk FROM r WHERE rk <= $NextTopK""",
+        SELECT ctx, nxt, cnt, rk FROM r WHERE rk <= $NextTopK"""),
       // r11c: per-doc top-k integer-scaled TF-IDF terms
-      "tfidf_topk" -> s"""
+      QuerySpec("tfidf_topk", tfidfTopk, s"""
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         tf AS (SELECT doc_id, tok, count(*)::BIGINT AS tf
                FROM (SELECT doc_id, unnest(w) AS tok FROM toks) GROUP BY 1, 2),
@@ -9074,28 +9111,28 @@ object DataOps {
               FROM tf JOIN df USING (tok)),
         r AS (SELECT *, row_number() OVER (PARTITION BY doc_id
                 ORDER BY score DESC, tok)::BIGINT AS rk FROM s)
-        SELECT doc_id, tok, tf, df, score, rk FROM r WHERE rk <= $TfidfK""",
+        SELECT doc_id, tok, tf, df, score, rk FROM r WHERE rk <= $TfidfK"""),
       // r11c: token co-occurrence triangles (a<b<c chain join — the
       // orientation trick is a Spark SCALE device; the triangle SET is
       // orientation-independent, so the oracle uses the naive chain)
-      "token_triangles" -> """
+      QuerySpec("token_triangles", tokenTriangles, """
         WITH dt AS (SELECT doc_id, unnest(list_distinct(string_split(text, ' '))) AS tok
                     FROM documents),
         e AS (SELECT DISTINCT x.tok AS a, y.tok AS b
               FROM dt x JOIN dt y ON x.doc_id = y.doc_id AND x.tok < y.tok)
         SELECT e1.a AS t1, e1.b AS t2, e2.b AS t3
         FROM e e1 JOIN e e2 ON e2.a = e1.b
-                  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b""",
+                  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b"""),
       // r11c: exact global quality deciles — oracle uses the one-window
       // global rank; the Spark side splits it histogram + within-score
-      "quality_deciles" -> s"""
-        WITH q AS (${base("doc_quality")})
+      QuerySpec("quality_deciles", qualityDeciles, s"""
+        WITH q AS ($docQualitySql)
         SELECT doc_id, score_milli,
                ((10 * (row_number() OVER (ORDER BY score_milli, doc_id) - 1))
                  // (SELECT count(*) FROM q))::BIGINT AS decile
-        FROM q""",
+        FROM q"""),
       // r11b: pairwise source-vocabulary Jaccard
-      "source_vocab_jaccard" -> """
+      QuerySpec("source_vocab_jaccard", sourceVocabJaccard, """
         WITH sv AS (SELECT DISTINCT source, unnest(string_split(text, ' ')) AS tok
                     FROM documents),
         vocab AS (SELECT source, count(*)::BIGINT AS v FROM sv GROUP BY 1),
@@ -9109,12 +9146,12 @@ object DataOps {
                ((1000 * i.inter) // (va.v + vb.v - i.inter))::BIGINT
                  AS jaccard_milli
         FROM inter i JOIN vocab va ON va.source = i.src_a
-        JOIN vocab vb ON vb.source = i.src_b""",
+        JOIN vocab vb ON vb.source = i.src_b"""),
       // r12: Pareto skyline on (quality score, token count). The oracle
       // runs the NAIVE O(n²) dominance anti-join the Spark side refuses
       // to — agreement proves the bounded-histogram split is the same
-      // set. Score arithmetic mirrors base("doc_quality") verbatim.
-      "pareto_front" -> """
+      // set. Score arithmetic mirrors docQualitySql verbatim.
+      QuerySpec("pareto_front", paretoFront, """
         WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
         m AS (SELECT doc_id, len(w) AS n, len(list_distinct(w)) AS nd,
                 list_max(list_transform(list_distinct(w),
@@ -9130,28 +9167,23 @@ object DataOps {
         WHERE NOT EXISTS (
           SELECT 1 FROM s b
           WHERE b.score_milli >= a.score_milli AND b.n_tokens >= a.n_tokens
-            AND (b.score_milli > a.score_milli OR b.n_tokens > a.n_tokens))""",
+            AND (b.score_milli > a.score_milli OR b.n_tokens > a.n_tokens))"""),
       // r12: language-ID confusion matrix — nests the graded lang_id SQL
       // verbatim (the qualityCalibration discipline)
-      "lang_confusion" -> s"""
-        WITH li AS (${base("lang_id")}),
-        cm AS (SELECT lang, pred_lang, count(*)::BIGINT AS n_docs
-               FROM li GROUP BY 1, 2),
-        tot AS (SELECT lang, sum(n_docs)::BIGINT AS n_true FROM cm GROUP BY 1)
-        SELECT cm.lang, cm.pred_lang, cm.n_docs,
-               ((1000 * cm.n_docs) // t.n_true)::BIGINT AS share_milli
-        FROM cm JOIN tot t USING (lang)""",
+      QuerySpec("lang_confusion", langConfusion, langConfusionSql),
+      QuerySpec("lang_confusion_stream", StreamingMonitors.langConfusionStream,
+        langConfusionSql, fixture = true),
       // r12: degree histogram of the LSH near-dup candidate graph —
       // nests the graded dedup_minhash_lsh SQL verbatim
-      "dup_degree_hist" -> s"""
-        WITH p AS (${base("dedup_minhash_lsh")}),
+      QuerySpec("dup_degree_hist", dupDegreeHist, s"""
+        WITH p AS ($minhashLshSql),
         d AS (SELECT doc_a AS doc FROM p UNION ALL SELECT doc_b FROM p),
         deg AS (SELECT doc, count(*)::BIGINT AS degree FROM d GROUP BY 1)
-        SELECT degree, count(*)::BIGINT AS n_docs FROM deg GROUP BY 1""",
+        SELECT degree, count(*)::BIGINT AS n_docs FROM deg GROUP BY 1"""),
       // r12: per-language MAD length outliers — the oracle mirrors the
       // histogram-split construction (same lower-median rank), so both
       // engines resolve medians on the identical bounded frame
-      "mad_outliers" -> """
+      QuerySpec("mad_outliers", madOutliers, """
         WITH h AS (SELECT lang, n_chars, count(*)::BIGINT AS c
                    FROM documents GROUP BY 1, 2),
         tot AS (SELECT lang, sum(c)::BIGINT AS n_docs FROM h GROUP BY 1),
@@ -9176,10 +9208,10 @@ object DataOps {
         SELECT t.lang, t.n_docs, med.med_chars, mad.mad_chars,
                coalesce(outl.n_out, 0)::BIGINT AS n_outliers
         FROM tot t JOIN med USING (lang) JOIN mad USING (lang)
-        LEFT JOIN outl USING (lang)""",
+        LEFT JOIN outl USING (lang)"""),
       // r12: lang × source association lift — exact integer per-mille of
       // observed over independence-expected mass
-      "lang_source_lift" -> """
+      QuerySpec("lang_source_lift", langSourceLift, """
         WITH cells AS (SELECT lang, source, count(*)::BIGINT AS n_docs
                        FROM documents GROUP BY 1, 2),
         lt AS (SELECT lang, sum(n_docs)::BIGINT AS n_lang FROM cells GROUP BY 1),
@@ -9190,15 +9222,24 @@ object DataOps {
                ((1000 * c.n_docs * t.n_total) // (lt.n_lang * st.n_source))
                  ::BIGINT AS lift_milli
         FROM cells c JOIN lt USING (lang) JOIN st USING (source)
-        CROSS JOIN tot t""",
+        CROSS JOIN tot t"""),
+      // the full-pipeline capstone nests all three component oracles
+      // verbatim, so semantic drift in ANY stage fails this entry too
+      QuerySpec("training_set", trainingSet, s"""
+      WITH cc AS ($cleanCorpusSql),
+      dc AS ($decontaminateSql),
+      sp AS ($splitAssignSql),
+      keep AS (SELECT cc.doc_id FROM cc JOIN dc ON dc.doc_id = cc.doc_id
+               WHERE cc.kept AND NOT dc.contaminated),
+      toks AS (SELECT d.doc_id, d.lang,
+                 len(string_split(d.text, ' '))::BIGINT AS n_tokens
+               FROM documents d JOIN keep ON keep.doc_id = d.doc_id)
+      SELECT sp.split, t.lang, count(*)::BIGINT AS n_docs,
+             sum(t.n_tokens)::BIGINT AS n_tokens
+      FROM toks t JOIN sp ON sp.doc_id = t.doc_id
+      GROUP BY 1, 2"""),
     )
   }
-
-  /** dedup_cluster_star computes the SAME fixpoint as dedup_cluster with
-    * a different loop body — one oracle text serves both by construction.
-    */
-  val clusterStarOracle: Map[String, String] =
-    Map("dedup_cluster_star" -> oracles("dedup_cluster"))
 
   /** The full-pipeline capstone — what shipping a training set actually
     * produces: hygiene-kept documents ([[cleanCorpus]]) that survive
@@ -9210,7 +9251,7 @@ object DataOps {
     * flag frames are tiny relative to the corpus and the final rollup
     * is one partial-aggregable shuffle on a bounded (split, lang) key.
     * The oracle nests all three component SQLs verbatim
-    * ([[trainingSetOracle]]), so semantic drift in ANY stage fails this
+    * ([[specs]]), so semantic drift in ANY stage fails this
     * entry too — the corpus_select/clean_corpus pattern at full depth.
     */
   def trainingSet(spark: SparkSession, dir: String): DataFrame = {
@@ -9247,22 +9288,4 @@ object DataOps {
       .groupBy(col("split"), col("lang"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("n_tokens"))
   }
-
-  /** Built AFTER [[oracles]] so the three component texts nest verbatim
-    * (the clusterStarOracle pattern).
-    */
-  val trainingSetOracle: Map[String, String] = Map(
-    "training_set" -> s"""
-      WITH cc AS (${oracles("clean_corpus")}),
-      dc AS (${oracles("decontaminate")}),
-      sp AS (${oracles("split_assign")}),
-      keep AS (SELECT cc.doc_id FROM cc JOIN dc ON dc.doc_id = cc.doc_id
-               WHERE cc.kept AND NOT dc.contaminated),
-      toks AS (SELECT d.doc_id, d.lang,
-                 len(string_split(d.text, ' '))::BIGINT AS n_tokens
-               FROM documents d JOIN keep ON keep.doc_id = d.doc_id)
-      SELECT sp.split, t.lang, count(*)::BIGINT AS n_docs,
-             sum(t.n_tokens)::BIGINT AS n_tokens
-      FROM toks t JOIN sp ON sp.doc_id = t.doc_id
-      GROUP BY 1, 2""")
 }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.QuerySpec
 import graft.extract.{HtmlExtract, Sites}
 
 /** Oracle-checked exercise of the HTML extraction layer (P1–P7): render
@@ -85,8 +86,8 @@ object ExtractOps {
       col("Source_name").as("source_name"))
   }
 
-  val oracles: Map[String, String] = Map(
-    "html_extract" -> """
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("html_extract", htmlExtract, """
       WITH sk_el AS (
         SELECT event_id // 40 AS page, event_id,
           '<article><h3 class="c-tease__title">' ||
@@ -164,6 +165,6 @@ object ExtractOps {
           strftime(try_strptime(trim(date_raw), '%B %d, %Y'), '%Y-%m-%d %H:%M:%S') AS pub_time_s,
           'Phocuswire' AS source_name
         FROM pw_raw WHERE title IS NOT NULL AND href IS NOT NULL)
-      SELECT * FROM sk UNION ALL SELECT * FROM pw""",
+      SELECT * FROM sk UNION ALL SELECT * FROM pw"""),
   )
 }

@@ -81,6 +81,17 @@ class FixtureFetcher(pages: Seq[String]) extends PageFetcher {
   }
 }
 
+/** Fixture-directory binding: serves `dir/page-N.html`, a missing file
+  * being the end of the listing (the DSv2 source's `pagesDir` mode).
+  */
+final class DirFetcher(dir: String) extends PageFetcher {
+  override def fetch(page: Int): Option[String] = {
+    val p = java.nio.file.Paths.get(dir, s"page-$page.html")
+    if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p))
+    else None
+  }
+}
+
 /** S1/S2/O1 — the paginated scan with watermark early-stop, the
   * reference's dominant cost optimization (SURVEY.md §4): pagination
   * stops at the first article older than the watermark
@@ -107,30 +118,43 @@ final class PaginatedSource(
 
   /** Fetch pages newest-first until a stop condition, then extract. */
   def load(watermark: Timestamp): DataFrame = {
-    val kept = ArrayBuffer.empty[String]
-    var page = 1
-    var stop = false
-    while (!stop && page <= maxPages) {
-      fetcher.fetch(page) match {
-        case None => stop = true // fetch failure terminates the scan
-        case Some(html) =>
-          val dates = pageDates(spec, html)
-          if (dates.isEmpty) stop = true // empty page terminates the scan
-          else {
-            kept += html
-            // O1: any sub-watermark article ends pagination (strict <:
-            // equal-date articles re-ingest, the deliberate overlap day).
-            if (dates.exists(_.exists(_.before(watermark)))) stop = true
-            page += 1
-          }
-      }
-    }
-    val pages = spark.createDataset(kept.toSeq)(Encoders.STRING).toDF("html")
+    val (kept, _) = scan(fetcher, spec, watermark, 1, maxPages)
+    val pages = spark.createDataset(kept)(Encoders.STRING).toDF("html")
     HtmlExtract.articles(pages, "html", spec)
   }
 }
 
 object PaginatedSource {
+
+  /** O1 — the page loop of both bindings (this batch source and the DSv2
+    * stream): fetch pages `from`, `from + 1`, … up to `maxPages`, keeping
+    * each until a stop condition. A fetch failure or an empty page ends
+    * the scan unkept; a sub-watermark article ends it after its page,
+    * which is kept whole (strict <: equal-date articles re-ingest, the
+    * deliberate overlap day). Returns the kept pages and whether a stop
+    * condition, rather than `maxPages`, ended the scan.
+    */
+  private[source] def scan(fetcher: PageFetcher, spec: SiteSpec,
+                           watermark: Timestamp, from: Int,
+                           maxPages: Int): (Seq[String], Boolean) = {
+    val kept = ArrayBuffer.empty[String]
+    var page = from
+    var stop = false
+    while (!stop && page <= maxPages) {
+      fetcher.fetch(page) match {
+        case None => stop = true
+        case Some(html) =>
+          val dates = pageDates(spec, html)
+          if (dates.isEmpty) stop = true
+          else {
+            kept += html
+            if (dates.exists(_.exists(_.before(watermark)))) stop = true
+            page += 1
+          }
+      }
+    }
+    (kept.toSeq, stop)
+  }
 
   /** Driver-side mirror of the per-site date extraction, used ONLY for
     * the early-stop probe; the authoritative parse is the Column path in

@@ -16,7 +16,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.extract.{SiteSpec, Sites}
-import graft.source.{HttpFetcher, PageFetcher, PaginatedSource}
+import graft.source.{DirFetcher, HttpFetcher, PageFetcher, PaginatedSource}
 
 /** DataSource V2 streaming source for the paginated listing scan
   * (S1/S2/O1 as a real `MicroBatchStream`): one page = one offset, and
@@ -100,11 +100,8 @@ private[v2] class PageMicroBatchStream(options: CaseInsensitiveStringMap)
     * disk NOR requested over the network.
     */
   private val fetcher: PageFetcher =
-    if (pagesDir != null) { page: Int =>
-      val p = java.nio.file.Paths.get(pagesDir, s"page-$page.html")
-      if (java.nio.file.Files.exists(p)) Some(java.nio.file.Files.readString(p))
-      else None
-    } else new HttpFetcher(
+    if (pagesDir != null) new DirFetcher(pagesDir)
+    else new HttpFetcher(
       urlForPage = page => urlTemplate.format(page),
       headers = opt("userAgent").map(ua => Map("User-Agent" -> ua)).getOrElse(Map.empty),
       maxRetries = opt("maxRetries").map(_.toInt).getOrElse(3),
@@ -130,23 +127,13 @@ private[v2] class PageMicroBatchStream(options: CaseInsensitiveStringMap)
   private var probedUpTo = 0
   private var availableNowTarget: Option[Long] = None
 
-  private def fetch(page: Int): Option[String] = fetcher.fetch(page)
-
   /** O1 — probe forward until a stop condition; never look past it. */
-  private def advance(): Unit =
-    while (!stopped && probedUpTo < maxPages) {
-      fetch(probedUpTo + 1) match {
-        case None => stopped = true
-        case Some(html) =>
-          val dates = PaginatedSource.pageDates(site, html)
-          if (dates.isEmpty) stopped = true
-          else {
-            probedUpTo += 1
-            fetched(probedUpTo) = html
-            if (dates.exists(_.exists(_.before(wm)))) stopped = true
-          }
-      }
-    }
+  private def advance(): Unit = if (!stopped) {
+    val (pages, stop) =
+      PaginatedSource.scan(fetcher, site, wm, probedUpTo + 1, maxPages)
+    pages.foreach { html => probedUpTo += 1; fetched(probedUpTo) = html }
+    stopped = stop
+  }
 
   override def initialOffset(): Offset = PageOffset(0L)
 
@@ -180,7 +167,7 @@ private[v2] class PageMicroBatchStream(options: CaseInsensitiveStringMap)
       // over HTTP, like the reference's re-scrape), and a missing page
       // means fixture corruption or a checkpoint/source mismatch —
       // substituting empty html would silently extract zero articles.
-      val html = fetched.getOrElse(p.toInt, fetch(p.toInt).getOrElse(
+      val html = fetched.getOrElse(p.toInt, fetcher.fetch(p.toInt).getOrElse(
         throw new IllegalStateException(
           s"committed page $p missing from " +
             (if (pagesDir != null) pagesDir else urlTemplate))))

@@ -3,30 +3,37 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Driver-contract coverage pins (pure set algebra — no Spark session):
-  * every oracle references a real query, and every query is graded
-  * (has an oracle). A query added without its oracle silently downgrades
-  * to the driver's weaker rows-only check; a typo'd oracle key grades
-  * nothing at all. Both mistakes fail here by name instead.
+/** Entry-contract pins (no Spark session). `queries`, `oracleSql` and
+  * `memoizedFixtureQueries` are views of ONE registry, so a query cannot
+  * lack an oracle nor an oracle a query; what is left to pin is that the
+  * registry refuses a name twice, that no oracle is blank, the fixture
+  * flags, the count floor, and the committed artifacts' coverage.
   */
 class EntryContractSpec extends AnyFunSuite with Matchers {
 
-  test("every oracleSql key names an existing query") {
-    val orphans = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    withClue(s"oracles without a query: ${orphans.toSeq.sorted.mkString(", ")} ") {
-      orphans shouldBe empty
+  test("the registry rejects a query name registered twice") {
+    val q = SparkEntry.registry.head
+    val e = intercept[IllegalArgumentException] {
+      QuerySpec.registry(Seq(q, q.copy(oracleSql = "SELECT 1")))
+    }
+    e.getMessage should include(q.name)
+  }
+
+  test("every registered query carries non-blank oracle SQL") {
+    val blank = SparkEntry.registry.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    withClue(s"queries without an oracle: ${blank.sorted.mkString(", ")} ") {
+      blank shouldBe empty
     }
   }
 
-  test("every query carries an oracle — additions must opt OUT here, not drift") {
-    // intentionally oracle-free entries would be listed here with the
-    // reason; today there are none — every graded query hash-compares
-    val specOnly = Set.empty[String]
-    val ungraded = SparkEntry.queries.keySet
-      .diff(SparkEntry.oracleSql.keySet).diff(specOnly)
-    withClue(s"queries without an oracle: ${ungraded.toSeq.sorted.mkString(", ")} ") {
-      ungraded shouldBe empty
-    }
+  test("exactly the storage-fixture queries are flagged fixture") {
+    SparkEntry.memoizedFixtureQueries shouldBe Set(
+      "time_travel", "csv_quarantine", "cluster_from_index", "index_compaction",
+      "lang_confusion_stream", "hourly_profile_stream",
+      "anomalous_days_stream", "cusum_days_stream", "theil_sen_stream",
+      "mann_kendall_stream",
+      "hll_distinct_stream", "hll_sliding_7d_stream",
+      "quantile_sketch_stream", "weighted_quantile_stream")
   }
 
   test("the surface only grows: the graded-query count floor ratchets") {
@@ -46,13 +53,12 @@ class EntryContractSpec extends AnyFunSuite with Matchers {
     // exists, recorded zero failures, timed a full-surface-sized set,
     // and names only queries that still exist (a renamed/dropped query
     // invalidates the scale record for its row).
-    val path = Seq("BENCH_sf1.json", "/root/repo/BENCH_sf1.json")
-      .map(java.nio.file.Paths.get(_)).find(java.nio.file.Files.exists(_))
+    val path = java.nio.file.Paths.get("BENCH_sf1.json")
     withClue("BENCH_sf1.json missing — run Bench with " +
       "SPARK_GRAFT_SF_DIR=<sf1 dir> (GenTestData writes it): ") {
-      path.isDefined shouldBe true
+      java.nio.file.Files.exists(path) shouldBe true
     }
-    val json = java.nio.file.Files.readString(path.get)
+    val json = java.nio.file.Files.readString(path)
     val timedKeys = """"queries":\s*\{([^}]*)\}""".r
       .findFirstMatchIn(json).map(_.group(1))
       .getOrElse(fail("no queries object in BENCH_sf1.json"))
@@ -81,12 +87,11 @@ class EntryContractSpec extends AnyFunSuite with Matchers {
     // full-surface-sized set. Regenerate with:
     //   sbt "runMain graft.Verify /tmp/verify_sf1 <sf1 dir>"
     //   python3 tools/oracle_check.py /tmp/verify_sf1 <sf1 dir> CORRECTNESS_sf1.json
-    val path = Seq("CORRECTNESS_sf1.json", "/root/repo/CORRECTNESS_sf1.json")
-      .map(java.nio.file.Paths.get(_)).find(java.nio.file.Files.exists(_))
+    val path = java.nio.file.Paths.get("CORRECTNESS_sf1.json")
     withClue("CORRECTNESS_sf1.json missing — run Verify + tools/oracle_check.py at sf1: ") {
-      path.isDefined shouldBe true
+      java.nio.file.Files.exists(path) shouldBe true
     }
-    val json = java.nio.file.Files.readString(path.get)
+    val json = java.nio.file.Files.readString(path)
     def intField(k: String): Int = s""""$k":\\s*(\\d+)""".r
       .findFirstMatchIn(json).map(_.group(1).toInt)
       .getOrElse(fail(s"no $k in CORRECTNESS_sf1.json"))
@@ -118,12 +123,11 @@ class EntryContractSpec extends AnyFunSuite with Matchers {
     // without re-running the audit, or an audit run that failed a
     // query, fails here by name. Regenerate with:
     //   SPARK_GRAFT_EVAL=materialize sbt "runMain graft.Bench"
-    val path = Seq("bench_materialized.json", "/root/repo/bench_materialized.json")
-      .map(java.nio.file.Paths.get(_)).find(java.nio.file.Files.exists(_))
+    val path = java.nio.file.Paths.get("bench_materialized.json")
     withClue("bench_materialized.json missing — run the materialized audit: ") {
-      path.isDefined shouldBe true
+      java.nio.file.Files.exists(path) shouldBe true
     }
-    val json = java.nio.file.Files.readString(path.get)
+    val json = java.nio.file.Files.readString(path)
     // the artifact is one JSON object; the queries map's keys are exactly
     // the successfully-timed queries (failures are excluded from it)
     val timedKeys = """"queries":\s*\{([^}]*)\}""".r

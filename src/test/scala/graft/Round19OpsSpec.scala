@@ -70,12 +70,17 @@ class Round19OpsSpec extends SparkSpec {
   }
 
   test("r20 graduated faces: wired, memoized, subset columns match schema") {
-    val faces = SparkEntry.r20StreamFaces
-    faces.foreach { case (name, (fn, sql)) =>
+    // each face's subset oracle nests its batch sibling's SQL verbatim
+    val batchOf = Map("hll_distinct_stream" -> "hll_distinct",
+      "hll_sliding_7d_stream" -> "hll_sliding_7d",
+      "quantile_sketch_stream" -> "quantile_sketch",
+      "weighted_quantile_stream" -> "weighted_quantile_sketch")
+    val faces = SparkEntry.registry.filter(q => batchOf.contains(q.name))
+    faces.map(_.name).toSet shouldBe batchOf.keySet
+    faces.foreach { case QuerySpec(name, fn, sql, fixture) =>
       withClue(s"$name graded wiring: ") {
-        SparkEntry.queries.keySet should contain(name)
-        SparkEntry.oracleSql(name) shouldBe sql
-        SparkEntry.memoizedFixtureQueries should contain(name)
+        fixture shouldBe true
+        sql should include(SparkEntry.oracleSql(batchOf(name)))
       }
       val df = fn(spark, sf)
       withClue(s"$name: ") { df.count() should be > 0L }
